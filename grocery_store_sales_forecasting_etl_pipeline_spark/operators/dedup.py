@@ -22,6 +22,7 @@ oracles compute the identical signatures in SQL).
 
 from __future__ import annotations
 
+import sys
 from collections.abc import Sequence
 
 import pyspark.sql.functions as F
@@ -29,7 +30,7 @@ from pyspark.sql import Column, DataFrame, Window
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.functions import text as T
 from grocery_store_sales_forecasting_etl_pipeline_spark.operators.sizing import (
-    input_bytes as _input_bytes,
+    plan_bytes as _plan_bytes,
     record_gate as _record_gate,
 )
 
@@ -194,10 +195,6 @@ def _shingle_rows(
 _SHINGLE_MATERIALIZE_MIN_INPUT_BYTES = 32 * 1024 * 1024
 
 
-# _input_bytes moved to operators/sizing.py (r10) — imported at top,
-# shared with other scale-adaptive gates (quantile_bracket_audit).
-
-
 def jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -225,12 +222,8 @@ def jaccard_pairs(
     Recall at threshold is pinned by tests/test_dedup.py.
 
     ``materialize_shingles=None`` auto-gates the shingle checkpoint on
-    the TOTAL on-disk size of ``df``'s leaf input files — correct when
-    ``df`` is a direct scan of the document source (every registered
-    caller). When ``df`` is derived (multi-table join, heavy upstream
-    filter), leaf-file size overestimates the corpus actually exploded
-    and can trigger a premature checkpoint: pass the decision explicitly
-    (True/False) instead of relying on the gate.
+    ``df``'s plan size estimate (``sizing.plan_bytes``); True/False
+    force one shape.
     """
     sh = _shingle_rows(df, id_col, text_col, k, block_cols)
     # join on a 64-bit shingle hash instead of the string: halves the
@@ -260,10 +253,8 @@ def jaccard_pairs(
     # persist(): the plan cache would silently serve a benchmark's
     # second run (BASELINE.md r5).
     if materialize_shingles is None:
-        size = _input_bytes(df)
-        materialize_shingles = (
-            size is not None and size >= _SHINGLE_MATERIALIZE_MIN_INPUT_BYTES
-        )
+        size = _plan_bytes(df)
+        materialize_shingles = size >= _SHINGLE_MATERIALIZE_MIN_INPUT_BYTES
         _record_gate(
             "jaccard_pairs.shingle_checkpoint",
             size,
@@ -334,12 +325,10 @@ def _cap_band_buckets(
     pairs ALL of whose agreeing bands are oversized (those are exactly
     the boilerplate clusters a dedup pipeline handles by exact-dup
     pre-collapse, not pairwise search)."""
-    from grocery_store_sales_forecasting_etl_pipeline_spark.operators.sizing import _LOG
-
-    _LOG.info(
-        "gate banded_join.bucket_cap: max_bucket=%d on (%s)",
-        max_bucket,
-        ", ".join(bucket_cols),
+    print(
+        "spark_graft.sizing: gate banded_join.bucket_cap: "
+        f"max_bucket={max_bucket} on ({', '.join(bucket_cols)})",
+        file=sys.stderr,
     )
     w = Window.partitionBy(*bucket_cols)
     return (

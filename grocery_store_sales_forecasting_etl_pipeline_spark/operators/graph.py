@@ -20,8 +20,6 @@ without ever materializing the hub's neighborhood in one task.
 
 from __future__ import annotations
 
-import os
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
@@ -72,9 +70,9 @@ def _small_star(edges: DataFrame) -> DataFrame:
 # partition holds one node's full symmetrized neighborhood in a single
 # task, so the gate bounds worst-case task state: at the 4M default even
 # a graph-spanning hub is ~4M (u, v, m) longs ≈ 100 MB in one task —
-# safe; beyond it the hub-parallel join shape takes over. Overridable
-# for tests/production sizing (0 forces the join path everywhere).
-_CC_WINDOW_MAX_EDGES = int(os.environ.get("SPARK_GRAFT_CC_WINDOW_MAX_EDGES", "4000000"))
+# safe; beyond it the hub-parallel join shape takes over. Tests
+# monkeypatch it (0 forces the join path everywhere).
+_CC_WINDOW_MAX_EDGES = 4_000_000
 
 
 def _large_star_window(edges: DataFrame) -> DataFrame:

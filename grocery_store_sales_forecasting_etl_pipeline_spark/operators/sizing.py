@@ -1,103 +1,59 @@
-"""Input-size metadata probes for scale-adaptive plan choices.
+"""Plan-size probes for scale-adaptive plan choices.
 
 Some plan shapes have a SCALE-DEPENDENT winner: the same exact result
 can come from a shape that is fastest when the input fits comfortably
 in memory/page cache and from a different shape that is the only one
 that survives a 10-100x scale-up (e.g. jaccard_pairs' shingle
-checkpoint, quantile_bracket_audit's rank-selection path). The gates
-decide from on-disk input file size — free Hadoop FS metadata, no job —
-and every gated site documents its measured crossover A/B in
-BASELINE.md so the threshold is evidence, not folklore.
-
-Caveat shared by all callers: ``input_bytes`` sums the LEAF input files
-of the frame, which equals the relevant corpus only when the frame is a
-direct scan of its source table. For derived frames (multi-table joins,
-heavy upstream filters) pass the decision explicitly instead.
+checkpoint, quantile_bracket_audit's rank-selection path). Every gate
+sizes its frame with ``plan_bytes`` — the optimized plan's size
+estimate, free metadata, no job — and every gated site documents its
+measured crossover A/B in BASELINE.md so the threshold is evidence, not
+folklore. The thresholds were calibrated in on-disk bytes of a bare
+scan, which is exactly what ``plan_bytes`` reports for one.
 """
 
 from __future__ import annotations
 
-import logging
 import os
 import sys
 
 from pyspark.sql import DataFrame, functions as F
 
 __all__ = [
-    "input_bytes",
+    "plan_bytes",
     "record_gate",
     "gated_broadcast",
     "LAST_DECISIONS",
 ]
 
-# One stderr line per gated build (bytes seen + shape chosen) so a
-# mis-sized derived frame shows up in bench output as a visibly wrong
-# decision instead of as a silent slow path (VERDICT r10 #5). The
-# logger gets its own stderr handler (no propagation) so the line
-# appears regardless of the host app's root-logging config.
-class _DynamicStderrHandler(logging.StreamHandler):
-    """Resolve sys.stderr at EMIT time, not import time — so the gate
-    line lands on whatever stderr the host has live (bench subprocess
-    pipes, pytest capture) instead of a stream captured at import."""
-
-    def __init__(self) -> None:
-        super().__init__(sys.stderr)
-
-    @property
-    def stream(self):
-        return sys.stderr
-
-    @stream.setter
-    def stream(self, value):  # StreamHandler.__init__ assigns; ignore
-        pass
-
-
-_LOG = logging.getLogger("spark_graft.sizing")
-if not _LOG.handlers:
-    _h = _DynamicStderrHandler()
-    _h.setFormatter(logging.Formatter("%(name)s: %(message)s"))
-    _LOG.addHandler(_h)
-    _LOG.setLevel(logging.INFO)
-    _LOG.propagate = False
-
 # site -> (bytes_seen, shape_chosen): the latest decision per gated
 # site, queryable by tests and by a post-run bench audit.
-LAST_DECISIONS: dict[str, tuple[int | None, str]] = {}
+LAST_DECISIONS: dict[str, tuple[int, str]] = {}
 
 
-def record_gate(site: str, bytes_seen: int | None, shape: str) -> None:
+def record_gate(site: str, bytes_seen: int, shape: str) -> None:
     """Expose a size-gate decision: remember it in ``LAST_DECISIONS``
-    and emit one stderr log line. Call once per gated build."""
+    and emit one stderr line, so a mis-sized frame shows up in bench
+    output as a visibly wrong decision instead of as a silent slow
+    path. Call once per gated build."""
     LAST_DECISIONS[site] = (bytes_seen, shape)
-    _LOG.info("gate %s: input_bytes=%s -> shape=%s", site, bytes_seen, shape)
+    # sys.stderr resolved per call, so the line lands on whatever stream
+    # the host has live (bench subprocess pipes, pytest capture)
+    print(
+        f"spark_graft.sizing: gate {site}: plan_bytes={bytes_seen} -> shape={shape}",
+        file=sys.stderr,
+    )
 
 
-def input_bytes(df: DataFrame) -> int | None:
-    """Total on-disk bytes of the frame's input files, via the JVM Hadoop
-    FileSystem (metadata-only, works for any configured scheme — local,
-    HDFS, object stores). None when unknowable (non-file source, FS
-    error) — callers fall back to their small-input default."""
-    try:
-        files = df.inputFiles()
-        if not files:
-            return None
-        if all(f.startswith("file:") for f in files):
-            # local scheme: stat directly, no py4j round-trip per file
-            from urllib.parse import unquote, urlparse
-
-            return sum(
-                os.path.getsize(unquote(urlparse(f).path)) for f in files
-            )
-        jvm = df.sparkSession._jvm
-        hconf = df.sparkSession._jsc.hadoopConfiguration()
-        total = 0
-        for f in files:
-            path = jvm.org.apache.hadoop.fs.Path(f)
-            fs = path.getFileSystem(hconf)
-            total += fs.getFileStatus(path).getLen()
-        return total
-    except Exception:  # noqa: BLE001 — sizing is best-effort, never fail a build
-        return None
+def plan_bytes(df: DataFrame) -> int:
+    """Spark's estimate of the frame's size: the optimized plan's
+    ``stats().sizeInBytes`` — the same number the planner uses for its
+    own join choice. Metadata-only (no job). For a bare file scan it is
+    the on-disk bytes of the files read; unlike a leaf-file listing it
+    survives ``localCheckpoint`` (the LogicalRDD keeps its origin's
+    statistics) and follows the frame through projections, filters and
+    joins."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
 # --- size-gated broadcast hint (r12 broadcast audit) -----------------------
@@ -108,46 +64,33 @@ def input_bytes(df: DataFrame) -> int | None:
 # a frame that is 24 KB at sf0.1 but billions of rows at sf1e5 would be
 # collected to the driver and shipped to every executor regardless.
 #
-# ``gated_broadcast`` keeps the hint only while the frame's LEAF input
-# files are small (default 512 MB of on-disk source bytes — guide §3.1:
-# "a few hundred MB is usually fine; multiple GB is asking for driver
-# OOMs"; the broadcast frame is a narrow projection/aggregate of that
-# source, so source bytes are a conservative upper bound). Above the
-# bound the hint is dropped and the planner + AQE choose from ACTUAL
-# runtime sizes — which still yields a broadcast join for genuinely
-# small aggregates (AQE rewrites SMJ->BHJ at stage boundaries) and a
-# sort-merge join for entity-grain frames that outgrew memory.
+# ``gated_broadcast`` keeps the hint only while the frame's plan size
+# estimate is small (512 MB: a few hundred MB broadcasts fine, multiple
+# GB risks driver OOMs). Above the bound the hint is dropped and the
+# planner + AQE choose from ACTUAL runtime sizes — which still yields a
+# broadcast join for genuinely small aggregates (AQE rewrites SMJ->BHJ
+# at stage boundaries) and a sort-merge join for entity-grain frames
+# that outgrew memory.
 #
 # Results are identical either way (join strategy never changes rows);
-# only the physical plan is scale-adaptive. Local bench plans are
-# byte-identical to the pre-gate plans because every sf0.1 input is
-# under 11 MB. Set SPARK_GRAFT_BCAST_INPUT_MAX=0 to force the no-hint
-# path (used to capture the demoted plan shape as evidence).
-_BCAST_INPUT_MAX = int(
-    os.environ.get("SPARK_GRAFT_BCAST_INPUT_MAX", str(512 * 1024 * 1024))
-)
+# only the physical plan is scale-adaptive. Tests monkeypatch the bound
+# (0 forces the no-hint path everywhere).
+_BCAST_INPUT_MAX = 512 * 1024 * 1024
 
 
-def gated_broadcast(df: DataFrame, source: DataFrame | None = None) -> DataFrame:
-    """``F.broadcast(df)`` while df's leaf input bytes stay under
-    ``SPARK_GRAFT_BCAST_INPUT_MAX``; the bare frame (planner + AQE
-    decide) above it. Drop-in replacement for ``F.broadcast`` at call
-    sites whose frame grain scales with the data (the broadcast-audit
-    "gate" class); fixed-grain dims keep the unconditional hint.
-
-    ``source``: size from this frame instead of ``df`` — required when
-    ``df``'s lineage passes a ``localCheckpoint`` (the plan bottoms at
-    LogicalRDD, ``inputFiles()`` is empty, and the gate would silently
-    keep the hint at every scale); pass the base-table frame the
-    checkpointed intermediate derives from."""
-    size = input_bytes(source if source is not None else df)
-    if size is None or size <= _BCAST_INPUT_MAX:
-        return F.broadcast(df)
-    # demotion is the rare, scale-up-only path: make it visible
+def gated_broadcast(df: DataFrame) -> DataFrame:
+    """``F.broadcast(df)`` while df's ``plan_bytes`` stay under
+    ``_BCAST_INPUT_MAX``; the bare frame (planner + AQE decide) above
+    it. Drop-in replacement for ``F.broadcast`` at call sites whose
+    frame grain scales with the data (the broadcast-audit "gate"
+    class); fixed-grain dims keep the unconditional hint. Every
+    decision is recorded under the calling site."""
+    size = plan_bytes(df)
+    keep = size <= _BCAST_INPUT_MAX
     frame = sys._getframe(1)
     record_gate(
         f"gated_broadcast@{os.path.basename(frame.f_code.co_filename)}:{frame.f_lineno}",
         size,
-        "no-hint(AQE)",
+        "broadcast" if keep else "no-hint(AQE)",
     )
-    return df
+    return F.broadcast(df) if keep else df

@@ -20,7 +20,7 @@ from grocery_store_sales_forecasting_etl_pipeline_spark.functions.layout import 
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans._tables import table as _t
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.registry import register
 from grocery_store_sales_forecasting_etl_pipeline_spark.operators.sizing import (
-    input_bytes,
+    plan_bytes,
     record_gate,
 )
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.scalerank import (
@@ -550,17 +550,16 @@ def quantile_bracket_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     only starts REDUCING once row count outgrows the bounded cents
     domain — measured A/B (BASELINE.md r10): sort shape 1.6/6.4/61.2s
     at sf0.1/sf1/sf10 vs histogram shape 4.4/11.2/10.2s — so the
-    builder gates on input size (sizing.input_bytes, threshold 512 MB
-    between the 106 MB sf1 sort win and the 1.07 GB sf10 histogram
-    6× win). Both shapes produce identical integers (same parity
-    contract, same oracle).
+    builder gates on input size (threshold 512 MB between the 106 MB
+    sf1 sort win and the 1.07 GB sf10 histogram 6× win). Both shapes
+    produce identical integers (same parity contract, same oracle).
     """
     li = _t(spark, sf_dir, "lineitem")
     cents = F.round(F.col("l_extendedprice") * 100).cast("long")
     v = li.select(F.col("l_returnflag"), cents.alias("cents"))
 
-    size = input_bytes(li)
-    small = size is None or size < _QUANTILE_HISTO_MIN_INPUT_BYTES
+    size = plan_bytes(li)
+    small = size < _QUANTILE_HISTO_MIN_INPUT_BYTES
     record_gate(
         "quantile_bracket_audit", size, "per_flag_sort" if small else "histogram"
     )

@@ -155,7 +155,7 @@ def bloom_filter_join_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     perkey = (
         probe.join(hits, "k", "left")
         .join(
-            _gbcast(build.select("k", F.lit(1).alias("is_true")), source=o), "k", "left"
+            _gbcast(build.select("k", F.lit(1).alias("is_true"))), "k", "left"
         )
         .select(
             F.when(F.col("n_hit") == _BLOOM_K, 1).otherwise(0).alias("passed"),
@@ -303,7 +303,7 @@ def kmv_jaccard_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n_a = a.agg(F.count("*").cast("long").alias("n_a"))
     n_b = b.agg(F.count("*").cast("long").alias("n_b"))
-    n_i = a.join(_gbcast(b, source=o), "k", "left_semi").agg(
+    n_i = a.join(_gbcast(b), "k", "left_semi").agg(
         F.count("*").cast("long").alias("n_intersect")
     )
     s = n_a.crossJoin(F.broadcast(n_b)).crossJoin(F.broadcast(n_i)).crossJoin(

@@ -104,7 +104,7 @@ def cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     sizes = cohorts.groupBy("cw").agg(F.count("*").cast("long").alias("cohort_users"))
     purch = (
         e.filter(F.col("event_type") == "purchase")
-        .join(_gbcast(cohorts, source=e), "user_id")
+        .join(_gbcast(cohorts), "user_id")
         .groupBy(
             "cw",
             (F.datediff(monday(F.col("ts").cast("date")), F.col("cw")) / 7)

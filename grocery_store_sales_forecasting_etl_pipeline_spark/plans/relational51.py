@@ -122,7 +122,7 @@ def doc_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     sc = (
         bi.join(bcnt, "bg")
         .join(
-            _gbcast(ucnt, source=d),
+            _gbcast(ucnt),
             F.split_part(F.col("bg"), F.lit(" "), F.lit(1)) == F.col("w"),
         )
         .crossJoin(F.broadcast(vocab))

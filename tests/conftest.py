@@ -50,6 +50,7 @@ _SLOW_TESTS = {
     "test_jsonl_roundtrip",
     "test_1nn_accuracy_replay",
     "test_energy_distance_replay",  # 13.8s pairwise-distance replay (r9 durations)
+    "test_every_gated_site_records_a_decision",  # builds the whole registry
 }
 
 

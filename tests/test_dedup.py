@@ -5,6 +5,7 @@ the conditional repartition in ``_shingle_rows``."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.operators import dedup as dd
 
@@ -83,12 +84,14 @@ def test_shingle_rows_skips_repartition_when_wide_enough(spark, sf_oracle):
     assert marker in plan2, plan2
 
 
-def test_input_bytes_reads_parquet_metadata(spark, sf_oracle):
+@pytest.mark.parametrize("name", ["documents", "lineitem", "orders"])
+def test_plan_bytes_of_bare_scan_equal_on_disk_bytes(spark, sf_oracle, name):
+    """The size thresholds were calibrated in on-disk bytes; the plan
+    estimate of a bare scan must be exactly those bytes."""
     import os
 
-    path = f"{sf_oracle}/documents.parquet"
-    df = spark.read.parquet(path)
-    measured = dd._input_bytes(df)
+    path = f"{sf_oracle}/{name}.parquet"
+    measured = dd._plan_bytes(spark.read.parquet(path))
     # the driver's tables are single parquet FILES; probe dirs are
     # directories of part files — handle both
     if os.path.isfile(path):
@@ -108,8 +111,7 @@ def test_shingle_materialization_gate_and_equivalence(spark, sf_oracle):
     (the measured sf1 crossover: recompute wins below ~32 MB) and (b)
     be a pure execution-strategy choice — both variants bit-identical."""
     df = spark.read.parquet(f"{sf_oracle}/documents.parquet")
-    size = dd._input_bytes(df)
-    assert size is not None and size < dd._SHINGLE_MATERIALIZE_MIN_INPUT_BYTES
+    assert dd._plan_bytes(df) < dd._SHINGLE_MATERIALIZE_MIN_INPUT_BYTES
 
     kw = dict(id_col="doc_id", text_col="text", k=2, threshold=0.08, max_df=25)
     base = sorted(
@@ -310,8 +312,6 @@ def test_expand_rep_pairs_payloadless_and_missing_payload(spark):
     pairs, intra={}) emits cross- and intra-group pairs with no payload
     columns; an intra dict that misses a payload column raises before
     any job runs."""
-    import pytest
-
     docs = spark.createDataFrame(
         [(1, "a"), (2, "a"), (3, "b"), (4, "c")], ["doc_id", "text"]
     )

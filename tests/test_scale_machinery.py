@@ -170,10 +170,8 @@ def test_sizing_gate_decisions_are_exposed(spark, sf_smoke, capsys):
     one stderr log line + a LAST_DECISIONS entry recording bytes seen
     and shape chosen, so a mis-sized derived frame shows up in bench
     output as a visibly wrong decision rather than as a silent slow
-    path. capsys, not caplog: the sizing logger owns its stderr handler
-    with propagate=False (the line must appear under ANY host logging
-    config, which is the point — the handler resolves sys.stderr at
-    emit time, so per-test capture sees it)."""
+    path. capsys, not caplog: the line is printed to stderr, so it
+    appears under ANY host logging config."""
     from grocery_store_sales_forecasting_etl_pipeline_spark import plans
     from grocery_store_sales_forecasting_etl_pipeline_spark.operators import sizing
 
@@ -191,7 +189,7 @@ def test_sizing_gate_decisions_are_exposed(spark, sf_smoke, capsys):
     err = capsys.readouterr().err
     gate_lines = [l for l in err.splitlines() if l.startswith("spark_graft.sizing:")]
     assert len(gate_lines) == 2, gate_lines
-    assert all("input_bytes=" in l and "shape=" in l for l in gate_lines)
+    assert all("plan_bytes=" in l and "shape=" in l for l in gate_lines)
 
     # an explicit materialize_shingles decision bypasses the gate — no
     # decision recorded, because none was taken

@@ -5,6 +5,9 @@ RESULT is identical either way — a join strategy never changes rows."""
 
 from __future__ import annotations
 
+import ast
+from pathlib import Path
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -53,13 +56,31 @@ def test_oversize_input_drops_hint(spark, sf_smoke, monkeypatch):
 def test_non_file_frame_defaults_to_broadcast(spark):
     lit = spark.range(5).select(F.col("id").alias("k"))
     big = spark.range(1000).select(F.col("id").alias("k"), (F.col("id") * 2).alias("v"))
-    # input_bytes is None for non-file sources -> keep the hint
+    # a Range plan has size statistics too (a few bytes) -> keep the hint
     joined = big.join(sizing.gated_broadcast(lit), "k")
     # Spark 4 folds the hint into the Join node: rightHint=(strategy=broadcast)
     assert "strategy=broadcast" in joined._jdf.queryExecution().optimizedPlan().toString()
 
 
-@pytest.mark.parametrize("query", ["dim_enrich_join", "nation_pair_trade"])
+# The queries whose gate either never fired (the sized frame passes a
+# localCheckpoint, so a leaf-file probe saw nothing) or fired only when
+# handed a base frame by hand. Sizing from plan statistics must reach
+# them on its own.
+_FORMERLY_INERT = [
+    "supplier_part_assortativity",
+    "bigram_pmi_topk",
+    "supplier_overlap_jaccard",
+    "tfidf_cosine_pairs",
+]
+_CHECKPOINT_SIZED = _FORMERLY_INERT + [
+    "bloom_filter_join_audit",
+    "kmv_jaccard_audit",
+    "cohort_ltv_curve",
+    "doc_bigram_surprisal",
+]
+
+
+@pytest.mark.parametrize("query", ["dim_enrich_join", "nation_pair_trade"] + _FORMERLY_INERT)
 def test_gate_demotion_preserves_results(spark, sf_smoke, monkeypatch, query):
     build = wrapped_build(query)
     base = {tuple(map(str, r)) for r in build(spark, sf_smoke).collect()}
@@ -68,21 +89,52 @@ def test_gate_demotion_preserves_results(spark, sf_smoke, monkeypatch, query):
     assert base == demoted
 
 
-def test_checkpointed_frame_sizes_via_source(spark, sf_smoke, monkeypatch):
+@pytest.mark.parametrize("query", _CHECKPOINT_SIZED)
+def test_forced_bound_demotes_checkpoint_sized_sites(spark, sf_smoke, monkeypatch, query):
+    """At bound 0 every gated site of these builders must record a
+    demotion — none may keep the hint because its frame is unsizable."""
+    monkeypatch.setattr(sizing, "_BCAST_INPUT_MAX", 0)
+    sizing.LAST_DECISIONS.clear()
+    wrapped_build(query)(spark, sf_smoke)
+    shapes = [
+        shape
+        for site, (_, shape) in sizing.LAST_DECISIONS.items()
+        if site.startswith("gated_broadcast@")
+    ]
+    assert shapes and set(shapes) == {"no-hint(AQE)"}, sizing.LAST_DECISIONS
+
+
+def test_every_gated_site_records_a_decision(spark, sf_smoke):
+    """Building the whole registry records a decision (kept or dropped)
+    under the key of every ``_gbcast(...)`` call in the package source."""
+    from grocery_store_sales_forecasting_etl_pipeline_spark.plans import REGISTRY
+
+    expected = {
+        f"gated_broadcast@{path.name}:{node.lineno}"
+        for path in Path(sizing.__file__).parent.parent.rglob("*.py")
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Call) and getattr(node.func, "id", None) == "_gbcast"
+    }
+    sizing.LAST_DECISIONS.clear()
+    for name in sorted(REGISTRY):
+        wrapped_build(name)(spark, sf_smoke)
+    recorded = {s for s in sizing.LAST_DECISIONS if s.startswith("gated_broadcast@")}
+    assert len(expected) == 84
+    assert recorded == expected, (expected - recorded, recorded - expected)
+
+
+def test_checkpointed_frame_sizes_from_plan_stats(spark, sf_smoke, monkeypatch):
     """A localCheckpoint'ed frame has no leaf input files (LogicalRDD),
-    so the gate must size from the ``source=`` base frame instead of
-    silently keeping the hint at every scale."""
+    but it keeps its origin's plan statistics: the gate sizes it and
+    demotes it at bound 0 with no help from the caller."""
     monkeypatch.setattr(sizing, "_BCAST_INPUT_MAX", 0)
     d = spark.read.parquet(f"{sf_smoke}/documents.parquet")
     ck = d.select("doc_id").localCheckpoint(eager=False)
-    big = d.select("doc_id", "source")
-
-    def plan(dim):
-        return (
-            big.join(dim, "doc_id")._jdf.queryExecution().optimizedPlan().toString()
-        )
-
-    # without source the gate cannot see the scan -> hint kept (None path)
-    assert "strategy=broadcast" in plan(sizing.gated_broadcast(ck))
-    # with source the gate sees the base table's bytes -> demoted at max=0
-    assert "strategy=broadcast" not in plan(sizing.gated_broadcast(ck, source=d))
+    plan = (
+        d.select("doc_id", "source")
+        .join(sizing.gated_broadcast(ck), "doc_id")
+        ._jdf.queryExecution()
+        .optimizedPlan()
+        .toString()
+    )
+    assert "strategy=broadcast" not in plan
