@@ -8,26 +8,24 @@ without the UTC-adjusted flag (which Spark reads directly as
 TIMESTAMP_NTZ). ``events()`` branches on the landed dtype so either
 generation yields the same TIMESTAMP_NTZ column.
 
-Per-session DataFrame cache (r11 optimization): every ``spark.read
-.parquet(path)`` call costs ~0.14–0.21 s of driver-side work (file
-listing + footer schema read + py4j round trips) EVEN when repeated on
-an unchanged path in a warm session — measured at sf0.1, where a bench
-pass re-creates each base-table frame inside every timed build (~2.5
-reads/query × 412 queries ≈ 2 minutes of pure metadata re-derivation
-per full run). The cache memoizes the LAZY DataFrame handle per
-(session, sf_dir, name) — plan/metadata reuse only, exactly what a
-catalog table (or the guide §6 file-listing cache) provides. No data
-or results are cached: every action on the returned frame recomputes
-from the parquet files, and separate builds create fresh downstream
-plans (cross-action shuffle reuse requires the SAME physical plan
-object, which sharing a leaf relation does not create). Disable with
-SPARK_GRAFT_NO_TABLE_CACHE=1 (e.g. when a caller rewrites files under
-an already-read path mid-session — no registered query does).
+Per-session DataFrame cache: a ``spark.read.parquet(path)`` call does
+driver-side work (file listing + footer schema read + py4j round trips)
+EVEN when repeated on an unchanged path in a warm session — measured at
+sf0.1 on 4 cores, a fresh handle costs 62–139 ms per table against
+at most ~1 ms for a cache hit, and a bench pass re-creates each
+base-table frame inside every timed build (~2.5 reads/query). The cache
+memoizes the LAZY DataFrame handle per (session, sf_dir, name) —
+plan/metadata reuse only, exactly what a catalog table (or the guide §6
+file-listing cache) provides. No data or results are cached: every
+action on the returned frame recomputes from the parquet files, and
+separate builds create fresh downstream plans (cross-action shuffle
+reuse requires the SAME physical plan object, which sharing a leaf
+relation does not create). A caller that rewrites files under an
+already-read path mid-session must use a new ``sf_dir`` or session.
 """
 
 from __future__ import annotations
 
-import os
 import weakref
 
 import pyspark.sql.functions as F
@@ -39,12 +37,7 @@ _TABLE_CACHE: weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str], Data
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if os.environ.get("SPARK_GRAFT_NO_TABLE_CACHE"):
-        return _load(spark, sf_dir, name)
-    try:
-        per_session = _TABLE_CACHE.setdefault(spark, {})
-    except TypeError:  # session not weak-referenceable (mock/stub)
-        return _load(spark, sf_dir, name)
+    per_session = _TABLE_CACHE.setdefault(spark, {})
     key = (sf_dir, name)
     df = per_session.get(key)
     if df is None:

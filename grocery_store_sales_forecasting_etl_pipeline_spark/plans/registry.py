@@ -16,7 +16,6 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 from pathlib import Path
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 Builder = Callable[[SparkSession, str], DataFrame]
@@ -141,104 +140,46 @@ def apply_decimal_boundary(df: DataFrame, cols: list[str]) -> DataFrame:
     Only columns whose Spark dtype is numeric are touched: the manifest is
     DuckDB-derived, so on real schema skew (a name DuckDB types numeric
     but the builder emits as e.g. string) skipping keeps the build alive
-    and lets the parity suite surface the skew as a mismatch instead."""
-    return _apply_boundary_decision(df, _boundary_decision(df, cols))
+    and lets the parity suite surface the skew as a mismatch instead.
 
-
-def _boundary_decision(
-    df: DataFrame, cols: list[str]
-) -> tuple[tuple[str, ...], frozenset[str], bool]:
-    """(output column order, columns to quantize, coalesce-to-1 flag) for
-    ``apply_decimal_boundary`` — the only part of the boundary that needs
-    the ANALYZED plan (schema dtypes + the root-limit walk). Split out so
-    ``wrapped_build`` can memoize it per query: a builder's output schema
-    and root-limit shape are deterministic per (name, sf_dir), while the
-    analysis pass this computation forces costs 15-1600 ms of driver time
-    per build (measured r11) — pure re-derivation on every bench/contract
-    build after the first."""
+    The schema and the root-limit walk are read from ``df`` on every call
+    (under 2 ms median per registered query at sf0.1 on 4 cores), and the
+    projection is one ``selectExpr`` of SQL strings: a single parse on
+    the JVM instead of ~15 py4j Column round trips per quantized column.
+    Its bit-parity with :func:`wrap_oracle_decimal` is pinned on
+    adversarial values in tests/test_boundary_fast.py."""
     numeric_cols = {
         f.name
         for f in df.schema.fields
         if f.dataType.typeName() in _NUMERIC_TYPE_NAMES
         or f.dataType.typeName().startswith("decimal")
     }
-    todo = frozenset(set(cols) & numeric_cols)
-    coalesce1 = False
-    if todo:
-        limit = _root_limit(df)
-        # bounded output: keep TakeOrderedAndProject fusion
-        coalesce1 = limit is not None and limit <= _COALESCE_LIMIT_MAX
-    return tuple(df.columns), todo, coalesce1
-
-
-def _apply_boundary_decision(
-    df: DataFrame, decision: tuple[tuple[str, ...], frozenset[str], bool]
-) -> DataFrame:
-    """Apply a (column order, quantize set, coalesce flag) boundary
-    decision with UNRESOLVED column refs only — no analysis is forced on
-    ``df``, so a memoized decision makes the whole boundary projection
-    lazy. A stale decision (schema changed under the same query name —
-    no registered builder does this) fails loudly at analysis of the
-    returned plan, never silently."""
-    col_order, todo, coalesce1 = decision
+    todo = set(cols) & numeric_cols
     if not todo:
         return df
-    if coalesce1:
-        df = df.coalesce(1)
-    out = []
-    for name in col_order:
-        if name in todo:
-            c = F.col(name)
-            d = c.cast("double")
-            out.append(
-                F.when(
-                    c.isNull() | F.isnan(d) | (F.abs(d) >= F.lit(_NULL_ABS)),
-                    F.lit(None).cast("double"),
-                )
-                .when(
-                    F.abs(d) >= F.lit(_INT_PATH_ABS),
-                    F.round(d, 0).cast("long").cast("double"),
-                )
-                # + 0.0 maps -0.0 -> +0.0 (Spark's BigDecimal round yields
-                # +0.0 for tiny negatives, duckdb's scaled round yields
-                # -0.0 — different float64 bits); exact identity otherwise.
-                .otherwise((F.round(d, _BOUNDARY_SCALE) + F.lit(0.0)).cast("double"))
-                .alias(name)
-            )
-        else:
-            out.append(F.col(name))
-    return df.select(*out)
-
-
-def _boundary_exprs(
-    decision: tuple[tuple[str, ...], frozenset[str], bool]
-) -> tuple[str, ...]:
-    """The boundary projection of ``_apply_boundary_decision`` rendered
-    as SQL expression strings — one ``selectExpr`` call instead of ~15
-    py4j Column-object round trips PER quantized column (measured r11:
-    the Column-built projection costs 783 ms to CONSTRUCT for a 7-column
-    boundary; the string form is one parse on the JVM). Bit-parity of
-    the parsed tree vs the Column tree is pinned on adversarial values
-    (±0, NaN, ±Inf, 1e9/1e18 boundaries, half-ties, NULL) in
-    tests/test_boundary_fast.py."""
-    col_order, todo, _ = decision
+    limit = _root_limit(df)
+    if limit is not None and limit <= _COALESCE_LIMIT_MAX:
+        df = df.coalesce(1)  # bounded output: keep TakeOrderedAndProject fusion
     exprs = []
-    for name in col_order:
-        if name in todo:
-            # escape embedded backticks per Spark's quoteIdentifier rule
-            # (r11 ADVICE; hypothetical for current DuckDB-derived names)
-            q = "`" + name.replace("`", "``") + "`"
-            d = f"CAST({q} AS DOUBLE)"
-            exprs.append(
-                f"CASE WHEN (({q} IS NULL) OR isnan({d}) OR (abs({d}) >= {_NULL_ABS!r}D)) "
-                "THEN CAST(NULL AS DOUBLE) "
-                f"WHEN (abs({d}) >= {_INT_PATH_ABS!r}D) "
-                f"THEN CAST(CAST(round({d}, 0) AS BIGINT) AS DOUBLE) "
-                f"ELSE CAST((round({d}, {_BOUNDARY_SCALE}) + 0.0D) AS DOUBLE) END AS {q}"
-            )
-        else:
-            exprs.append("`" + name.replace("`", "``") + "`")
-    return tuple(exprs)
+    for name in df.columns:
+        # escape embedded backticks per Spark's quoteIdentifier rule
+        # (r11 ADVICE; hypothetical for current DuckDB-derived names)
+        q = "`" + name.replace("`", "``") + "`"
+        if name not in todo:
+            exprs.append(q)
+            continue
+        d = f"CAST({q} AS DOUBLE)"
+        # + 0.0 maps -0.0 -> +0.0 (Spark's BigDecimal round yields +0.0
+        # for tiny negatives, duckdb's scaled round yields -0.0 —
+        # different float64 bits); exact identity otherwise.
+        exprs.append(
+            f"CASE WHEN (({q} IS NULL) OR isnan({d}) OR (abs({d}) >= {_NULL_ABS!r}D)) "
+            "THEN CAST(NULL AS DOUBLE) "
+            f"WHEN (abs({d}) >= {_INT_PATH_ABS!r}D) "
+            f"THEN CAST(CAST(round({d}, 0) AS BIGINT) AS DOUBLE) "
+            f"ELSE CAST((round({d}, {_BOUNDARY_SCALE}) + 0.0D) AS DOUBLE) END AS {q}"
+        )
+    return df.selectExpr(*exprs)
 
 
 def wrap_oracle_decimal(sql: str, cols: list[str]) -> str:
@@ -365,54 +306,21 @@ def _rotation_order() -> list[str]:
     )
 
 
-# Per-(query, sf_dir) memo of the boundary DECISION (output column
-# order, quantize set, coalesce flag) — schema metadata only, never data
-# or results: a builder's output schema and root-limit literal are a
-# pure function of its code + the table schemas, identical on every
-# build, while deriving them forces an extra full analysis pass of the
-# raw plan (15-1600 ms of driver time per build, measured r11; 298
-# manifest queries x warm-up+timed builds per bench run). A stale memo
-# cannot mis-quantize silently when columns are RENAMED or DROPPED: the
-# projection is built from unresolved column refs and fails analysis.
-# Known caveat (r11 ADVICE): a column whose DTYPE changed numeric->non-
-# numeric under the same name (files rewritten under the same sf_dir
-# mid-session — no registered flow does this) would still be CAST and
-# quantized by the memoized expression instead of skipped; keying on a
-# schema fingerprint would force the extra analysis pass this memo
-# exists to avoid, so the caveat is documented, not keyed. Disable
-# with SPARK_GRAFT_NO_BOUNDARY_MEMO=1.
-_BOUNDARY_DECISION_MEMO: dict[tuple[str, str], tuple[tuple[str, ...], bool]] = {}
-
-
 def wrapped_build(name: str) -> Builder:
-    """The SHIPPED builder for ``name``: the registered builder with the
-    decimal output boundary applied (identity when the manifest lists no
-    float columns for the query). Both ``queries_map()`` and the local
+    """The SHIPPED builder for ``name``: the registered builder with
+    :func:`apply_decimal_boundary` applied over the query's manifest
+    columns (the registered builder itself when the manifest lists none).
+    The boundary is derived from each build's own schema, so it always
+    matches what that build returned. Both ``queries_map()`` and the local
     parity suite go through here, so what the tests exercise is exactly
     what the driver runs."""
-    import os
-
     q = REGISTRY[name]
     cols = DECIMAL_BOUNDARY.get(name, [])
     if not cols:
         return q.build
 
     def build(spark: SparkSession, sf_dir: str) -> DataFrame:
-        df = q.build(spark, sf_dir)
-        if os.environ.get("SPARK_GRAFT_NO_BOUNDARY_MEMO"):
-            return apply_decimal_boundary(df, cols)
-        key = (name, sf_dir)
-        memo = _BOUNDARY_DECISION_MEMO.get(key)
-        if memo is None:
-            decision = _boundary_decision(df, cols)
-            memo = (_boundary_exprs(decision), decision[2])
-            _BOUNDARY_DECISION_MEMO[key] = memo
-        exprs, coalesce1 = memo
-        if not any(e.startswith("CASE") for e in exprs):
-            return df  # no numeric manifest column landed in the schema
-        if coalesce1:
-            df = df.coalesce(1)
-        return df.selectExpr(*exprs)
+        return apply_decimal_boundary(q.build(spark, sf_dir), cols)
 
     build.__doc__ = q.build.__doc__
     return build

@@ -9,11 +9,13 @@ observable path. These two tests run in the fast gate and fail on any
 reintroduction of a representation skew:
 
 1. bit-parity of the quantization itself on adversarial values
-   (half-ties, ±0.0, the 2^53/10^6 magnitude boundary, NaN/Inf, BIGINT
-   overflow range) through the REAL pandas paths of both engines;
+   (half-ties, ±0.0, the 2^53/10^6 magnitude boundary, ±2^53, NaN/Inf,
+   NULL, BIGINT overflow range) through the REAL pandas paths of both
+   engines;
 2. pandas-path parity on a representative query per output-type class
    (DOUBLE, BIGINT, VARCHAR, DATE, TIMESTAMP, INTEGER, HUGEINT,
-   DECIMAL(38,0), internal Spark DecimalType).
+   DECIMAL(38,0), internal Spark DecimalType) plus one limit-rooted
+   top-k, whose boundary projects on a single partition.
 """
 
 from __future__ import annotations
@@ -46,12 +48,15 @@ REPRESENTATIVES = [
     "conformal_coverage_audit",  # HUGEINT quantile + BIGINT counts
     "embedding_participation_ratio",  # DECIMAL(38,0) exact trace
     "ship_delay_ks_test",  # internal Spark DecimalType (d_star pattern)
+    "topk_orders",  # orderBy().limit(25): the boundary's coalesce(1) branch
 ]
 
 
 def test_quantization_bit_parity_adversarial(spark):
     """Spark and duckdb quantization must be BIT-IDENTICAL float64
-    through toPandas()/.df() on values chosen to break it."""
+    through toPandas()/.df() on values chosen to break it. This pins the
+    one Spark rendering (apply_decimal_boundary's selectExpr) against
+    the DuckDB mirror (wrap_oracle_decimal)."""
     vals = [
         0.0, -0.0, 1e-7, -1e-7, 1.5e-6, -1.5e-6, 2.5e-6, 0.1234565,
         0.12345649999999999, 5.0, 5.000001, -5.0, 123456789.123456499,
@@ -59,6 +64,7 @@ def test_quantization_bit_parity_adversarial(spark):
         9.2e17, 1.1e18, float("nan"), float("inf"), -float("inf"),
         0.30000000000000004, 1 / 3, -1 / 3, 2 / 3, 1e9 - 0.5, 1e9 + 0.3,
         123.4999995, -123.4999995, 0.9999995, -0.9999995,
+        2.0**53, -(2.0**53), None,
     ]
     rng = random.Random(7)
     vals += [rng.uniform(-1e6, 1e6) for _ in range(100)]
@@ -176,52 +182,26 @@ def test_manifest_not_stale(sf_smoke):
     )
 
 
-def test_selectexpr_boundary_matches_column_boundary(spark):
-    """The memoized selectExpr rendering of the boundary (r11,
-    registry._boundary_exprs) must be BIT-IDENTICAL to the Column-built
-    projection on the same adversarial values — the SQL string and the
-    Column tree are two spellings of one expression."""
+def test_boundary_follows_each_build_schema(spark, sf_oracle, monkeypatch):
+    """The boundary is derived from every build's own schema: a manifest
+    column that comes back as a string is passed through unquantized,
+    even after an earlier build of the same query quantized it."""
+    import pyspark.sql.functions as F
+
     from grocery_store_sales_forecasting_etl_pipeline_spark.plans.registry import (
-        _apply_boundary_decision,
-        _boundary_decision,
-        _boundary_exprs,
+        DECIMAL_BOUNDARY,
     )
 
-    vals = [
-        0.0, -0.0, 1e-7, -1e-7, 1.5e-6, 0.1234565, 5.000001,
-        1443283136200801.5, 9.2e17, 1.1e18, float("nan"), float("inf"),
-        -float("inf"), 1e9 - 0.5, 1e9 + 0.3, 123.4999995, -0.9999995,
-        2.0**53, -(2.0**53), None,
-    ]
-    df = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(vals)], "i long, x double"
+    name = "pricing_summary"
+    col = DECIMAL_BOUNDARY[name][0]
+    first = plans.wrapped_build(name)(spark, sf_oracle)
+    assert first.schema[col].dataType.typeName() == "double"
+
+    query = plans.REGISTRY[name]
+    raw = query.build
+    monkeypatch.setattr(
+        query, "build", lambda s, d: raw(s, d).withColumn(col, F.lit("x"))
     )
-    decision = _boundary_decision(df, ["x"])
-    via_column = _apply_boundary_decision(df, decision).toPandas().sort_values("i")
-    via_sql = df.selectExpr(*_boundary_exprs(decision)).toPandas().sort_values("i")
-    for i, (a, b) in enumerate(zip(via_column["x"].tolist(), via_sql["x"].tolist())):
-        a_null = a is None or (isinstance(a, float) and math.isnan(a))
-        b_null = b is None or (isinstance(b, float) and math.isnan(b))
-        if a_null and b_null:
-            continue
-        assert a_null == b_null and struct.pack("<d", a) == struct.pack("<d", b), (
-            i, vals[i], a, b,
-        )
-
-
-def test_boundary_memo_path_matches_unmemoized(spark, sf_oracle, monkeypatch):
-    """wrapped_build's memoized fast path must produce the identical
-    result frame as the SPARK_GRAFT_NO_BOUNDARY_MEMO direct path, on a
-    plain aggregate query and on a GlobalLimit query (the coalesce(1)
-    decision branch)."""
-    for name in ("pricing_summary", "topk_orders"):
-        monkeypatch.delenv("SPARK_GRAFT_NO_BOUNDARY_MEMO", raising=False)
-        memoized = plans.wrapped_build(name)(spark, sf_oracle)
-        # build twice so the second build exercises the memo-HIT path
-        memoized = plans.wrapped_build(name)(spark, sf_oracle)
-        monkeypatch.setenv("SPARK_GRAFT_NO_BOUNDARY_MEMO", "1")
-        direct = plans.wrapped_build(name)(spark, sf_oracle)
-        a = sorted(map(tuple, memoized.collect()))
-        b = sorted(map(tuple, direct.collect()))
-        assert memoized.columns == direct.columns
-        assert a == b, name
+    second = plans.wrapped_build(name)(spark, sf_oracle)
+    assert second.schema[col].dataType.typeName() == "string"
+    assert {r[0] for r in second.select(col).distinct().collect()} == {"x"}

@@ -4,9 +4,9 @@ listing + footer schema reads inside timed query builds).
 
 The cache memoizes only the LAZY frame handle — no data, no results —
 so the contract to pin is: (a) repeat calls in one session return the
-memoized handle, (b) the kill-switch env bypasses it, (c) a cached
-handle still computes fresh, correct results, and (d) the events
-normalization is applied on the cached path too.
+memoized handle, (b) a cached handle still computes fresh, correct
+results, and (c) the events normalization is applied on the cached path
+too.
 """
 
 from __future__ import annotations
@@ -20,14 +20,6 @@ def test_repeat_call_returns_memoized_handle(spark, sf_smoke):
     a = _tables.table(spark, sf_smoke, "region")
     b = _tables.table(spark, sf_smoke, "region")
     assert a is b
-
-
-def test_kill_switch_bypasses_cache(spark, sf_smoke, monkeypatch):
-    a = _tables.table(spark, sf_smoke, "region")
-    monkeypatch.setenv("SPARK_GRAFT_NO_TABLE_CACHE", "1")
-    c = _tables.table(spark, sf_smoke, "region")
-    assert a is not c
-    assert c.schema == a.schema
 
 
 def test_cache_keys_distinguish_dir_and_name(spark, sf_smoke, sf_oracle):
