@@ -212,6 +212,9 @@ def main() -> None:
         "protocol": f"top{N_RUNS}/rest1",
         "runs_per_query": {"refined_top": N_RUNS, "rest": 1},
         "refined_queries": sorted(refined),
+        # how many queries actually got N_RUNS: once the budget is spent
+        # the protocol's top-k fall back to one run each
+        "n_refined": len(refined),
         "runs_raw": {
             n: [round(t, 4) for t in ts] for n, ts in runs.items() if len(ts) > 1
         },
@@ -235,6 +238,7 @@ def main() -> None:
         "n_errors": len(errors),
         "protocol": f"top{N_RUNS}/rest1",
         "runs": {"top": N_RUNS, "rest": 1},
+        "n_refined": len(refined),
         "load": {
             "start": load_start,
             "end": full["load_end"],

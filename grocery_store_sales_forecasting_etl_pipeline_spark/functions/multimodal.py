@@ -47,8 +47,6 @@ _MAGIC = (
     ("664C6143", "audio/flac"),
 )
 
-MEDIA_META_COLS = ("media_len", "media_md5", "media_mime")
-
 
 def _pruned_output(
     fields: list[StructField], drop_cols: tuple[str, ...] | list[str]

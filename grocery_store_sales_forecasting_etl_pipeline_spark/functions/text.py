@@ -32,13 +32,8 @@ STOPWORDS: tuple[str, ...] = ("the", "a", "of", "and", "is", "in", "to", "it")
 
 def tokens(col: str | Column) -> Column:
     """Whitespace tokenization (single-space split — documents are
-    pre-normalized; use ``tokens_ws`` for arbitrary whitespace)."""
+    pre-normalized)."""
     return F.split(col, " ")
-
-
-def tokens_ws(col: str | Column) -> Column:
-    """Tokenize on runs of arbitrary whitespace."""
-    return F.split(F.trim(col), "\\s+")
 
 
 def token_count(col: str | Column) -> Column:
@@ -120,24 +115,11 @@ def shingles(col: str | Column, k: int = 2) -> Column:
     return shingles_from_tokens(tokens(col), k)
 
 
-def ngrams(col: str | Column, k: int = 2) -> Column:
-    """ALL word k-grams in order (non-distinct, unlike ``shingles``).
-    Same hot-path warning as ``shingles`` — prefer
-    ``ngrams_from_tokens`` over a projected token column."""
-    return ngrams_from_tokens(tokens(col), k)
-
-
 def fingerprint(col: str | Column) -> Column:
     """Deterministic document fingerprint: md5 of the lower-cased,
     whitespace-collapsed text. Stable across engines (md5 is md5)."""
     normalized = F.regexp_replace(F.lower(F.trim(col)), "\\s+", " ")
     return F.md5(normalized)
-
-
-def fingerprint_bucket(col: str | Column, bits: int = 32) -> Column:
-    """Integer bucket from the fingerprint's leading hex digits — for
-    partitioning/bucketing a 100 TB dedup shuffle by fingerprint prefix."""
-    return F.conv(F.substring(fingerprint(col), 1, bits // 4), 16, 10).cast("long")
 
 
 def stopword_hits(col: str | Column, words: tuple[str, ...] = STOPWORDS) -> Column:

@@ -3,13 +3,12 @@
 Each module exposes composable DataFrame → DataFrame operators that the
 registered queries (``plans/``) and the pipeline modules build on:
 
-- ``dedup``      : exact / keyed / MinHash-LSH / SimHash / n-gram-Jaccard
+- ``dedup``      : exact-content groups / MinHash-LSH / SimHash / n-gram-Jaccard
                    near-duplicate detection.
 - ``joins``      : broadcast-aware equi/semi/anti joins, range join,
                    as-of join.
-- ``aggregates`` : grouped/rollup/cube/conditional aggregation helpers.
-- ``windows``    : lag features, rolling frames, ranking, running totals,
-                   per-group top-k.
+- ``aggregates`` : exact money sums, rollup/cube, conditional counts.
+- ``windows``    : per-group top-k.
 - ``similarity`` : embedding cosine top-k (brute force + LSH-bucketed).
 - ``quality``    : data-quality expectation checks (reference §2.13).
 """

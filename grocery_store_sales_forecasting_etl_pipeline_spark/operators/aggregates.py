@@ -22,24 +22,8 @@ def money_sum(col: str, scale: int = 2) -> Column:
     return F.sum(F.col(col).cast(f"decimal(18,{scale})")).cast("double")
 
 
-def money_avg(col: str, scale: int = 2, round_to: int = 2) -> Column:
-    """Deterministic mean: exact decimal sum / count, one double division."""
-    return F.round(money_sum(col, scale) / F.count(col), round_to)
-
-
-def conditional_sum(col: str, cond: Column) -> Column:
-    """SUM(CASE WHEN cond THEN col END) — filtered aggregation without a
-    separate scan per condition; N conditions share one pass."""
-    return F.sum(F.when(cond, F.col(col)))
-
-
 def conditional_count(cond: Column) -> Column:
     return F.count(F.when(cond, F.lit(1)))
-
-
-def grouped(df: DataFrame, keys: Sequence[str], aggs: dict[str, Column]) -> DataFrame:
-    """groupBy + multi-agg with aliased outputs (reference A1 shape)."""
-    return df.groupBy(*keys).agg(*[c.alias(name) for name, c in aggs.items()])
 
 
 def rollup_agg(df: DataFrame, keys: Sequence[str], aggs: dict[str, Column]) -> DataFrame:

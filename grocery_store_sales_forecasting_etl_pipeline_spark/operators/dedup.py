@@ -35,17 +35,6 @@ from grocery_store_sales_forecasting_etl_pipeline_spark.operators.sizing import 
 )
 
 
-def dedup_keyed(df: DataFrame, keys: Sequence[str], order_by: Sequence | None = None) -> DataFrame:
-    """Reference D1 (`dropDuplicates(keys)`, silver_processing.py.py:16)
-    with an optional deterministic survivor order. Without ``order_by``
-    falls through to Spark's arbitrary-survivor dropDuplicates (cheapest:
-    partial map-side dedup before the shuffle)."""
-    if order_by is None:
-        return df.dropDuplicates(list(keys))
-    w = Window.partitionBy(*keys).orderBy(*order_by)
-    return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
-
-
 def exact_text_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Exact-content dedup groups: normalize → md5 fingerprint → group.
     Returns (fingerprint, keep_id, n_dups) — keep_id = min id survives."""
@@ -57,13 +46,6 @@ def exact_text_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
             F.count("*").cast("long").alias("n_dups"),
         )
     )
-
-
-def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Drop exact-content duplicates, keeping the min-id row per
-    fingerprint group."""
-    w = Window.partitionBy(T.fingerprint(text_col)).orderBy(id_col)
-    return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
 
 
 def collapse_exact_text(

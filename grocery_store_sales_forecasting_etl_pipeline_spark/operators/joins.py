@@ -16,19 +16,6 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
 
-def enrich_left(fact: DataFrame, dims: Sequence[tuple[DataFrame, str]]) -> DataFrame:
-    """Chain left equi-joins of ``fact`` to ``(dim, key)`` pairs, always
-    broadcasting the dim side (reference J1-J3 shape).
-
-    At 100 TB the fact must never shuffle for dim enrichment; explicit
-    ``F.broadcast`` guarantees the plan regardless of stale size stats.
-    """
-    out = fact
-    for dim, key in dims:
-        out = out.join(F.broadcast(dim), on=key, how="left")
-    return out
-
-
 def semi_join(left: DataFrame, right: DataFrame, on) -> DataFrame:
     """Rows of ``left`` with a match in ``right`` (EXISTS). Right side is
     reduced to its join keys before the shuffle — at scale this is the

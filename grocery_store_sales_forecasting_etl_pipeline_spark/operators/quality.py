@@ -1,10 +1,12 @@
-"""Data-quality expectation operators (reference §2.13 E2-E6,
-test_data_quality.py.py:13-94) as reusable checks.
+"""Data-quality gates (reference §2.13 E2-E6, test_data_quality.py.py:13-94).
 
-Each check returns a ``CheckResult`` instead of raising, so pipelines can
-gate, log, or fail-fast as policy dictates; ``expect_all`` aggregates.
-Counts are single Spark actions; multi-column null checks are ONE pass
-(conditional aggregation), not a count() per column like the reference.
+The row-level metrics (E2 row counts, E4 null counts, E5 minimums and the
+sums E6b compares) are observed on the frame a pipeline writes
+(``observe_quality``), so they ride the write's own tasks: no re-scan and
+no extra Spark job. The other checks are pure functions of those metrics
+or of a schema. Every check returns a ``CheckResult`` instead of raising,
+so pipelines can gate, log, or fail-fast as policy dictates;
+``expect_all`` aggregates.
 """
 
 from __future__ import annotations
@@ -23,42 +25,10 @@ class CheckResult:
     detail: str = ""
 
 
-def expect_nonempty(df: DataFrame, name: str = "nonempty") -> CheckResult:
-    """E2: table has rows (test_data_quality.py.py:13-15)."""
-    n = df.limit(1).count()
-    return CheckResult(name, n > 0, "" if n else "no rows")
-
-
 def expect_columns(df: DataFrame, required: Sequence[str], name: str = "columns") -> CheckResult:
     """E3: required columns present (test_data_quality.py.py:17-21)."""
     missing = sorted(set(required) - set(df.columns))
     return CheckResult(name, not missing, f"missing: {missing}" if missing else "")
-
-
-def expect_no_nulls(
-    df: DataFrame, cols: Sequence[str] | None = None, name: str = "no_nulls"
-) -> CheckResult:
-    """E4: zero nulls in the given (default: all) columns
-    (test_data_quality.py.py:23-28,36-40,67-72).
-
-    One aggregation pass for all columns — the reference runs a filtered
-    count per column, which is N full scans.
-    """
-    cols = list(cols or df.columns)
-    counts = df.agg(
-        *[F.count(F.when(F.col(c).isNull(), 1)).alias(c) for c in cols]
-    ).first()
-    offenders = {c: counts[c] for c in cols if counts[c]}
-    return CheckResult(name, not offenders, f"null counts: {offenders}" if offenders else "")
-
-
-def expect_min(
-    df: DataFrame, col: str, bound: float, name: str = "min_bound"
-) -> CheckResult:
-    """E5: min(col) >= bound (test_data_quality.py.py:74-77)."""
-    lo = df.agg(F.min(col)).first()[0]
-    ok = lo is not None and lo >= bound
-    return CheckResult(name, ok, f"min({col})={lo} < {bound}" if not ok else "")
 
 
 def expect_monotone_counts(
@@ -93,30 +63,38 @@ def expect_all(results: Sequence[CheckResult]) -> tuple[bool, list[CheckResult]]
 class QualityObservation:
     """Binds an ``Observation`` to the metric config it was built with,
     so the check side can never drift from the observe side (a mismatch
-    would otherwise KeyError after the expensive action already ran)."""
+    would otherwise KeyError after the expensive action already ran).
+    ``name`` prefixes every check, so a failure names its layer."""
 
+    name: str
     obs: object
     no_null_cols: tuple[str, ...]
     min_bounds: dict[str, float]
 
+    @property
+    def metrics(self) -> dict:
+        """The collected metrics (blocks until the observed action has run)."""
+        return self.obs.get
+
+    @property
+    def n_rows(self) -> int:
+        return self.metrics["n_rows"]
+
+    def sum(self, col: str):
+        return self.metrics[f"sum__{col}"]
+
     def results(self) -> list[CheckResult]:
-        """Evaluate the collected metrics (blocks until the observed
-        frame's action has run)."""
-        vals = self.obs.get
-        out = [
-            CheckResult("nonempty", vals["n_rows"] > 0, "" if vals["n_rows"] else "no rows")
-        ]
+        """E2/E4/E5 checks over the collected metrics."""
+        m, pre = self.metrics, self.name
+        out = [CheckResult(f"{pre}:nonempty", m["n_rows"] > 0, "" if m["n_rows"] else "no rows")]
         for c in self.no_null_cols:
-            n = vals[f"nulls__{c}"]
-            out.append(
-                CheckResult(f"no_nulls:{c}", n == 0, f"null count: {n}" if n else "")
-            )
+            n = m[f"nulls__{c}"]
+            out.append(CheckResult(f"{pre}:no_nulls:{c}", n == 0, f"null count: {n}" if n else ""))
         for c, bound in self.min_bounds.items():
-            lo = vals[f"min__{c}"]
+            lo = m[f"min__{c}"]
             ok = lo is not None and lo >= bound
-            out.append(
-                CheckResult(f"min_bound:{c}", ok, f"min({c})={lo} < {bound}" if not ok else "")
-            )
+            detail = "" if ok else f"min({c})={lo} < {bound}"
+            out.append(CheckResult(f"{pre}:min_bound:{c}", ok, detail))
         return out
 
 
@@ -124,31 +102,29 @@ def observe_quality(
     df: DataFrame,
     no_null_cols: Sequence[str] = (),
     min_bounds: dict[str, float] | None = None,
+    sum_cols: Sequence[str] = (),
     name: str = "quality",
 ):
-    """Attach E2/E4/E5-style metrics to ``df`` via ``Dataset.observe`` so
-    they are collected DURING the action that already materializes the
-    frame (a sink write, a downstream aggregate) — zero extra scans,
-    versus one aggregate job per gate in the check-then-write pattern
-    above (and N full scans in the reference's per-column counts,
-    test_data_quality.py.py:23-28).
+    """Attach the row count, null counts of ``no_null_cols``, minimums of
+    the ``min_bounds`` columns and sums of ``sum_cols`` to ``df`` via
+    ``Dataset.observe``: they are collected DURING the action that
+    already materializes the frame (a sink write), so the gate costs no
+    extra scan, where a check-then-write gate costs one job per check and
+    the reference's per-column counts N full scans
+    (test_data_quality.py.py:23-28).
 
-    Returns ``(df_with_observation, QualityObservation)``; run any
-    action on the returned frame, then call ``.results()`` on the
-    handle — the metric list and the check list are bound together, so
-    they cannot diverge. At 100 TB this is the difference between quality
-    gates costing one extra full pass over the table and costing
-    nothing: the metrics ride the task that was already running.
+    Returns ``(df_with_observation, QualityObservation)``; run one action
+    on the returned frame, then read the handle. ``name`` must be unique
+    among the observations of one plan.
     """
     from pyspark.sql import Observation
 
     obs = Observation(name)
-    metrics = [F.count(F.lit(1)).alias("n_rows")]
-    for c in no_null_cols:
-        metrics.append(F.count(F.when(F.col(c).isNull(), 1)).alias(f"nulls__{c}"))
-    for c in (min_bounds or {}):
-        metrics.append(F.min(c).alias(f"min__{c}"))
-    handle = QualityObservation(
-        obs=obs, no_null_cols=tuple(no_null_cols), min_bounds=dict(min_bounds or {})
-    )
+    metrics = [
+        F.count(F.lit(1)).alias("n_rows"),
+        *[F.count(F.when(F.col(c).isNull(), 1)).alias(f"nulls__{c}") for c in no_null_cols],
+        *[F.min(c).alias(f"min__{c}") for c in (min_bounds or {})],
+        *[F.sum(c).alias(f"sum__{c}") for c in sum_cols],
+    ]
+    handle = QualityObservation(name, obs, tuple(no_null_cols), dict(min_bounds or {}))
     return df.observe(obs, *metrics), handle

@@ -1,54 +1,12 @@
-"""Window operators (reference W1-W4 generalized: gold_feature.py.py:27-38).
-
-All helpers take an explicit (partition, order) spec and emit columns in a
-single Window physical node when specs agree — Catalyst merges adjacent
-window expressions over the same spec, so stacking lag/rolling/rank here
-costs one shuffle + one sort total.
-"""
+"""Window operators (reference W1-W4 generalized: gold_feature.py.py:27-38;
+the gold layer's own lag/rolling features live in ``pipeline/gold.py``)."""
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window, WindowSpec
-
-
-def ordered_window(partition_by: Sequence[str], order_by: Sequence[str]) -> WindowSpec:
-    return Window.partitionBy(*partition_by).orderBy(*order_by)
-
-
-def lag_features(
-    df: DataFrame, col: str, offsets: Sequence[int], w: WindowSpec, prefix: str = "lag"
-) -> DataFrame:
-    """lag-k feature columns (reference W2/W3)."""
-    for k in offsets:
-        df = df.withColumn(f"{prefix}{k}_{col}", F.lag(col, k).over(w))
-    return df
-
-
-def trailing_mean(
-    df: DataFrame, col: str, n: int, w: WindowSpec, out: str | None = None
-) -> DataFrame:
-    """Trailing-n-rows mean excluding the current row (reference W4:
-    ``avg over rowsBetween(-n, -1)``)."""
-    return df.withColumn(out or f"mean_last{n}_{col}", F.avg(col).over(w.rowsBetween(-n, -1)))
-
-
-def running_total(df: DataFrame, col: str, w: WindowSpec, out: str | None = None) -> DataFrame:
-    """Cumulative sum from the partition start."""
-    frame = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return df.withColumn(out or f"running_{col}", F.sum(col).over(frame))
-
-
-def with_rank(df: DataFrame, w: WindowSpec) -> DataFrame:
-    """row_number/rank/dense_rank in one window pass. The order spec must
-    be total (include a unique tie-break) for row_number determinism."""
-    return (
-        df.withColumn("row_num", F.row_number().over(w))
-        .withColumn("rnk", F.rank().over(w))
-        .withColumn("dense_rnk", F.dense_rank().over(w))
-    )
+from pyspark.sql import DataFrame, Window
 
 
 def topk_per_group(

@@ -10,6 +10,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from grocery_store_sales_forecasting_etl_pipeline_spark.operators import quality as Q
+
 OUTPUT_TABLE = "analytics.sales_forecast_features"
 
 FEATURE_COLS = (
@@ -67,11 +69,13 @@ def build_features(sales_cleaned: DataFrame) -> DataFrame:
     )
 
 
-def run(spark: SparkSession, with_forecast: bool = True) -> DataFrame:
+def run(spark: SparkSession, with_forecast: bool = True) -> Q.QualityObservation:
     """Silver table → features (+ distributed GBT predictions) →
     ``analytics.sales_forecast_features`` partitioned by year (the
     reference writes a year-partitioned Delta path AND the tests read a
-    table; we always register the table — SURVEY.md §1)."""
+    table; we always register the table — SURVEY.md §1). Returns the
+    quality handle the write fills in; it is attached after the forecast
+    so that the GBT fit's own jobs cannot fire it."""
     features = build_features(spark.table("processed.sales_cleaned"))
     if with_forecast:
         from grocery_store_sales_forecasting_etl_pipeline_spark.ml.forecast import (
@@ -79,7 +83,14 @@ def run(spark: SparkSession, with_forecast: bool = True) -> DataFrame:
         )
 
         features = train_predict_global(features)
+    features, handle = Q.observe_quality(
+        features,
+        no_null_cols=(*FEATURE_COLS, LABEL_COL),
+        min_bounds={LABEL_COL: 0.0},
+        sum_cols=(LABEL_COL,),
+        name="gold",
+    )
     features.write.mode("overwrite").partitionBy("year").format("parquet").saveAsTable(
         OUTPUT_TABLE
     )
-    return spark.table(OUTPUT_TABLE)
+    return handle

@@ -19,8 +19,10 @@ surface, engine-side and scheduler-agnostic:
 
 Scale notes: orchestration is pure control flow on the driver — each
 stage's heavy lifting stays in its own module's distributed plan; the
-only driver-side state is per-stage status rows. The quality gate runs
-the E2-E6 checks (operators/quality.py), each a single Spark action.
+only driver-side state is per-stage status rows and the quality handles
+the silver and gold stages return. The quality gate evaluates the E2-E6
+checks (operators/quality.py) on metrics those writes observed, so it
+launches no Spark job of its own.
 """
 
 from __future__ import annotations
@@ -31,7 +33,6 @@ import traceback
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-import pyspark.sql.functions as F
 from pyspark.sql import SparkSession
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.operators import quality as Q
@@ -72,31 +73,28 @@ def _default_alert(stage: str, exc: BaseException) -> None:
     print(f"[pipeline-alert] stage={stage} failed: {exc}", file=sys.stderr)
 
 
-def run_quality_gates(spark: SparkSession) -> list[Q.CheckResult]:
-    """Cross-layer E2-E6 gate over the three written layers (reference
-    test_data_quality.py.py:13-94 run as a pipeline stage, not a test)."""
-    silver_df = spark.table(silver.OUTPUT_TABLE)
-    gold_df = spark.table(gold.OUTPUT_TABLE)
-    bronze_tx = spark.table("raw.transactions")
-
-    n_bronze = bronze_tx.count()
-    n_silver = silver_df.count()
-    n_gold = gold_df.count()
-    silver_total = silver_df.agg(F.sum("transactions")).first()[0]
-    gold_total = gold_df.agg(F.sum(gold.LABEL_COL)).first()[0]
-
+def quality_checks(
+    spark: SparkSession,
+    bronze_obs: Q.QualityObservation,
+    silver_obs: Q.QualityObservation,
+    gold_obs: Q.QualityObservation,
+) -> list[Q.CheckResult]:
+    """Cross-layer E2-E6 gate (reference test_data_quality.py.py:13-94
+    run as a pipeline stage, not a test) over the metrics the silver and
+    gold writes observed; reads only the gold schema, runs no job."""
     return [
-        Q.expect_nonempty(silver_df, "silver_nonempty"),
-        Q.expect_nonempty(gold_df, "gold_nonempty"),
-        Q.expect_columns(gold_df, [*gold.FEATURE_COLS, gold.LABEL_COL], "gold_columns"),
-        Q.expect_no_nulls(gold_df, [*gold.FEATURE_COLS, gold.LABEL_COL], "gold_no_nulls"),
-        Q.expect_min(gold_df, gold.LABEL_COL, 0.0, "gold_label_nonnegative"),
-        Q.expect_monotone_counts(
-            [("gold", n_gold), ("silver", n_silver), ("bronze", n_bronze)],
-            strict_first=True,
-            name="layer_counts",
+        *bronze_obs.results(),
+        *silver_obs.results(),
+        *gold_obs.results(),
+        Q.expect_columns(
+            spark.table(gold.OUTPUT_TABLE), [*gold.FEATURE_COLS, gold.LABEL_COL], "gold:columns"
         ),
-        Q.expect_mass_conservation(gold_total, silver_total, "transaction_mass"),
+        Q.expect_monotone_counts(
+            [(o.name, o.n_rows) for o in (gold_obs, silver_obs, bronze_obs)], name="layer_counts"
+        ),
+        Q.expect_mass_conservation(
+            gold_obs.sum(gold.LABEL_COL), silver_obs.sum("transactions"), "transaction_mass"
+        ),
     ]
 
 
@@ -135,8 +133,12 @@ def run_all(
         raise ValueError("mode='incremental' requires batch_date")
     alert = on_failure or _default_alert
 
-    def _quality(spark: SparkSession) -> None:
-        ok, failed = Q.expect_all(run_quality_gates(spark))
+    # what each stage's successful attempt returned (silver's and gold's
+    # quality handles)
+    returned: dict[str, object] = {}
+
+    def _quality() -> None:
+        ok, failed = Q.expect_all(quality_checks(spark, *returned["silver"], returned["gold"]))
         if not ok:
             raise QualityGateError(failed)
 
@@ -150,7 +152,7 @@ def run_all(
         ("bronze", _bronze),
         ("silver", lambda: silver.run(spark)),
         ("gold", lambda: gold.run(spark, with_forecast=with_forecast)),
-        ("quality", lambda: _quality(spark)),
+        ("quality", _quality),
     ]
     out = results if results is not None else {}
     for name, _ in stages:
@@ -168,7 +170,7 @@ def run_all(
         for attempt in range(1, max_attempts + 1):
             res.attempts = attempt
             try:
-                fn()
+                returned[name] = fn()
                 last_exc = None
                 break
             # Exception only: KeyboardInterrupt/SystemExit must abort the

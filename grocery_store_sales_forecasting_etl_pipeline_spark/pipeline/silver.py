@@ -18,6 +18,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from grocery_store_sales_forecasting_etl_pipeline_spark.operators import quality as Q
+
 OUTPUT_TABLE = "processed.sales_cleaned"
 
 
@@ -78,19 +80,26 @@ def build(
     )
 
 
-def run(spark: SparkSession) -> DataFrame:
+def run(spark: SparkSession) -> tuple[Q.QualityObservation, Q.QualityObservation]:
     """Catalog-to-catalog run (reference reads raw.*, overwrites
-    processed.sales_cleaned partitioned by year/month)."""
+    processed.sales_cleaned partitioned by year/month). Returns the
+    quality handles the write fills in: on the ``raw.transactions`` scan
+    (bronze) and on the written frame (silver)."""
     # raw tables enter with their lineage/partition columns (source_file,
     # year, month) exactly as in the reference — build() drops them
     # dynamically after the joins
-    out = build(
-        spark.table("raw.transactions"),
-        spark.table("raw.stores"),
-        spark.table("raw.holidays_events"),
-        spark.table("raw.oil"),
+    transactions, bronze_obs = Q.observe_quality(spark.table("raw.transactions"), name="bronze")
+    out, silver_obs = Q.observe_quality(
+        build(
+            transactions,
+            spark.table("raw.stores"),
+            spark.table("raw.holidays_events"),
+            spark.table("raw.oil"),
+        ),
+        sum_cols=("transactions",),
+        name="silver",
     )
     out.write.mode("overwrite").partitionBy("year", "month").format("parquet").saveAsTable(
         OUTPUT_TABLE
     )
-    return spark.table(OUTPUT_TABLE)
+    return bronze_obs, silver_obs

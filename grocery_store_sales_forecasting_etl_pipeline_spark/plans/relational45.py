@@ -149,8 +149,6 @@ def nearest_click_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Inter-purchase gap percentiles per market segment
 # ---------------------------------------------------------------------------
 
-_GAP_PCTS = (50, 90)
-
 _REPEAT_GAP_ORACLE = """
 WITH o AS (
   SELECT c.c_mktsegment AS segment, o.o_custkey AS custkey,

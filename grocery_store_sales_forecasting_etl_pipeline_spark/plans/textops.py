@@ -94,7 +94,7 @@ def doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     high and are filtered before training (generalizes the reference's
     quality-gate intent, test_data_quality.py.py:13-94, to corpus text).
 
-    Uses the NON-distinct ``functions/text.py:ngrams`` multiset (unlike
+    Uses the NON-distinct ``functions/text.py:ngrams_from_tokens`` multiset (unlike
     ``shingles``) because repetition needs every occurrence counted.
 
     Scale notes: all array-side JVM expressions (size/array_distinct over

@@ -1,4 +1,4 @@
-"""Table sinks: partitioned, append, path-based, and BUCKETED writers
+"""Table sinks: path-based and BUCKETED writers plus incremental loads
 (reference S6-S9 + the bucketing scale path SURVEY.md §4).
 
 Bucketing is the 100 TB co-location story: two tables bucketed by the
@@ -34,26 +34,6 @@ def resolve_format(df: DataFrame, fmt: str | None) -> str:
     OPTIMIZE/VACUUM/MERGE-capable tables where delta-spark is installed
     and portable parquet everywhere else."""
     return fmt if fmt is not None else ("delta" if delta_enabled(df.sparkSession) else "parquet")
-
-
-def write_partitioned(
-    df: DataFrame,
-    table: str,
-    partition_by: Sequence[str],
-    mode: str = "overwrite",
-    fmt: str | None = "parquet",
-) -> None:
-    """S6/S7: partitioned managed table (dynamic partition insert).
-    ``fmt=None`` → delta when available (resolve_format)."""
-    df.write.mode(mode).partitionBy(*partition_by).format(
-        resolve_format(df, fmt)
-    ).saveAsTable(table)
-
-
-def write_append(df: DataFrame, table: str, fmt: str | None = "parquet") -> None:
-    """S8: append sink (error logs, quarantine, incremental feeds).
-    ``fmt=None`` → delta when available."""
-    df.write.mode("append").format(resolve_format(df, fmt)).saveAsTable(table)
 
 
 def write_path(

@@ -1,0 +1,49 @@
+"""Lint: every top-level package function has a caller.
+
+Counts, by AST, the identifiers used in the package, ``tests/``,
+``tools/``, ``perfbench/`` and ``bench.py`` (names, attributes, imports)
+and fails on any top-level package function whose name occurs nowhere
+outside its own body. ``@register`` builders are exempt: the query
+registry calls them by name.
+"""
+
+from __future__ import annotations
+
+import ast
+from collections import Counter
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parents[1]
+PKG = ROOT / "grocery_store_sales_forecasting_etl_pipeline_spark"
+SCOPE = (PKG, ROOT / "tests", ROOT / "tools", ROOT / "perfbench")
+
+
+def _identifiers(tree: ast.AST) -> Counter:
+    return Counter(
+        n.id if isinstance(n, ast.Name) else n.attr if isinstance(n, ast.Attribute)
+        else n.name.rsplit(".", 1)[-1]
+        for n in ast.walk(tree)
+        if isinstance(n, (ast.Name, ast.Attribute, ast.alias))
+    )
+
+
+def _is_register(dec: ast.expr) -> bool:
+    target = dec.func if isinstance(dec, ast.Call) else dec
+    return getattr(target, "id", getattr(target, "attr", None)) == "register"
+
+
+def test_every_top_level_def_has_a_caller():
+    paths = [p for base in SCOPE for p in sorted(base.rglob("*.py"))] + [ROOT / "bench.py"]
+    trees = {p: ast.parse(p.read_text(), filename=str(p)) for p in paths}
+    used = sum((_identifiers(t) for t in trees.values()), Counter())
+    unreferenced = [
+        f"{p.relative_to(ROOT)}:{node.lineno} {node.name}"
+        for p, tree in trees.items()
+        if p.is_relative_to(PKG)
+        for node in tree.body
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+        and not any(_is_register(d) for d in node.decorator_list)
+        # a recursive call inside the def is not a caller
+        and used[node.name] == _identifiers(node)[node.name]
+    ]
+    assert not unreferenced, f"top-level defs with no caller (delete them): {unreferenced}"

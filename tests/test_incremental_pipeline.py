@@ -139,4 +139,4 @@ def test_observe_quality_flags_violations(spark):
     observed, handle = q.observe_quality(df, no_null_cols=("s",), min_bounds={"v": 0.0})
     observed.count()
     ok, failed = q.expect_all(handle.results())
-    assert not ok and {r.name for r in failed} == {"no_nulls:s", "min_bound:v"}
+    assert not ok and {r.name for r in failed} == {"quality:no_nulls:s", "quality:min_bound:v"}

@@ -4,9 +4,10 @@ pipeline/orchestrator.run_all, success and induced-failure paths."""
 
 from __future__ import annotations
 
+import pyspark.sql.functions as F
 import pytest
 
-from grocery_store_sales_forecasting_etl_pipeline_spark.pipeline import orchestrator
+from grocery_store_sales_forecasting_etl_pipeline_spark.pipeline import gold, orchestrator, silver
 from grocery_store_sales_forecasting_etl_pipeline_spark.sources import catalog
 from tests.test_pipeline import _write_fixtures
 
@@ -26,9 +27,20 @@ def test_run_all_happy_path(spark, tmp_path, clean_catalog):
     assert [r.status for r in results.values()] == ["ok"] * 5
     assert list(results) == ["setup", "bronze", "silver", "gold", "quality"]
     assert all(r.attempts == 1 for r in results.values())
-    # the quality stage really gated the written layers
-    gates = orchestrator.run_quality_gates(spark)
-    assert all(g.passed for g in gates), [g for g in gates if not g.passed]
+    # the written layers satisfy what the quality stage gated (a missing
+    # column fails the aggregate)
+    cols = [*gold.FEATURE_COLS, gold.LABEL_COL]
+    g = spark.table(gold.OUTPUT_TABLE).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.min(gold.LABEL_COL).alias("lo"),
+        F.sum(gold.LABEL_COL).alias("total"),
+        *[F.count(F.when(F.col(c).isNull(), 1)).alias(c) for c in cols],
+    ).first()
+    s = spark.table(silver.OUTPUT_TABLE).agg(
+        F.count(F.lit(1)).alias("n"), F.sum("transactions").alias("total")
+    ).first()
+    assert 0 < g.n < s.n <= spark.table("raw.transactions").count()
+    assert not any(g[c] for c in cols) and g.lo >= 0 and g.total <= s.total
     # no error rows on success
     assert spark.table(catalog.ERROR_LOG_TABLE).count() == 0
 
