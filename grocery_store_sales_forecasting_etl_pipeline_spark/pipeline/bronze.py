@@ -2,9 +2,19 @@
 
 Declares the six Kaggle-shaped source schemas verbatim (SURVEY.md §1) and
 ingests each CSV to ``raw.<name>`` with corrupt-record quarantine to
-``logs.quarantine`` — the OSS replacement for badRecordsPath (S3)."""
+``logs.quarantine`` — the OSS replacement for badRecordsPath (S3).
+
+The reference ingests its sources one after another; here every source
+runs on its own thread. At sf0.1 each source's write is a small job, so
+the stage is bound by job latency, not data, and overlapping the
+sources' jobs is what shortens it."""
 
 from __future__ import annotations
+
+import os
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
+from functools import partial
 
 from pyspark.sql import SparkSession
 from pyspark.sql.types import (
@@ -14,8 +24,13 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+from pyspark.util import inheritable_thread_target
 
-from grocery_store_sales_forecasting_etl_pipeline_spark.sources.csv_ingest import ingest_csv
+from grocery_store_sales_forecasting_etl_pipeline_spark.sources import maintenance
+from grocery_store_sales_forecasting_etl_pipeline_spark.sources.csv_ingest import (
+    ingest_csv,
+    prepare_clean,
+)
 
 
 def _s(*fields: tuple[str, type]) -> StructType:
@@ -83,29 +98,79 @@ SOURCE_KEYS: dict[str, tuple[str, ...]] = {
 }
 
 
+def _ingest_concurrently(
+    spark: SparkSession, ingests: dict[str, Callable[[], tuple[int, int]]]
+) -> dict[str, tuple[int, int]]:
+    """Run every source's ingest on its own thread and wait for all of
+    them. Each thread inherits the caller's job group, description and
+    tags, so every source's jobs carry them. Returns the results in
+    ``ingests`` order; when sources failed, raises the first failure in
+    that order once the others have finished."""
+    if not ingests:
+        return {}
+    with ThreadPoolExecutor(max_workers=len(ingests)) as pool:
+        futures = {
+            name: pool.submit(inheritable_thread_target(spark)(ingest))
+            for name, ingest in ingests.items()
+        }
+    return {name: future.result() for name, future in futures.items()}
+
+
 def run(spark: SparkSession, source_dir: str) -> dict[str, tuple[int, int]]:
     """Ingest every source CSV under ``source_dir`` (``<name>.csv``) to
-    ``raw.<name>``. Returns {name: (clean_rows, quarantined_rows)}.
-    Missing files raise (and are error-logged), matching the reference's
-    fail-visibly behavior."""
-    results = {}
-    for name, schema, by_date in SOURCES:
-        results[name] = ingest_csv(
-            spark,
-            path=f"{source_dir}/{name}.csv",
-            schema=schema,
-            table=f"raw.{name}",
-            quarantine_table=QUARANTINE_TABLE,
-            partition_by_date=by_date,
+    ``raw.<name>``, all sources at once (one write job each, plus one
+    quarantine append for a source with corrupt rows). Returns
+    {name: (clean_rows, quarantined_rows)} in ``SOURCES`` order.
+
+    A missing or failing source is error-logged and raised, matching the
+    reference's fail-visibly behavior, but only after the other sources
+    have finished: one failure no longer stops the sources after it."""
+    return _ingest_concurrently(
+        spark,
+        {
+            name: partial(
+                ingest_csv,
+                spark,
+                path=f"{source_dir}/{name}.csv",
+                schema=schema,
+                table=f"raw.{name}",
+                quarantine_table=QUARANTINE_TABLE,
+                partition_by_date=by_date,
+            )
+            for name, schema, by_date in SOURCES
+        },
+    )
+
+
+def _upsert_source(
+    spark: SparkSession, path: str, name: str, schema: StructType, by_date: bool
+) -> tuple[int, int]:
+    """Upsert one delivered file into ``raw.<name>``; see ``run_incremental``."""
+    clean, n_q = prepare_clean(spark, path, schema, QUARANTINE_TABLE, partition_by_date=by_date)
+    table = f"raw.{name}"
+    keys = list(SOURCE_KEYS[name])
+    if not spark.catalog.tableExists(table):
+        w = clean.write.mode("overwrite").format("parquet")
+        if by_date:
+            w = w.partitionBy("year", "month")
+        w.saveAsTable(table)
+        n = spark.table(table).count()
+    elif by_date and "date" in keys:
+        # partition column in the key => keys can't move partitions
+        n = maintenance.partition_upsert(
+            spark, table, clean, keys=keys, partition_cols=("year", "month")
         )
-    return results
+    else:
+        n = maintenance.merge_upsert(spark, table, clean, keys=keys)
+    return n, n_q
 
 
 def run_incremental(
     spark: SparkSession, source_dir: str, batch_date
 ) -> dict[str, tuple[int, int]]:
     """Ingest ONE daily folder ``<source_dir>/YYYY/MM/DD/<name>.csv``
-    (docx §Source layout), upserting into the existing ``raw.*`` tables:
+    (docx §Source layout), upserting into the existing ``raw.*`` tables,
+    every delivered source at once:
 
     - date-partitioned facts → ``partition_upsert`` keyed on the natural
       key (only the touched year/month partitions rewrite; a re-delivered
@@ -113,46 +178,23 @@ def run_incremental(
     - dimensions → ``merge_upsert`` on the natural key
     - a source absent from the day's folder is skipped (sources deliver
       on their own cadence), unlike the full run where absence raises
+    - a failing source is raised after the other sources have finished
 
     Returns {name: (rows_written, rows_quarantined)} for present
-    sources, where rows_written counts rows PHYSICALLY WRITTEN by the
-    branch taken — the whole post-merge table for ``merge_upsert`` (its
-    portable path rewrites the table), only the affected partitions for
-    ``partition_upsert``, the full initial load on table creation. It is
-    a write-cost metric, not "rows changed". Local existence probe is an
-    ``os.path`` check; on an object store this is the same single LIST
-    the reader would do anyway.
+    sources, in ``SOURCES`` order, where rows_written counts rows
+    PHYSICALLY WRITTEN by the branch taken — the whole post-merge table
+    for ``merge_upsert`` (its portable path rewrites the table), only the
+    affected partitions for ``partition_upsert``, the full initial load
+    on table creation. It is a write-cost metric, not "rows changed".
+    Local existence probe is an ``os.path`` check; on an object store
+    this is the same single LIST the reader would do anyway.
     """
-    import os
-
-    from grocery_store_sales_forecasting_etl_pipeline_spark.sources import maintenance
-    from grocery_store_sales_forecasting_etl_pipeline_spark.sources.csv_ingest import (
-        prepare_clean,
-    )
-
     day_dir = f"{source_dir}/{batch_date:%Y/%m/%d}"
-    results: dict[str, tuple[int, int]] = {}
-    for name, schema, by_date in SOURCES:
-        path = f"{day_dir}/{name}.csv"
-        if not os.path.exists(path):
-            continue
-        clean, n_q = prepare_clean(
-            spark, path, schema, QUARANTINE_TABLE, partition_by_date=by_date
-        )
-        table = f"raw.{name}"
-        keys = list(SOURCE_KEYS[name])
-        if not spark.catalog.tableExists(table):
-            w = clean.write.mode("overwrite").format("parquet")
-            if by_date:
-                w = w.partitionBy("year", "month")
-            w.saveAsTable(table)
-            n = spark.table(table).count()
-        elif by_date and "date" in keys:
-            # partition column in the key => keys can't move partitions
-            n = maintenance.partition_upsert(
-                spark, table, clean, keys=keys, partition_cols=("year", "month")
-            )
-        else:
-            n = maintenance.merge_upsert(spark, table, clean, keys=keys)
-        results[name] = (n, n_q)
-    return results
+    return _ingest_concurrently(
+        spark,
+        {
+            name: partial(_upsert_source, spark, f"{day_dir}/{name}.csv", name, schema, by_date)
+            for name, schema, by_date in SOURCES
+            if os.path.exists(f"{day_dir}/{name}.csv")
+        },
+    )

@@ -3,8 +3,10 @@ bronze_ingestion.py.py:32-46; table DDL grocery_setup.sql.py:24-29)."""
 
 from __future__ import annotations
 
+import threading
+
 import pyspark.sql.functions as F
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType, TimestampType
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.sources import catalog
@@ -17,6 +19,17 @@ ERROR_SCHEMA = StructType(
         StructField("source_file", StringType(), True),
     ]
 )
+
+# Concurrent appends to one parquet path share FileOutputCommitter's
+# ``_temporary`` directory, and the first two race to create the table.
+_AUDIT_LOCK = threading.Lock()
+
+
+def append_audit(df: DataFrame, table: str) -> None:
+    """Append ``df`` to a shared audit table (``logs.etl_errors``,
+    ``logs.quarantine``), one writer at a time."""
+    with _AUDIT_LOCK:
+        df.write.mode("append").saveAsTable(table)
 
 
 def log_error(
@@ -31,4 +44,4 @@ def log_error(
     row = spark.createDataFrame(
         [(message, None, stage, source_file)], schema=ERROR_SCHEMA
     ).withColumn("error_time", F.current_timestamp())
-    row.write.mode("append").saveAsTable(table)
+    append_audit(row, table)

@@ -22,6 +22,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
 
+from grocery_store_sales_forecasting_etl_pipeline_spark.sources.csv_ingest import write_split
 from grocery_store_sales_forecasting_etl_pipeline_spark.sources.error_log import log_error
 
 CORRUPT_COL = "_corrupt_record"
@@ -59,25 +60,8 @@ def ingest_jsonl(
     raw lines append to ``quarantine_table``, failures log a structured
     row to logs.etl_errors and re-raise. Returns (clean, quarantined)."""
     try:
-        df = read_jsonl_permissive(spark, path, schema).cache()
-        corrupt = df.filter(F.col(CORRUPT_COL).isNotNull()).select(
-            F.col(CORRUPT_COL).alias("raw_record"),
-            F.col("source_file"),
-            F.current_timestamp().alias("quarantined_at"),
-            F.lit(stage).alias("stage"),
-        )
-        clean = df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
-
-        n_quarantined = 0
-        if quarantine_table is not None:
-            n_quarantined = corrupt.count()
-            if n_quarantined:
-                corrupt.write.mode("append").saveAsTable(quarantine_table)
-
-        clean.write.mode("overwrite").format("parquet").saveAsTable(table)
-        n_clean = spark.table(table).count()
-        df.unpersist()
-        return n_clean, n_quarantined
+        df = read_jsonl_permissive(spark, path, schema)
+        return write_split(df, table, quarantine_table, stage=stage)
     except Exception as exc:  # noqa: BLE001 — same contract as reference E1
         log_error(spark, str(exc), stage=stage, source_file=path)
         raise

@@ -24,11 +24,20 @@ here unchanged.
 
 from __future__ import annotations
 
+import threading
 import uuid
 from collections.abc import Sequence
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+
+# partitionOverwriteMode is session-global and insertInto reads it when it
+# plans: a concurrent caller restoring "static" mid-insert would turn a
+# partition-scoped overwrite into a wipe of every other partition. Spark
+# 4.1's insertInto ignores the per-write option, and
+# writeTo().overwritePartitions() rejects v1 tables, so the flip and the
+# insert are serialized instead.
+_OVERWRITE_MODE_LOCK = threading.Lock()
 
 
 def merge_upsert(
@@ -183,14 +192,15 @@ def partition_upsert(
     try:
         staged = spark.table(staged_name)
         n = staged.count()
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            # insertInto with dynamic mode: only partitions present in
-            # `staged` are overwritten
-            staged.select(*target.columns).write.mode("overwrite").insertInto(table)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        with _OVERWRITE_MODE_LOCK:
+            prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
+            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+            try:
+                # insertInto with dynamic mode: only partitions present in
+                # `staged` are overwritten
+                staged.select(*target.columns).write.mode("overwrite").insertInto(table)
+            finally:
+                spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     finally:
         # always drop — a failed insertInto must not leak the staged table
         spark.sql(f"DROP TABLE IF EXISTS {staged_name}")

@@ -1,0 +1,142 @@
+"""Bronze ingests its sources concurrently (pipeline/bronze.py): one
+write job per source plus one quarantine append per source with corrupt
+rows, every job tagged with the caller's job group, and counts that match
+a recount. The shared audit tables and the session-global partition
+overwrite mode stay correct under concurrent writers."""
+
+from __future__ import annotations
+
+from concurrent.futures import ThreadPoolExecutor
+
+import pyspark.sql.functions as F
+import pytest
+from pyspark.util import inheritable_thread_target
+
+from grocery_store_sales_forecasting_etl_pipeline_spark.pipeline import bronze, orchestrator
+from grocery_store_sales_forecasting_etl_pipeline_spark.sources import catalog, maintenance
+from tests.test_pipeline import _write_fixtures
+
+GROUP = "bronze-under-test"
+
+
+def _job_ids(spark, group: str | None = None) -> set[int]:
+    """Jobs in ``group`` (None: jobs with no group), after the listener
+    bus has drained."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    return set(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _append(path, line: str) -> None:
+    with path.open("a") as f:
+        f.write("\n" + line)
+
+
+@pytest.fixture()
+def src(spark, tmp_path):
+    _write_fixtures(tmp_path)  # two malformed transactions lines
+    _append(tmp_path / "stores.csv", "notanint,Quito,state1,A,1")
+    catalog.drop_all(spark)
+    catalog.bootstrap(spark)
+    yield tmp_path
+    catalog.drop_all(spark)
+
+
+def _quarantined_by_source(spark) -> dict[str, int]:
+    rows = spark.table(bronze.QUARANTINE_TABLE).groupBy("source_file").count().collect()
+    return {r.source_file.rsplit("/", 1)[-1].removesuffix(".csv"): r["count"] for r in rows}
+
+
+def test_one_write_job_per_source_in_the_callers_group(spark, src):
+    sc = spark.sparkContext
+    ungrouped = _job_ids(spark)
+    sc.setJobGroup(GROUP, "bronze backfill")
+    try:
+        counts = bronze.run(spark, str(src))
+    finally:
+        sc._jsc.clearJobGroup()
+    assert _job_ids(spark) - ungrouped == set()
+    with_corrupt = [name for name, (_, n_q) in counts.items() if n_q]
+    assert sorted(with_corrupt) == ["stores", "transactions"]
+    assert len(_job_ids(spark, GROUP)) == len(bronze.SOURCES) + len(with_corrupt)
+
+    assert list(counts) == [name for name, _, _ in bronze.SOURCES]
+    quarantined = _quarantined_by_source(spark)
+    for name, (n_clean, n_q) in counts.items():
+        assert n_clean == spark.table(f"raw.{name}").count()
+        assert n_q == quarantined.get(name, 0)
+
+
+def test_concurrent_quarantine_appends_all_land(spark, src):
+    _append(src / "oil.csv", "2017-01-03,notadouble")
+    (src / "sample_submission.csv").write_text("id,sales")  # header only
+    counts = bronze.run(spark, str(src))
+    assert counts["sample_submission"] == (0, 0)
+    expected = {name: n_q for name, (_, n_q) in counts.items() if n_q}
+    assert expected == {"oil": 1, "stores": 1, "transactions": 2}
+    assert _quarantined_by_source(spark) == expected
+
+
+def test_failing_sources_are_each_logged_and_the_rest_still_load(spark, src):
+    missing = ("oil", "test")
+    for name in missing:
+        (src / f"{name}.csv").unlink()
+    with pytest.raises(orchestrator.PipelineError) as err:
+        orchestrator.run_all(spark, str(src), with_forecast=False)
+    assert err.value.stage == "bronze"
+    errors = spark.table(catalog.ERROR_LOG_TABLE)
+    per_source = errors.filter(F.col("stage") == "bronze_ingestion").collect()
+    assert sorted(r.source_file for r in per_source) == [f"{src}/{n}.csv" for n in missing]
+    assert errors.filter(F.col("stage") == "bronze").count() == 1
+    assert errors.count() == len(missing) + 1
+    # one failing source no longer stops the sources after it
+    loaded = [n for n, _, _ in bronze.SOURCES if n not in missing]
+    assert all(spark.catalog.tableExists(f"raw.{n}") for n in loaded)
+
+
+def test_concurrent_partition_upserts_keep_untouched_partitions(spark):
+    mode = "spark.sql.sources.partitionOverwriteMode"
+    prior = spark.conf.get(mode, "static")
+    tables = ("upsert_race.a", "upsert_race.b")
+    months = (1, 2, 3)
+    schema = "k int, v int, month int"
+    spark.sql("CREATE DATABASE IF NOT EXISTS upsert_race")
+    try:
+        for t in tables:
+            rows = [(k, 0, m) for m in months for k in range(2)]
+            spark.createDataFrame(rows, schema).write.mode("overwrite").format(
+                "parquet"
+            ).partitionBy("month").saveAsTable(t)
+
+        def upsert(table: str, month: int, v: int) -> None:
+            updates = spark.createDataFrame([(0, v, month)], schema)
+            maintenance.partition_upsert(
+                spark, table, updates, keys=("k", "month"), partition_cols=("month",)
+            )
+
+        for rnd in range(10):
+            month = months[rnd % len(months)]
+            with ThreadPoolExecutor(max_workers=len(tables)) as pool:
+                futures = [
+                    pool.submit(inheritable_thread_target(spark)(upsert), t, month, rnd + 1)
+                    for t in tables
+                ]
+            for future in futures:
+                future.result()
+            for t in tables:
+                per_month = {
+                    r.month: (r.n, r.v0)
+                    for r in spark.table(t)
+                    .groupBy("month")
+                    .agg(
+                        F.count(F.lit(1)).alias("n"),
+                        F.max(F.when(F.col("k") == 0, F.col("v"))).alias("v0"),
+                    )
+                    .collect()
+                }
+                # every partition survives; only the upserted one changed
+                assert {m: n for m, (n, _) in per_month.items()} == dict.fromkeys(months, 2), t
+                assert per_month[month][1] == rnd + 1, t
+        assert spark.conf.get(mode, "static") == prior
+    finally:
+        spark.sql("DROP DATABASE IF EXISTS upsert_race CASCADE")
