@@ -146,16 +146,12 @@ def _upsert_source(
     spark: SparkSession, path: str, name: str, schema: StructType, by_date: bool
 ) -> tuple[int, int]:
     """Upsert one delivered file into ``raw.<name>``; see ``run_incremental``."""
-    clean, n_q = prepare_clean(spark, path, schema, QUARANTINE_TABLE, partition_by_date=by_date)
     table = f"raw.{name}"
-    keys = list(SOURCE_KEYS[name])
     if not spark.catalog.tableExists(table):
-        w = clean.write.mode("overwrite").format("parquet")
-        if by_date:
-            w = w.partitionBy("year", "month")
-        w.saveAsTable(table)
-        n = spark.table(table).count()
-    elif by_date and "date" in keys:
+        return ingest_csv(spark, path, schema, table, QUARANTINE_TABLE, partition_by_date=by_date)
+    clean, n_q = prepare_clean(spark, path, schema, QUARANTINE_TABLE, partition_by_date=by_date)
+    keys = list(SOURCE_KEYS[name])
+    if by_date and "date" in keys:
         # partition column in the key => keys can't move partitions
         n = maintenance.partition_upsert(
             spark, table, clean, keys=keys, partition_cols=("year", "month")
@@ -176,6 +172,9 @@ def run_incremental(
       key (only the touched year/month partitions rewrite; a re-delivered
       batch replays idempotently and corrected values win)
     - dimensions → ``merge_upsert`` on the natural key
+    - a source whose ``raw.<name>`` does not exist yet is loaded by
+      ``ingest_csv``, the full run's write (one write job, plus one
+      quarantine append when it has corrupt rows)
     - a source absent from the day's folder is skipped (sources deliver
       on their own cadence), unlike the full run where absence raises
     - a failing source is raised after the other sources have finished
@@ -184,8 +183,9 @@ def run_incremental(
     sources, in ``SOURCES`` order, where rows_written counts rows
     PHYSICALLY WRITTEN by the branch taken — the whole post-merge table
     for ``merge_upsert`` (its portable path rewrites the table), only the
-    affected partitions for ``partition_upsert``, the full initial load
-    on table creation. It is a write-cost metric, not "rows changed".
+    affected partitions for ``partition_upsert``, the clean rows of the
+    initial load on table creation. It is a write-cost metric, not "rows
+    changed".
     Local existence probe is an ``os.path`` check; on an object store
     this is the same single LIST the reader would do anyway.
     """

@@ -20,18 +20,14 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import StructType
 
-from grocery_store_sales_forecasting_etl_pipeline_spark.sources.csv_ingest import write_split
+from grocery_store_sales_forecasting_etl_pipeline_spark.sources.csv_ingest import (
+    CORRUPT_COL,
+    _with_corrupt_capture,
+    write_split,
+)
 from grocery_store_sales_forecasting_etl_pipeline_spark.sources.error_log import log_error
-
-CORRUPT_COL = "_corrupt_record"
-
-
-def _with_corrupt_capture(schema: StructType) -> StructType:
-    if any(f.name == CORRUPT_COL for f in schema.fields):
-        return schema
-    return StructType(list(schema.fields) + [StructField(CORRUPT_COL, StringType(), True)])
 
 
 def read_jsonl_permissive(spark: SparkSession, path: str, schema: StructType) -> DataFrame:

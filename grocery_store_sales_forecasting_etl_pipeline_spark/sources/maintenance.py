@@ -6,20 +6,21 @@ The reference docx declares intent the notebooks never implement
 periodically" — SURVEY.md §4): the code actually full-overwrites. This
 module supplies the real operations, Delta-free:
 
-- ``merge_upsert``: keyed MERGE = target ∖ updates (left-anti) ∪ updates,
-  rewritten atomically via overwrite. Correct but rewrites the table —
-  use for dims/small tables.
+- ``merge_upsert``: keyed MERGE = target ∖ updates (left-anti) ∪ updates.
+  Correct but rewrites the table — use for dims/small tables.
 - ``partition_upsert``: the 100 TB path — only partitions present in the
   update batch are rewritten (dynamic partition overwrite); untouched
   partitions are never read or written. A daily 1-partition update to a
   3-year table costs 1/1000th of the full rewrite.
-- ``compact_table``: rewrite a table (or partition subset) into
-  ``target_files`` files per partition — the small-files fix after many
-  appends.
+- ``compact_table``: rewrite a table into ``target_files`` files per
+  partition — the small-files fix after many appends.
 
-Vacuum has no parquet analog (overwrite replaces data in place via the
-metastore swap); with Delta installed, ``OPTIMIZE``/``VACUUM`` slot in
-here unchanged.
+All three overwrite through ``rewrite_staged``: the new rows go to a
+stage table, which is then ``insertInto``'d over the table.
+
+Vacuum has no parquet analog (an overwrite deletes the files it
+replaces, leaving nothing stale to clean up); with Delta installed,
+``OPTIMIZE``/``VACUUM`` slot in here unchanged.
 """
 
 from __future__ import annotations
@@ -29,7 +30,7 @@ import uuid
 from collections.abc import Sequence
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 # partitionOverwriteMode is session-global and insertInto reads it when it
 # plans: a concurrent caller restoring "static" mid-insert would turn a
@@ -38,6 +39,37 @@ from pyspark.sql import DataFrame, SparkSession
 # writeTo().overwritePartitions() rejects v1 tables, so the flip and the
 # insert are serialized instead.
 _OVERWRITE_MODE_LOCK = threading.Lock()
+_OVERWRITE_MODE = "spark.sql.sources.partitionOverwriteMode"
+
+
+def rewrite_staged(spark: SparkSession, table: str, df: DataFrame, dynamic: bool = False) -> int:
+    """Overwrite ``table`` with ``df`` through a stage table; returns the
+    rows written, counted by an ``Observation`` on the stage write.
+
+    ``df`` may read ``table`` (an upsert's merged plan does), so it is
+    materialized first: a cache is no barrier, since lost blocks would
+    recompute from the half-overwritten table. The insert selects the
+    table's columns by name and keeps its schema and partitioning;
+    ``dynamic`` overwrites only the partitions present in ``df``. The
+    stage name is unique per call, so concurrent rewrites of one table
+    never share a stage, and the stage is always dropped."""
+    stage = f"{table}__stage_{uuid.uuid4().hex[:12]}"
+    rows = Observation()
+    try:
+        df.observe(rows, F.count(F.lit(1)).alias("n")).write.mode("overwrite").format(
+            "parquet"
+        ).saveAsTable(stage)
+        columns = spark.table(table).columns
+        with _OVERWRITE_MODE_LOCK:
+            prev = spark.conf.get(_OVERWRITE_MODE, "static")
+            spark.conf.set(_OVERWRITE_MODE, "dynamic" if dynamic else "static")
+            try:
+                spark.table(stage).select(*columns).write.mode("overwrite").insertInto(table)
+            finally:
+                spark.conf.set(_OVERWRITE_MODE, prev)
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {stage}")
+    return rows.get["n"]
 
 
 def merge_upsert(
@@ -51,7 +83,7 @@ def merge_upsert(
     INTO`` — transactional, no staged-table barrier, and only touched
     files rewrite (the docx §"Data Write" upsert intent, first-class).
     The portable parquet path below stays the default everywhere else:
-    one left-anti shuffle on the keys + union + full rewrite.
+    one left-anti shuffle on the keys + union + a full ``rewrite_staged``.
     """
     target = spark.table(table)
     missing = set(target.columns) ^ set(updates.columns)
@@ -60,8 +92,7 @@ def merge_upsert(
     if _is_delta_table(spark, table):
         return _merge_upsert_delta(spark, table, updates, keys)
     kept = target.join(updates.select(*keys), on=list(keys), how="left_anti")
-    merged = kept.unionByName(updates)
-    return _overwrite_via_staged(spark, table, merged)
+    return rewrite_staged(spark, table, kept.unionByName(updates))
 
 
 def _is_delta_table(spark: SparkSession, table: str) -> bool:
@@ -110,31 +141,6 @@ def _merge_upsert_delta(
     return spark.table(table).count()
 
 
-def _table_partition_cols(spark: SparkSession, table: str) -> list[str]:
-    """The table's partition columns from the catalog (empty when
-    unpartitioned) — one metadata call, no data scan."""
-    return [c.name for c in spark.catalog.listColumns(table) if c.isPartition]
-
-
-def _overwrite_via_staged(spark: SparkSession, table: str, merged: DataFrame) -> int:
-    # re-apply the table's own partitioning on the rewrite: without this
-    # the first merge_upsert on a partitioned table silently flattens it
-    # (values stay correct; partition pruning is lost)
-    part_cols = _table_partition_cols(spark, table)
-    # materialize before overwriting the table being read
-    merged.cache()
-    n = merged.count()
-    merged.write.mode("overwrite").format("parquet").saveAsTable(f"{table}__staged")
-    staged = spark.table(f"{table}__staged")
-    w = staged.write.mode("overwrite").format("parquet")
-    if part_cols:
-        w = w.partitionBy(*part_cols)
-    w.saveAsTable(table)
-    spark.sql(f"DROP TABLE {table}__staged")
-    merged.unpersist()
-    return n
-
-
 def partition_upsert(
     spark: SparkSession,
     table: str,
@@ -176,35 +182,8 @@ def partition_upsert(
             )
     old_affected = target.join(F.broadcast(affected), on=list(partition_cols), how="left_semi")
     kept = old_affected.join(updates.select(*keys), on=list(keys), how="left_anti")
-    # USING-joins move key columns first; insertInto is POSITIONAL —
-    # restore the table's column order explicitly
-    merged = kept.unionByName(updates.select(*target.columns)).select(*target.columns)
-    # REAL materialization barrier (merge_upsert's __staged pattern): the
-    # merged plan reads the same partitions the dynamic overwrite below
-    # rewrites. cache()+count() is NOT a barrier — lost cached blocks
-    # (executor failure/eviction) would recompute from the
-    # partially-overwritten source and silently corrupt the table.
-    # per-run unique suffix: two concurrent upserts on the same table must
-    # not share a staged name (the second overwrite would clobber the
-    # first's materialization barrier mid-flight)
-    staged_name = f"{table}__staged_parts_{uuid.uuid4().hex[:12]}"
-    merged.write.mode("overwrite").format("parquet").saveAsTable(staged_name)
-    try:
-        staged = spark.table(staged_name)
-        n = staged.count()
-        with _OVERWRITE_MODE_LOCK:
-            prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
-                # insertInto with dynamic mode: only partitions present in
-                # `staged` are overwritten
-                staged.select(*target.columns).write.mode("overwrite").insertInto(table)
-            finally:
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    finally:
-        # always drop — a failed insertInto must not leak the staged table
-        spark.sql(f"DROP TABLE IF EXISTS {staged_name}")
-    return n
+    merged = kept.unionByName(updates.select(*target.columns))
+    return rewrite_staged(spark, table, merged, dynamic=True)
 
 
 def compact_table(
@@ -216,22 +195,7 @@ def compact_table(
     """OPTIMIZE analog: rewrite the table with ``target_files`` files
     (per partition when partitioned) to fix small-file proliferation
     from appends. Uses repartition so the write is parallel."""
-    def _write(df: DataFrame, name: str) -> None:
-        w = df.write.mode("overwrite").format("parquet")
-        if partition_cols:
-            w = w.partitionBy(*partition_cols)
-        w.saveAsTable(name)
-
-    df = spark.table(table)
-    if partition_cols:
-        df = df.repartition(target_files, *[F.col(c) for c in partition_cols])
-    else:
-        df = df.repartition(target_files)
-    # stage → swap: never overwrite a parquet table from a plan that is
-    # still reading it
-    _write(df, f"{table}__compacted")
-    _write(spark.table(f"{table}__compacted"), table)
-    spark.sql(f"DROP TABLE {table}__compacted")
+    rewrite_staged(spark, table, spark.table(table).repartition(target_files, *partition_cols))
 
 
 def scd2_merge(

@@ -329,7 +329,7 @@ def stream_scd2_to_table(
             current, batch_df, keys=list(keys), version=batch_id, validate=True
         )
         if exists:
-            maintenance._overwrite_via_staged(spark, table, merged)
+            maintenance.rewrite_staged(spark, table, merged)
         else:
             merged.write.mode("overwrite").format("parquet").saveAsTable(table)
 

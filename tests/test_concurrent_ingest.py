@@ -1,12 +1,15 @@
 """Bronze ingests its sources concurrently (pipeline/bronze.py): one
 write job per source plus one quarantine append per source with corrupt
 rows, every job tagged with the caller's job group, and counts that match
-a recount. The shared audit tables and the session-global partition
-overwrite mode stay correct under concurrent writers."""
+a recount; a first daily load writes the same way. The shared audit
+tables and the session-global partition overwrite mode stay correct
+under concurrent writers, and a partition upsert's job count is pinned."""
 
 from __future__ import annotations
 
+import datetime as dt
 from concurrent.futures import ThreadPoolExecutor
+from functools import partial
 
 import pyspark.sql.functions as F
 import pytest
@@ -25,6 +28,18 @@ def _job_ids(spark, group: str | None = None) -> set[int]:
     sc = spark.sparkContext
     sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
     return set(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _run_in_group(spark, group: str, fn):
+    """``fn()`` with its jobs in ``group``; returns its result and the
+    number of jobs it launched."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return out, len(_job_ids(spark, group))
 
 
 def _append(path, line: str) -> None:
@@ -47,24 +62,35 @@ def _quarantined_by_source(spark) -> dict[str, int]:
     return {r.source_file.rsplit("/", 1)[-1].removesuffix(".csv"): r["count"] for r in rows}
 
 
-def test_one_write_job_per_source_in_the_callers_group(spark, src):
-    sc = spark.sparkContext
-    ungrouped = _job_ids(spark)
-    sc.setJobGroup(GROUP, "bronze backfill")
-    try:
-        counts = bronze.run(spark, str(src))
-    finally:
-        sc._jsc.clearJobGroup()
-    assert _job_ids(spark) - ungrouped == set()
+def _assert_written_once(spark, counts: dict, n_jobs: int) -> None:
+    """One write job per source plus one append per source with corrupt
+    rows, and counts equal to a recount of each table and the quarantine."""
     with_corrupt = [name for name, (_, n_q) in counts.items() if n_q]
     assert sorted(with_corrupt) == ["stores", "transactions"]
-    assert len(_job_ids(spark, GROUP)) == len(bronze.SOURCES) + len(with_corrupt)
-
+    assert n_jobs == len(bronze.SOURCES) + len(with_corrupt)
     assert list(counts) == [name for name, _, _ in bronze.SOURCES]
     quarantined = _quarantined_by_source(spark)
     for name, (n_clean, n_q) in counts.items():
         assert n_clean == spark.table(f"raw.{name}").count()
         assert n_q == quarantined.get(name, 0)
+
+
+def test_one_write_job_per_source_in_the_callers_group(spark, src):
+    ungrouped = _job_ids(spark)
+    counts, n_jobs = _run_in_group(spark, GROUP, lambda: bronze.run(spark, str(src)))
+    assert _job_ids(spark) - ungrouped == set()
+    _assert_written_once(spark, counts, n_jobs)
+
+
+def test_first_daily_load_writes_once_per_source(spark, src):
+    day = dt.date(2017, 1, 5)
+    day_dir = src / f"{day:%Y/%m/%d}"
+    day_dir.mkdir(parents=True)
+    for csv in src.glob("*.csv"):
+        csv.rename(day_dir / csv.name)
+    # no count job: the first load observes its counts while it writes
+    load = partial(bronze.run_incremental, spark, str(src), day)
+    _assert_written_once(spark, *_run_in_group(spark, "first-load", load))
 
 
 def test_concurrent_quarantine_appends_all_land(spark, src):
@@ -140,3 +166,23 @@ def test_concurrent_partition_upserts_keep_untouched_partitions(spark):
         assert spark.conf.get(mode, "static") == prior
     finally:
         spark.sql("DROP DATABASE IF EXISTS upsert_race CASCADE")
+
+
+def test_partition_upsert_job_count(spark):
+    spark.sql("CREATE DATABASE IF NOT EXISTS upsert_jobs")
+    try:
+        spark.sql(
+            "CREATE TABLE upsert_jobs.t USING parquet PARTITIONED BY (month) AS "
+            "SELECT * FROM VALUES (0, 0, 1), (1, 0, 1), (0, 0, 2), (1, 0, 2) AS s(k, v, month)"
+        )
+        # a VALUES batch carries size statistics: its joins are planned as
+        # broadcasts up front, so AQE has no join strategy to race on
+        updates = spark.sql("SELECT * FROM VALUES (0, 9, 2), (5, 9, 2) AS u(k, v, month)")
+        upsert = partial(
+            maintenance.partition_upsert, spark, "upsert_jobs.t", updates, ("k", "month"), ("month",)
+        )
+        # four jobs write the stage (AQE runs its shuffle and broadcasts as
+        # jobs of their own) and one inserts it; counting the stage adds two
+        assert _run_in_group(spark, "partition-upsert", upsert) == (3, 5)
+    finally:
+        spark.sql("DROP DATABASE IF EXISTS upsert_jobs CASCADE")

@@ -106,6 +106,10 @@ def test_partition_upsert_detects_cross_partition_key_movement(spark, partitione
         )
 
 
+def _tables(spark, db: str) -> set[str]:
+    return {t.name for t in spark.catalog.listTables(db)}
+
+
 def test_partition_upsert_stages_before_overwrite(spark, partitioned_table):
     updates = spark.createDataFrame(
         [(1, 111.0, "2024-01")], "id long, v double, month string"
@@ -115,10 +119,48 @@ def test_partition_upsert_stages_before_overwrite(spark, partitioned_table):
         check_key_movement=True,
     )
     assert n == 2  # merged rows of the affected 2024-01 partition
-    # the staging table must not survive a successful run
-    assert not spark.catalog.tableExists(f"{partitioned_table}__staged_parts")
+    # the stage table must not survive a successful run
+    assert _tables(spark, "mxdb2") == {"t"}
     got = {r.id: r.v for r in spark.table(partitioned_table).collect()}
     assert got == {1: 111.0, 2: 20.0, 3: 30.0}
+
+
+@pytest.mark.parametrize("rewrite", ["merge", "partition", "compact"])
+def test_rewrite_drops_its_stage_and_survives_a_failed_insert(
+    spark, partitioned_table, monkeypatch, rewrite
+):
+    """A rewrite leaves no stage table behind. When its insert from the
+    stage fails, the table keeps its rows, the stage is dropped, nothing
+    stays cached and the overwrite mode is back at its prior value (set
+    here to the one the rewrite does not use)."""
+    from pyspark.sql import DataFrameWriter
+
+    def fail(*args, **kwargs):
+        raise RuntimeError("insert failed")
+
+    t, mode = partitioned_table, "spark.sql.sources.partitionOverwriteMode"
+    updates = spark.createDataFrame([(2, 99.0, "2024-01")], "id long, v double, month string")
+    run = {
+        "merge": lambda: mx.merge_upsert(spark, t, updates, keys=["id"]),
+        "partition": lambda: mx.partition_upsert(spark, t, updates, ["id"], ["month"]),
+        "compact": lambda: mx.compact_table(spark, t, partition_cols=["month"]),
+    }[rewrite]
+    run()
+    assert _tables(spark, "mxdb2") == {"t"}
+    before = sorted(map(tuple, spark.table(t).collect()))
+    prior = "static" if rewrite == "partition" else "dynamic"
+    spark.catalog.clearCache()
+    monkeypatch.setattr(DataFrameWriter, "insertInto", fail)
+    spark.conf.set(mode, prior)
+    try:
+        with pytest.raises(RuntimeError, match="insert failed"):
+            run()
+        assert spark.conf.get(mode) == prior
+    finally:
+        spark.conf.unset(mode)
+    assert sorted(map(tuple, spark.table(t).collect())) == before
+    assert _tables(spark, "mxdb2") == {"t"}
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def _delta_importable() -> bool:
@@ -191,7 +233,8 @@ def test_merge_upsert_preserves_partitioning(spark, partitioned_table):
     )
     n = mx.merge_upsert(spark, partitioned_table, updates, keys=["id"])
     assert n == 4
-    assert mx._table_partition_cols(spark, partitioned_table) == ["month"]
+    parts = [c.name for c in spark.catalog.listColumns(partitioned_table) if c.isPartition]
+    assert parts == ["month"]
     rows = {r.id: (r.v, r.month) for r in spark.table(partitioned_table).collect()}
     assert rows == {1: (10.0, "2024-01"), 2: (99.0, "2024-01"), 3: (30.0, "2024-02"), 4: (40.0, "2024-03")}
     # physical layout really is partitioned (directory per month)
