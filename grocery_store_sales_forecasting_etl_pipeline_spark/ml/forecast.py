@@ -78,13 +78,9 @@ def train_predict_global(
             .withColumn(PREDICTION_COL, F.col("prediction"))
             .drop("__features", "prediction")
         )
-        # Materialize the prediction BEFORE releasing the cache, or the
-        # returned lazy frame would recompute the whole upstream feature
-        # pipeline uncached at collect time. localCheckpoint truncates
-        # lineage and its blocks are reference-counted (GC-cleaned when
-        # the caller drops the frame) — unlike CacheManager entries from
-        # persist(), which otherwise pin executor memory for the whole
-        # session across repeated calls.
+        # Materialize before the cache is released, or the returned frame
+        # recomputes the feature pipeline uncached; this cuts the lineage,
+        # and unlike persist() its blocks go when the caller drops the frame.
         return pred.localCheckpoint(eager=True)
     finally:
         assembled.unpersist()

@@ -224,16 +224,8 @@ def jaccard_pairs(
             .filter(F.col("__df") <= max_df)
             .drop("__df")
         )
-    # `sh` feeds sizes AND both self-join sides (3 recomputes of the
-    # tokenize+explode+window without materialization). The checkpoint
-    # decision is SCALE-DEPENDENT, so it adapts on input size: at small
-    # corpora materializing costs more than the recomputes save (A/B at
-    # sf1/6.8 MB: 8.5s checkpointed vs 7.2s recomputed), but past the
-    # point where the exploded frame stops fitting the page cache the
-    # recomputes dominate the whole query (A/B at sf10/84 MB: 209.3s
-    # recomputed vs 67.1s checkpointed — 3.1x). localCheckpoint, never
-    # persist(): the plan cache would silently serve a benchmark's
-    # second run (BASELINE.md r5).
+    # `sh` feeds sizes AND both self-join sides; whether to materialize it
+    # depends on input size (A/B sf1: 8.5 s with, 7.2 s without).
     if materialize_shingles is None:
         size = _plan_bytes(df)
         materialize_shingles = size >= _SHINGLE_MATERIALIZE_MIN_INPUT_BYTES
@@ -243,7 +235,7 @@ def jaccard_pairs(
             "localCheckpoint" if materialize_shingles else "recompute",
         )
     if materialize_shingles:
-        sh = sh.localCheckpoint(eager=False)
+        sh = sh.localCheckpoint(eager=False)  # A/B sf10: 67.1 s with, 209.3 s without
     sizes = sh.groupBy(id_col).agg(F.count("*").cast("long").alias("sz"))
     a = sh.alias("a")
     b = sh.alias("b")

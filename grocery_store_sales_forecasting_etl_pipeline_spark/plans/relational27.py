@@ -126,7 +126,7 @@ def ship_delay_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.abs(F.col("cum_r") * F.col("n_n") - F.col("cum_n") * F.col("n_r")).alias("diff"),
         "n_r",
         "n_n",
-    ).localCheckpoint(eager=False)
+    )
     mx = s.agg(F.max("diff").alias("mx"))
     return (
         s.crossJoin(F.broadcast(mx))

@@ -76,22 +76,13 @@ def event_funnel_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = _t(spark, sf_dir, "events")
     hop = F.expr(f"INTERVAL {_HOP_DAYS} DAY")
-    # each hop anchor frame (user-grain) feeds BOTH the next hop and
-    # the final margin join — checkpoint them so the event scan runs
-    # once per hop (3 scans) instead of re-expanding per consumer (6)
-    s = (
-        e.filter(F.col("event_type") == "signup")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t0"))
-        .localCheckpoint(eager=False)
-    )
+    s = e.filter(F.col("event_type") == "signup").groupBy("user_id").agg(F.min("ts").alias("t0"))
     c = (
         e.filter(F.col("event_type") == "click")
         .join(s, "user_id")
         .filter((F.col("ts") > F.col("t0")) & (F.col("ts") <= F.col("t0") + hop))
         .groupBy("user_id")
         .agg(F.min("ts").alias("t1"))
-        .localCheckpoint(eager=False)
     )
     p = (
         e.filter(F.col("event_type") == "purchase")

@@ -144,7 +144,7 @@ def promo_uplift_did(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = r.groupBy("is_promo", "is_after").agg(
         F.count("*").cast("long").alias("n_lines"),
         F.sum("cents").cast("long").alias("cents"),
-    ).localCheckpoint(eager=False)
+    )
 
     def cell(promo, after):
         return F.max(

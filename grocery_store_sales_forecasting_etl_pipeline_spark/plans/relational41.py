@@ -286,7 +286,6 @@ def zipf_slope_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "r", F.row_number().over(Window.orderBy(F.col("n").desc(), "token"))
         )
         .filter(F.col("r") <= _ZIPF_K)
-        .localCheckpoint(eager=False)
     )
     xy = rk.select(
         F.log(F.col("r").cast("double")).alias("x"),
@@ -370,7 +369,6 @@ def doc_unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("token").isNotNull())
     )
     cnt = tok.groupBy("token").agg(F.count("*").cast("long").alias("c"))
-    cnt = cnt.localCheckpoint(eager=False)
     tot = cnt.agg(
         F.sum("c").cast("long").alias("n"), F.count("*").cast("long").alias("v")
     )

@@ -194,9 +194,8 @@ def theil_sen_weekly_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     BIGINT early at cent scale).
 
     Scale notes: the quadratic stage runs on the CALENDAR-bounded week
-    grain (~100 rows at any data scale, the Kendall discipline):
-    localCheckpoint stops the pair join re-running the fact fold per
-    side; the fact itself is scanned once, map-side combined.
+    grain (~100 rows at any data scale, the Kendall discipline); the
+    fact fold is map-side combined.
     """
     li = _t(spark, sf_dir, "lineitem")
     monday = F.date_sub(
@@ -214,7 +213,7 @@ def theil_sen_weekly_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("x"),
         "y",
-    ).localCheckpoint(eager=False)
+    )
     a = w.select(F.col("x").alias("xa"), F.col("y").alias("ya"))
     b = w.select(F.col("x").alias("xb"), F.col("y").alias("yb"))
     p = a.join(F.broadcast(b), F.col("xa") < F.col("xb")).select(
@@ -535,9 +534,7 @@ def empirical_bayes_return_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale notes: ONE fact scan folds to part grain (map-side
     combinable); the prior is a 1-row second-level fold over the
-    part-grain frame, crossJoined back as a broadcast literal;
-    localCheckpoint stops the two consumers (moment fold, output
-    projection) re-running the fact fold.
+    part-grain frame, crossJoined back as a broadcast literal.
     """
     li = _t(spark, sf_dir, "lineitem")
     pr = (
@@ -548,7 +545,6 @@ def empirical_bayes_return_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("n_returns"),
         )
-        .localCheckpoint(eager=False)
     )
     rate = F.col("n_returns") * 1.0 / F.col("n_lines")
     mom = pr.agg(

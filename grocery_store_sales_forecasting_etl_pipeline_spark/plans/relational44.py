@@ -116,7 +116,7 @@ def huber_weekly_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("y")
         )
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=False)  # A/B sf0.1: 0.98 s with, 1.40 s without
     )
     dec = "decimal(38,0)"
     s0 = w.agg(
@@ -135,7 +135,7 @@ def huber_weekly_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             / (n_d - 1)
         ).alias("scale"),
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint(eager=False)  # A/B sf1: 1.39 s with, 1.63 s without
     cur = init
     for _ in range(_HUBER_ITERS):
         r = F.abs(F.col("y") - F.col("m"))

@@ -205,7 +205,7 @@ def model_gains_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         "o_totalprice",
         F.coalesce(F.col("pos1"), F.lit(0)).alias("pos"),
-    ).localCheckpoint(eager=False)
+    )
     ranked = bucketed_row_number(
         lab, "o_totalprice", ["o_orderkey"], coarse_div=100, descending=True
     )
@@ -327,7 +327,7 @@ def calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         "o_totalprice",
         F.coalesce(F.col("pos1"), F.lit(0)).alias("pos"),
-    ).localCheckpoint(eager=False)
+    )
     tot = lab.agg(F.count("*").cast("long").alias("n_all"))
     rk = (
         bucketed_row_number(
@@ -445,7 +445,6 @@ def segment_priority_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderpriority").alias("priority"),
         )
         .agg(F.count("*").cast("long").alias("n_ij"))
-        .localCheckpoint(eager=False)
     )
     m = cells.select(
         "segment",

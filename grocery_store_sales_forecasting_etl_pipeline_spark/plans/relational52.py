@@ -128,7 +128,6 @@ def median_polish_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("v")
         )
-        .localCheckpoint(eager=False)
     )
 
     def med_over(col: str, part: str):
@@ -337,7 +336,6 @@ def class_balance_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("c_mktsegment").alias("segment"),
             F.coalesce(F.col("pos1"), F.lit(0)).alias("pos"),
         )
-        .localCheckpoint(eager=False)
     )
     cnt = lab.groupBy("segment").agg(
         F.sum("pos").cast("long").alias("n_pos"),

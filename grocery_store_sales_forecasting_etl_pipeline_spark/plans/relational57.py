@@ -216,7 +216,7 @@ def numeric_split_point_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
         "o_orderkey",
         F.coalesce(F.col("pos1"), F.lit(0)).alias("pos"),
-    ).localCheckpoint(eager=False)
+    )
     cc = value_cum_counts(lab.select("cents"), "cents", coarse_div=10000)
     tot = cc.agg(F.sum("c").cast("long").alias("n"))
     edges = cc.crossJoin(F.broadcast(tot)).agg(
@@ -366,7 +366,7 @@ def brand_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
                 li.l_partkey == F.col("p_partkey"))
         .groupBy(F.col("l_orderkey").alias("o"))
         .agg(F.collect_set("p_brand").alias("bs"))
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=False)  # A/B sf1: 12.05 s with, 15.59 s without
     )
     nb = bs.select(F.explode("bs").alias("b")).groupBy("b").agg(
         F.count("*").cast("long").alias("n_b")

@@ -358,7 +358,6 @@ def doc_query_likelihood_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = d.select(
         "doc_id", F.explode_outer(F.split(F.trim("text"), r"\s+")).alias("token")
     ).filter(F.col("token").isNotNull())
-    tok = tok.localCheckpoint(eager=False)
     dlen = tok.groupBy("doc_id").agg(F.count("*").cast("long").alias("len"))
     cf = (
         tok.filter(F.col("token").isin(*_QL_TERMS))

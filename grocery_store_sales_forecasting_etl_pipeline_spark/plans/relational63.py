@@ -107,7 +107,7 @@ def price_qty_tail_dependence(spark: SparkSession, sf_dir: str) -> DataFrame:
     x = li.select(
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("p"),
         F.round(F.col("l_quantity") * 100).cast("long").alias("q"),
-    ).localCheckpoint(eager=False)
+    )
 
     def p95_of(col: str):
         vc = x.groupBy(F.col(col).alias("v")).agg(

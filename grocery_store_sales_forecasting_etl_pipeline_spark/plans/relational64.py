@@ -104,6 +104,7 @@ def weekly_revenue_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair join runs on that tiny frame (≤65k pairs), broadcast on one
     side — the fact itself is scanned exactly once.
     """
+    # A/B sf1: 0.57 s with, 1.17 s without
     weekly = _weekly_dollars(spark, sf_dir).localCheckpoint(eager=False)
     a = weekly.select(
         F.col("week_start").alias("ws_a"), F.col("dollars").alias("x_a")

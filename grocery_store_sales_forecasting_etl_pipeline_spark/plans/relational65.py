@@ -108,7 +108,7 @@ def lang_llr_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang", F.explode_outer(F.split(F.trim("text"), r"\s+")).alias("token")
     ).filter(F.col("token").isNotNull())
     tl = tok.groupBy("lang", "token").agg(F.count("*").cast("long").alias("a"))
-    tl = tl.localCheckpoint(eager=False)
+    tl = tl.localCheckpoint(eager=False)  # A/B sf1: 0.73 s with, 0.99 s without
     lt = tl.groupBy("lang").agg(F.sum("a").cast("long").alias("big_a"))
     tt = tl.groupBy("token").agg(F.sum("a").cast("long").alias("cf"))
     gt = tl.agg(F.sum("a").cast("long").alias("n"))
@@ -425,7 +425,7 @@ def weekly_brand_topk_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("rn"),
     )
     top = rk.filter(F.col("rn") <= 10).select("week_start", "brand")
-    top = top.localCheckpoint(eager=False)
+    top = top.localCheckpoint(eager=False)  # A/B sf1: 2.59 s with, 3.16 s without
     sizes = top.groupBy("week_start").agg(F.count("*").cast("long").alias("n_top"))
     a = top.select(F.col("week_start").alias("ws"), "brand")
     b = top.select(F.col("week_start").alias("ws_next"), F.col("brand").alias("brand_b"))

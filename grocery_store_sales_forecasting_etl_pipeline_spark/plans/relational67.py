@@ -298,14 +298,13 @@ def nation_balance_quantile_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale notes: both cumulative frames live on the balance-domain
     value grain (bounded by the price domain, not row count); the
     nation frame windows partition BY NATION (parallel); the 9-row
-    decile list cross-joins tiny frames only. One fact scan feeds both
-    frames from one localCheckpoint.
+    decile list cross-joins tiny frames only.
     """
     c = _t(spark, sf_dir, "customer")
     x = c.select(
         F.col("c_nationkey").alias("nation"),
         F.round(F.col("c_acctbal") * 100).cast("long").alias("cents"),
-    ).localCheckpoint(eager=False)
+    )
     deciles = spark.range(1, 10).select(F.col("id").cast("long").alias("q"))
     w_nat = (
         Window.partitionBy("nation")
@@ -441,7 +440,6 @@ def weekly_revenue_pettitt(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("week_start")
         .agg(F.expr("sum(cents) DIV 100").alias("dollars"))
-        .localCheckpoint(eager=False)
     )
     v = weekly.groupBy("dollars").agg(F.count("*").cast("long").alias("t"))
     w_before = Window.orderBy("dollars").rowsBetween(Window.unboundedPreceding, -1)

@@ -182,8 +182,7 @@ def weekly_revenue_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale notes: the fact folds to the calendar-bounded weekly frame;
     the nearest-higher and saddle searches are two aggregated cross
     joins of (few peaks) × (bounded weeks) — O(weeks²) on a frame
-    whose size does not grow with fact rows. One fact scan feeds one
-    localCheckpointed frame.
+    whose size does not grow with fact rows.
     """
     weekly = (
         _t(spark, sf_dir, "orders")
@@ -198,7 +197,7 @@ def weekly_revenue_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
         "week_start",
         "v",
         F.row_number().over(Window.orderBy("week_start")).cast("long").alias("rn"),
-    ).localCheckpoint(eager=False)
+    )
     w_rn = Window.orderBy("rn")
     peaks = (
         idx.select(

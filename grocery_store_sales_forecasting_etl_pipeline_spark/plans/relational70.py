@@ -530,7 +530,7 @@ def weekly_stl_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
         "week_start",
         "woy",
         (F.lit(53) * F.col("y") - F.col("ts")).cast("long").alias("d53"),
-    ).localCheckpoint(eager=False)
+    )
     sea = d.groupBy("woy").agg(
         F.sum("d53").cast("long").alias("ssum"),
         F.count("*").cast("long").alias("c"),

@@ -134,7 +134,7 @@ def repeat_purchase_logrank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_custkey").alias("cust"),
         F.col("o_orderdate").cast("date").alias("d"),
         F.col("o_orderkey").alias("k"),
-    ).localCheckpoint(eager=False)
+    )
     ranked = o.select(
         "cust",
         "d",

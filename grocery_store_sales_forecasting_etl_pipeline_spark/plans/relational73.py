@@ -129,7 +129,6 @@ def segment_value_did(spark: SparkSession, sf_dir: str) -> DataFrame:
             "d",
             "cents",
         )
-        .localCheckpoint(eager=False)
     )
     dec = "decimal(38,0)"
     dv = o.groupBy("d").agg(F.count("*").cast("long").alias("cnt"))
@@ -309,9 +308,7 @@ def part_price_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
         "part", F.sum("brk").over(w_cum).cast("long").alias("spell_id")
     )
     spl = sp.groupBy("part", "spell_id").agg(F.count("*").cast("long").alias("len"))
-    lv = spl.groupBy("len").agg(F.count("*").cast("long").alias("c")).localCheckpoint(
-        eager=False
-    )
+    lv = spl.groupBy("len").agg(F.count("*").cast("long").alias("c"))
     dec = "decimal(38,0)"
     w_lcum = Window.orderBy("len").rowsBetween(Window.unboundedPreceding, Window.currentRow)
     med = (
@@ -402,7 +399,7 @@ def event_retention_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     ud = ev.select(
         "user_id", F.col("ts").cast("date").alias("day")
-    ).distinct().localCheckpoint(eager=False)
+    ).distinct().localCheckpoint(eager=False)  # A/B sf1: 1.04 s with, 1.34 s without
     first = ud.groupBy("user_id").agg(F.min("day").alias("d0"))
     ks = spark.createDataFrame(
         [(k,) for k in _RETENTION_KS], "k long"

@@ -321,7 +321,7 @@ def segment_price_hellinger(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("c_mktsegment") == "HOUSEHOLD", 1).otherwise(0))
         .cast("long")
         .alias("cb"),
-    ).localCheckpoint(eager=False)
+    )
     w_cum = Window.orderBy("cents").rowsBetween(Window.unboundedPreceding, Window.currentRow)
     c = v.select(
         "cents",
@@ -452,7 +452,6 @@ def order_value_lognormal_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"))
         .groupBy("cents")
         .agg(F.count("*").cast("long").alias("c"))
-        .localCheckpoint(eager=False)
     )
     w_cum = Window.orderBy("cents").rowsBetween(Window.unboundedPreceding, Window.currentRow)
     w_all = Window.partitionBy()
@@ -587,7 +586,7 @@ def revenue_pareto_crossing(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("c").cast(dec) * F.col("cents")).over(w_desc).cast(dec).alias("scum"),
         F.sum("c").over(w_all).cast("long").alias("n"),
         F.sum(F.col("c").cast(dec) * F.col("cents")).over(w_all).cast(dec).alias("stot"),
-    ).localCheckpoint(eager=False)
+    )
     scum_prev = F.col("scum") - F.col("c").cast(dec) * F.col("cents")
     k80 = c.filter(
         (F.lit(5) * F.col("scum") >= F.lit(4) * F.col("stot"))

@@ -333,6 +333,7 @@ def embedding_centroid_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame
     frame is n·k rows via a broadcast-sized (k × dim) centroid join —
     the scalable silhouette shape by construction.
     """
+    # A/B sf0.1: 1.53 s with, 2.16 s without
     qd = _qdim_spark(spark, sf_dir).localCheckpoint(eager=False)
     dec = "decimal(38,0)"
     cent = qd.groupBy(F.col("label").alias("k"), F.col("dim").alias("cdim")).agg(
@@ -347,7 +348,7 @@ def embedding_centroid_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame
             F.max("c").alias("c"),
             F.sum(term * term).cast(dec).alias("a_num"),
         )
-    ).localCheckpoint(eager=False)
+    )
     d2 = F.col("a_num").cast("double") / (F.col("c").cast("double") * F.col("c"))
     own = dist.filter(F.col("label") == F.col("k")).select(
         "vec_id", "label", d2.alias("a2")
@@ -469,7 +470,7 @@ def embedding_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a dim-keyed join against the 64-row v₁ — no all-pairs
     anything; this is the shape distributed PCA actually uses.
     """
-    qd = _qdim_spark(spark, sf_dir).localCheckpoint(eager=False)
+    qd = _qdim_spark(spark, sf_dir)
     dec = "decimal(38,0)"
     rows_ = qd.groupBy("vec_id").agg(
         F.sum(F.col("q").cast(dec)).cast(dec).alias("rowsum")
@@ -478,7 +479,7 @@ def embedding_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         qd.join(rows_, "vec_id")
         .groupBy("dim")
         .agg(F.sum(F.col("q").cast(dec) * F.col("rowsum")).cast(dec).alias("w"))
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=False)  # A/B sf0.1: 0.76 s with, 0.88 s without
     )
     xv = (
         qd.join(F.broadcast(v1), "dim")

@@ -380,7 +380,7 @@ def conformal_coverage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ae",
         F.row_number().over(Window.orderBy("week_start")).cast("long").alias("i"),
         F.count("*").over(Window.partitionBy()).cast("long").alias("nr"),
-    ).localCheckpoint(eager=False)
+    )
     cal = split.filter(F.col("i") <= F.expr("(4 * nr) DIV 5")).select("ae")
     tst = split.filter(F.col("i") > F.expr("(4 * nr) DIV 5")).select("ae")
     q = (

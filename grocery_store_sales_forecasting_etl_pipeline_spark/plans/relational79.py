@@ -435,14 +435,14 @@ def priority_segment_association(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("c_mktsegment").alias("seg"),
         )
         .agg(F.count("*").cast("long").alias("n"))
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint(eager=False)  # A/B sf1: 1.00 s with, 1.25 s without
     # densify: zero cells contribute (0-E)^2/E = E (the batch-34 advice)
     dense = (
         t.select("prio").distinct()
         .crossJoin(t.select("seg").distinct())
         .join(t, ["prio", "seg"], "left")
         .select("prio", "seg", F.coalesce(F.col("n"), F.lit(0)).alias("n"))
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=False)  # A/B sf0.1: 0.58 s with, 0.74 s without
     )
     w_r = Window.partitionBy("prio")
     w_c = Window.partitionBy("seg")

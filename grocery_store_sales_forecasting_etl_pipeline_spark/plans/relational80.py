@@ -331,7 +331,7 @@ def segment_brand_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(_gbcast(p), F.col("l_partkey") == F.col("p_partkey"))
         .groupBy(F.col("c_mktsegment").alias("seg"), F.col("p_brand").alias("brand"))
         .agg(F.count("*").cast("long").alias("n"))
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=False)  # A/B sf0.1: 1.40 s with, 1.67 s without
     )
     dense = (
         base.select("seg").distinct()

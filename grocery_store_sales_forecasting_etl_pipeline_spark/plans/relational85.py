@@ -230,7 +230,6 @@ def daily_revenue_extremal_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("d")
         .agg(F.expr("sum(cents) DIV 100").alias("dollars"))
-        .localCheckpoint(eager=False)
     )
     v = daily.groupBy("dollars").agg(F.count("*").cast("long").alias("c"))
     w_cum = Window.orderBy("dollars").rowsBetween(
@@ -433,7 +432,7 @@ def priority_discount_ordinal_assoc(spark: SparkSession, sf_dir: str) -> DataFra
         F.col("o_orderpriority").alias("x"),
         F.round(F.col("l_discount") * 100).cast("long").alias("y"),
     )
-    cells = base.groupBy("x", "y").agg(F.count("*").cast("long").alias("c")).localCheckpoint(eager=False)
+    cells = base.groupBy("x", "y").agg(F.count("*").cast("long").alias("c"))
     a = cells.alias("a")
     b = cells.alias("b")
     prod = F.col("a.c").cast(_DEC) * F.col("b.c").cast(_DEC)

@@ -120,7 +120,7 @@ def weekly_revenue_sample_entropy(spark: SparkSession, sf_dir: str) -> DataFrame
         F.row_number().over(w).cast("long").alias("i"),
         F.lead("dollars", 1).over(w).alias("x1"),
         F.lead("dollars", 2).over(w).alias("x2"),
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint(eager=False)  # A/B sf0.1: 0.60 s with, 0.71 s without
     dv = (
         idx.filter(F.col("x1").isNotNull())
         .select(F.abs(F.col("x1") - F.col("x")).alias("ad"))
@@ -133,7 +133,7 @@ def weekly_revenue_sample_entropy(spark: SparkSession, sf_dir: str) -> DataFrame
         "ad",
         F.sum("c").over(w_cum).cast("long").alias("cum"),
         F.sum("c").over(w_all).cast("long").alias("m"),
-    ).localCheckpoint(eager=False)
+    )
     tol = dcw.agg(
         F.min(F.when(F.lit(2) * F.col("cum") >= F.col("m"), F.col("ad"))).alias("r")
     )
@@ -317,6 +317,7 @@ def weekly_yoy_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
     diff frame (hundreds of rows → tens of thousands of pairs); the
     fact table is touched once, map-side.
     """
+    # A/B sf1: 0.74 s with, 0.93 s without
     weekly = _weekly_dollars(spark, sf_dir).localCheckpoint(eager=False)
     a = weekly.alias("a")
     b = weekly.alias("b")
@@ -328,7 +329,6 @@ def weekly_yoy_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("a.week_start").alias("aws"),
         )
         .select("d", F.row_number().over(w).cast("long").alias("i"))
-        .localCheckpoint(eager=False)
     )
     da = diffs.alias("da")
     db = diffs.alias("db")

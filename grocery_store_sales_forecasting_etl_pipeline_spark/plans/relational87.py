@@ -256,7 +256,7 @@ def daily_change_var_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "x",
         F.row_number().over(w_d.orderBy("d")).cast("long").alias("i"),
         F.count("*").over(w_all).cast("long").alias("n"),
-    ).localCheckpoint(eager=False)
+    )
     tv = (
         rn.filter(F.lit(4) * F.col("i") <= F.lit(3) * F.col("n"))
         .groupBy("x")

@@ -313,7 +313,6 @@ def weekly_change_tail_asymmetry(spark: SparkSession, sf_dir: str) -> DataFrame:
     chg = (
         weekly.select((F.col("dollars") - F.lag("dollars").over(w)).alias("d"))
         .filter(F.col("d").isNotNull())
-        .localCheckpoint(eager=False)
     )
     v = chg.groupBy("d").agg(F.count("*").cast("long").alias("c"))
     w_cum = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, Window.currentRow)

@@ -151,7 +151,7 @@ def embedding_cluster_validity(spark: SparkSession, sf_dir: str) -> DataFrame:
     frames; the centroid pair join is (k² × d) rows — label-bounded,
     never point-bounded.
     """
-    qd = _qdim_spark(spark, sf_dir).localCheckpoint(eager=False)
+    qd = _qdim_spark(spark, sf_dir)
     per = qd.groupBy("label", "dim").agg(F.sum(F.col("q").cast(_DEC)).alias("s"))
     cl = qd.groupBy("label").agg(
         F.countDistinct("vec_id").cast("long").alias("n_i"),
@@ -172,7 +172,6 @@ def embedding_cluster_validity(spark: SparkSession, sf_dir: str) -> DataFrame:
                 - F.col("s2").cast("double") / F.col("n_i")
             ).alias("w_i"),
         )
-        .localCheckpoint(eager=False)
     )
     glob = cstat.agg(
         F.sum("n_i").cast("long").alias("n"),
@@ -404,7 +403,7 @@ def segment_brand_weighted_jaccard(spark: SparkSession, sf_dir: str) -> DataFram
         .join(_gbcast(p), F.col("l_partkey") == F.col("p_partkey"))
         .groupBy(F.col("c_mktsegment").alias("seg"), F.col("p_brand").alias("brand"))
         .agg(F.sum(F.col("l_quantity").cast("long")).cast("long").alias("q"))
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=False)  # A/B sf1: 2.90 s with, 5.19 s without
     )
     dense = (
         base.select("seg").distinct()
@@ -526,7 +525,7 @@ def discount_tax_twoway_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("long").alias("n"),
         F.sum("y").cast("long").alias("sy"),
         F.sum(F.col("y").cast(_DEC) * F.col("y").cast(_DEC)).cast(_DEC).alias("syy"),
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint(eager=False)  # A/B sf1: 1.41 s with, 2.25 s without
     tot = cells.agg(
         F.sum("n").cast("long").alias("n"),
         F.sum("sy").cast("long").alias("sy"),

@@ -646,12 +646,6 @@ def corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         T.quality_score("text").alias("quality_score"),
         T.fingerprint("text").alias("fingerprint"),
     ).filter((F.col("quality_score") >= 0.5) & (F.col("detected_lang") != "und"))
-    # pipeline breaker: without it Catalyst pushes the filter into the
-    # scan, duplicating the (codegen-fallback-sized) scoring expression
-    # into both the scan filter and the projection — measured 2.5×
-    # slower at sf0.1. The lazy checkpoint materializes the scored+gated
-    # rows once; the window stage reads the materialized form.
-    gated = gated.localCheckpoint(eager=False)
     w = Window.partitionBy("fingerprint").orderBy("doc_id")
     return (
         gated.withColumn("rn", F.row_number().over(w))
@@ -1156,15 +1150,10 @@ def edit_distance_verify(
     """
     over = False
     if broadcast_max_pairs is not None:
-        # localCheckpoint, NOT persist: the gate count materializes the
-        # candidate pipeline once and the main query below reuses the
-        # blocks through the checkpointed frame. A persist() here leaks
-        # (never unpersisted) AND poisons any later identical build in
-        # the session — Spark's CacheManager matches cached plans by
-        # canonicalized form, so a benchmark's second run would silently
-        # skip the whole candidate stage (observed: sf10 probe timed
-        # 1.6s against an honest 42s cold run).
-        pairs = pairs.localCheckpoint(eager=False)
+        # the gate count materializes the candidates once and the main
+        # query reuses the blocks; not persist(), which the plan cache
+        # would serve to a later identical build (BASELINE.md r5)
+        pairs = pairs.localCheckpoint(eager=False)  # A/B sf0.1: 8.03 s with, 10.58 s without
         try:
             over = pairs.limit(broadcast_max_pairs + 1).count() > broadcast_max_pairs
         except Exception:

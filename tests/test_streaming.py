@@ -184,6 +184,52 @@ def test_stream_upsert_idempotent_replay(spark, events_dir, tmp_path):
         spark.sql("DROP DATABASE supsert CASCADE")
 
 
+def test_stream_partition_upsert_idempotent_replay(spark, events_dir, tmp_path, monkeypatch):
+    """The ``partition_cols`` branch (partition_upsert per micro-batch):
+    a full replay leaves the table unchanged with no duplicate keys, and
+    each batch's key anti-join plans as a broadcast up front — a file
+    source reports a few-KB size, unlike a stat-less createDataFrame
+    batch whose sort-merge join AQE demotes only at run time."""
+    import re
+
+    from grocery_store_sales_forecasting_etl_pipeline_spark.sources import maintenance
+
+    spark.sql("CREATE DATABASE IF NOT EXISTS spupsert")
+    table = "spupsert.events_by_type"
+    plans = []
+    rewrite = maintenance.rewrite_staged
+
+    def spy(spark_, table_, df, dynamic=False):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return rewrite(spark_, table_, df, dynamic)
+
+    monkeypatch.setattr(maintenance, "rewrite_staged", spy)
+    try:
+        def drain(cp: str) -> set:
+            stream = ev.stream_events(spark, events_dir, max_files_per_trigger=2)
+            ev.stream_upsert_to_table(
+                spark,
+                stream,
+                table,
+                keys=("event_id",),
+                partition_cols=("event_type",),
+                checkpoint_dir=str(tmp_path / cp),
+            )
+            return {tuple(r) for r in spark.table(table).collect()}
+
+        first = drain("cp1")
+        assert len(first) == spark.read.parquet(events_dir).dropDuplicates(["event_id"]).count()
+        again = drain("cp2")  # full replay with a fresh checkpoint
+        assert again == first
+        assert spark.table(table).groupBy("event_id").count().filter(F.col("count") > 1).count() == 0
+        assert plans
+        for plan in plans:
+            assert re.search(r"BroadcastHashJoin \[event_id#\d+L\], \[event_id#\d+L\], LeftAnti", plan), plan
+            assert "SortMergeJoin" not in plan, plan
+    finally:
+        spark.sql("DROP DATABASE spupsert CASCADE")
+
+
 def test_stream_interval_join_equals_batch(spark, events_dir):
     """Stream-stream interval join (watermarked, state-bounded by the
     two-sided range predicate) must emit exactly the pairs the batch
