@@ -91,7 +91,7 @@ def brute_force_knn(
         "corpus_vec",
         "cv",
         "cn",
-    ).select("neighbor_id", "cv", "cn").crossJoin(F.broadcast(q))
+    ).select("neighbor_id", "cv", "cn").crossJoin(q)
     scored = joined.filter(F.col("neighbor_id") != F.col("query_id")).select(
         "query_id",
         "neighbor_id",
@@ -483,9 +483,7 @@ def lsh_sign_buckets(
     )
 
 
-def _subsplit_blocks(
-    base: DataFrame, block_col: str, max_block_rows: int, broadcast_counts: bool = False
-) -> DataFrame:
+def _subsplit_blocks(base: DataFrame, block_col: str, max_block_rows: int) -> DataFrame:
     """Attach (``__ns``, ``__sub``) to every row: the number of sub-blocks
     its block was split into (⌈block_count / max_block_rows⌉) and the row's
     secondary-hash sub-block index within [0, __ns).
@@ -497,16 +495,8 @@ def _subsplit_blocks(
     distinct literal so it decorrelates from any hash-derived block id),
     so expected sub-block size is ≤ max_block_rows; hash imbalance can
     exceed the cap by small factors but never recreates the one-task-
-    holds-the-block degeneracy this exists to prevent.
-
-    ``broadcast_counts``: when the block-id space is known bounded (LSH
-    buckets ≤ 2^n_planes), broadcasting the counts side makes the join
-    map-only — the big vector table then reaches the downstream cogroup
-    without an extra co-partitioning exchange. Leave False for unbounded
-    block domains (content fingerprints), where counts can be huge."""
+    holds-the-block degeneracy this exists to prevent."""
     counts = base.groupBy(block_col).agg(F.count(F.lit(1)).alias("__bn"))
-    if broadcast_counts:
-        counts = F.broadcast(counts)
     return (
         base.join(counts, block_col)
         .withColumn(
@@ -531,7 +521,6 @@ def in_block_pairs_gemm(
     threshold: float = 0.9,
     round_to: int = 6,
     max_block_rows: int = 4096,
-    broadcast_counts: bool = False,
 ) -> DataFrame:
     """All same-block pairs with cosine ≥ threshold: shuffle on the block
     key, then numpy GEMM inside ``applyInPandas`` — replaces the
@@ -592,7 +581,7 @@ def in_block_pairs_gemm(
     if max_block_rows is None:
         sized = base.withColumn("__ns", F.lit(1)).withColumn("__sub", F.lit(0))
     else:
-        sized = _subsplit_blocks(base, "__blk", max_block_rows, broadcast_counts)
+        sized = _subsplit_blocks(base, "__blk", max_block_rows)
     # both cogroup sides descend from `sized`
     sized = sized.localCheckpoint(eager=False)  # A/B sf1: 5.90 s with, 7.07 s without
     # role A: a row of sub-block s is the LEFT side of pairs (s, s2), s2 >= s.
@@ -648,11 +637,7 @@ def lsh_ann_candidates(
         blocked = src.withColumn(
             "bucket", lsh_sign_bucket_col(vec_col, n_planes, dim, table_id=t)
         )
-        # bucket domain is ≤ 2^n_planes — counts always broadcastable
-        pairs = in_block_pairs_gemm(
-            blocked, "bucket", id_col, vec_col, threshold, round_to=6,
-            broadcast_counts=True,
-        )
+        pairs = in_block_pairs_gemm(blocked, "bucket", id_col, vec_col, threshold, round_to=6)
         out = pairs if out is None else out.unionByName(pairs)
     return out.distinct()
 

@@ -56,15 +56,19 @@ def plan_bytes(df: DataFrame) -> int:
     return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
-# --- size-gated broadcast hint (r12 broadcast audit) -----------------------
+# --- size-gated broadcast hint ---------------------------------------------
 #
-# The r11 judge flagged forced ``F.broadcast`` hints on SF-scaled frames
-# (part/supplier/customer-grain projections and aggregates) as latent
-# 100 TB scale-killers: the hint overrides AQE's size-based demotion, so
-# a frame that is 24 KB at sf0.1 but billions of rows at sf1e5 would be
-# collected to the driver and shipped to every executor regardless.
+# The session broadcasts any side estimated under 64 MB on its own, and
+# AQE re-plans joins from runtime sizes, so a broadcast hint is kept
+# only where a per-site A/B measured the query slower without it
+# (BASELINE.md, "Broadcast-hint audit"); the lint in
+# tests/test_checkpoint_sites.py makes each hint cite that A/B. A hint
+# on a frame whose grain grows with the data also overrides AQE's
+# size-based choice, so a frame that is 24 KB at sf0.1 but billions of
+# rows at sf1e5 would be collected to the driver and shipped to every
+# executor regardless.
 #
-# ``gated_broadcast`` keeps the hint only while the frame's plan size
+# ``gated_broadcast`` keeps such a hint only while the frame's plan size
 # estimate is small (512 MB: a few hundred MB broadcasts fine, multiple
 # GB risks driver OOMs). Above the bound the hint is dropped and the
 # planner + AQE choose from ACTUAL runtime sizes — which still yields a
@@ -82,15 +86,25 @@ def gated_broadcast(df: DataFrame) -> DataFrame:
     """``F.broadcast(df)`` while df's ``plan_bytes`` stay under
     ``_BCAST_INPUT_MAX``; the bare frame (planner + AQE decide) above
     it. Drop-in replacement for ``F.broadcast`` at call sites whose
-    frame grain scales with the data (the broadcast-audit "gate"
-    class); fixed-grain dims keep the unconditional hint. Every
-    decision is recorded under the calling site."""
+    frame grain scales with the data. Every decision is recorded under
+    the nearest calling site inside the package."""
     size = plan_bytes(df)
     keep = size <= _BCAST_INPUT_MAX
-    frame = sys._getframe(1)
     record_gate(
-        f"gated_broadcast@{os.path.basename(frame.f_code.co_filename)}:{frame.f_lineno}",
-        size,
-        "broadcast" if keep else "no-hint(AQE)",
+        f"gated_broadcast@{_package_caller()}", size, "broadcast" if keep else "no-hint(AQE)"
     )
     return F.broadcast(df) if keep else df
+
+
+_PACKAGE_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _package_caller() -> str:
+    """``file:line`` of the nearest caller frame inside the package, so
+    a wrapper around ``gated_broadcast`` (a tracer, a test spy) does not
+    become the recorded site; the direct caller when none is inside."""
+    first = frame = sys._getframe(2)
+    while frame is not None and not frame.f_code.co_filename.startswith(_PACKAGE_DIR):
+        frame = frame.f_back
+    frame = frame or first
+    return f"{os.path.basename(frame.f_code.co_filename)}:{frame.f_lineno}"

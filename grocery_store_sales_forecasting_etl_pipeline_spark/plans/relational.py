@@ -20,9 +20,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans._tables import table as _t
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.registry import register
-from grocery_store_sales_forecasting_etl_pipeline_spark.operators.sizing import (
-    gated_broadcast as _gbcast,
-)
 
 
 # ---------------------------------------------------------------------------
@@ -131,19 +128,20 @@ def dim_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     null-coalesce fill — the reference silver join chain
     (silver_processing.py.py:49-54).
 
-    Scale notes: all three dims are broadcast (explicit ``F.broadcast``;
-    customer/nation/region are orders-of-magnitude smaller than the fact),
-    so the whole chain is broadcast-hash-joins with ZERO shuffles of the
-    fact table — the plan a 100 TB fact requires.
+    Scale notes: all three dims are broadcast (the planner broadcasts
+    any side under the session's 64 MB threshold; customer/nation/region
+    are orders-of-magnitude smaller than the fact), so the whole chain
+    is broadcast-hash-joins with ZERO shuffles of the fact table — the
+    plan a 100 TB fact requires.
     """
     orders = _t(spark, sf_dir, "orders")
     customer = _t(spark, sf_dir, "customer")
     nation = _t(spark, sf_dir, "nation")
     region = _t(spark, sf_dir, "region")
     return (
-        orders.join(_gbcast(customer), orders.o_custkey == customer.c_custkey, "left")
-        .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey, "left")
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey, "left")
+        orders.join(customer, orders.o_custkey == customer.c_custkey, "left")
+        .join(nation, customer.c_nationkey == nation.n_nationkey, "left")
+        .join(region, nation.n_regionkey == region.r_regionkey, "left")
         .select(
             "o_orderkey",
             "o_custkey",

@@ -66,7 +66,7 @@ def hll_distinct_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("user_id").cast("long").alias("exact_users")
     )
     return (
-        exact.join(F.broadcast(rolled), "event_type")
+        exact.join(rolled, "event_type")
         .select(
             "event_type",
             "exact_users",
@@ -283,7 +283,7 @@ def concurrent_sessions_peak(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("d", F.coalesce(F.sum("net").over(woff), F.lit(0)).alias("carry_in"))
     )
     return (
-        local.join(F.broadcast(offsets), "d")
+        local.join(offsets, "d")
         .groupBy("d")
         .agg(
             F.max(F.col("local_run") + F.col("carry_in"))
@@ -346,7 +346,7 @@ def part_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("band", F.max("band_max").over(wband).alias("band_carry_max"))
     )
     frontier_tiers = (
-        local.join(F.broadcast(carry), "band")
+        local.join(carry, "band")
         .withColumn(
             "prev_max",
             F.greatest(
@@ -414,7 +414,7 @@ def numeric_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # zorder_layout_audit, and the greatest() guard keeps a
     # single-distinct-value corpus (hi == lo) in bucket 0 instead of
     # NULLing through the division
-    bucketed = o.crossJoin(F.broadcast(mm)).select(
+    bucketed = o.crossJoin(mm).select(
         F.least(
             F.lit(19),
             F.expr("(cents - lo) * 20 DIV greatest(hi - lo, 1)"),

@@ -26,9 +26,6 @@ from grocery_store_sales_forecasting_etl_pipeline_spark.operators.sizing import 
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.scalerank import (
     grouped_value_cum_counts,
 )
-from grocery_store_sales_forecasting_etl_pipeline_spark.operators.sizing import (
-    gated_broadcast as _gbcast,
-)
 
 # Crossover for quantile_bracket_audit's exact-side shape (A/B in its
 # docstring + BASELINE.md r10): the 3-task per-flag sort wins up to sf1
@@ -134,7 +131,7 @@ def dedup_triangle_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     scale = (16 // _TRI_SAMPLE_P_NUM) ** 3
     tcount = tri.agg(F.count("*").cast("long").alias("tri_sampled"))
-    return stats.crossJoin(F.broadcast(tcount)).select(
+    return stats.crossJoin(tcount).select(
         "n_pairs",
         "n_sampled",
         "tri_sampled",
@@ -387,7 +384,7 @@ def zorder_layout_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sx = scale16_sql("pk", "pk_lo0", "pk_hi0", "spark")
     sy = scale16_sql("sk", "sk_lo0", "sk_hi0", "spark")
-    z = r.crossJoin(F.broadcast(mm)).select(
+    z = r.crossJoin(mm).select(
         "pk",
         "sk",
         F.expr(morton_sql(sx, sy, "spark")).alias("zv"),
@@ -454,7 +451,7 @@ def brand_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 300-row answer; this one is 2.0s -> ~0.5s). Baskets are bounded
     # by items-per-order, so the generated array is tiny at any scale.
     baskets = (
-        li.join(_gbcast(p), li["l_partkey"] == p["p_partkey"])
+        li.join(p, li["l_partkey"] == p["p_partkey"])
         .groupBy(F.col("l_orderkey").alias("ok"))
         .agg(F.sort_array(F.collect_set("p_brand")).alias("bs"))
         .localCheckpoint(eager=False)  # A/B sf1: 10.46 s with, 13.67 s without
@@ -478,9 +475,9 @@ def brand_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     b1 = bc.select(F.col("brand").alias("brand_1"), F.col("n").alias("brand_1_orders"))
     b2 = bc.select(F.col("brand").alias("brand_2"), F.col("n").alias("brand_2_orders"))
     return (
-        pc.join(F.broadcast(b1), "brand_1")
-        .join(F.broadcast(b2), "brand_2")
-        .crossJoin(F.broadcast(tot))
+        pc.join(b1, "brand_1")
+        .join(b2, "brand_2")
+        .crossJoin(tot)
         .select(
             "brand_1",
             "brand_2",
@@ -627,7 +624,7 @@ def quantile_bracket_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("l_returnflag", "n", "pr.p", "pr.r")
     # the 0-based rank-r value is the one whose cumulative range covers
     # r — identical to the ordered-multiset selection the oracle does
-    sel = cum.join(F.broadcast(ranks), "l_returnflag").filter(
+    sel = cum.join(ranks, "l_returnflag").filter(
         (F.col("r") >= F.col("cum") - F.col("c")) & (F.col("r") < F.col("cum"))
     )
 

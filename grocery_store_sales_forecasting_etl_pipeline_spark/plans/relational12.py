@@ -300,7 +300,7 @@ def key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     t = g.agg(F.sum("n_rows").cast("long").alias("total"))
     top = (
-        g.crossJoin(F.broadcast(t))
+        g.crossJoin(t)
         .select(
             "suppkey",
             "n_rows",

@@ -15,9 +15,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans._tables import table as _t
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.registry import register
-from grocery_store_sales_forecasting_etl_pipeline_spark.operators.sizing import (
-    gated_broadcast as _gbcast,
-)
 
 # ---------------------------------------------------------------------------
 # Data-quality violation summary
@@ -119,8 +116,8 @@ def dq_violation_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n AS n_checked",
     ).select("rule", "n_checked", "n_violations")
     extra = (
-        base.crossJoin(_gbcast(dups))
-        .crossJoin(F.broadcast(orphans))
+        base.crossJoin(dups)
+        .crossJoin(orphans)
         .selectExpr(
             "stack(2, 'pk_duplicates', extra, 'fk_orphans', n_orphan) "
             "AS (rule, n_violations)",
@@ -256,7 +253,7 @@ def session_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lead("first_t").over(wdays).alias("next_day_first"),
         )
     )
-    sweep = local.join(F.broadcast(dayf), "day").select(
+    sweep = local.join(dayf, "day").select(
         "day",
         "t",
         (F.col("local_run") + F.col("carry_in")).alias("running"),
@@ -350,7 +347,7 @@ def hll_overlap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("est1") + F.col("est2") - F.col("est_union")).alias("est_overlap"),
         "nmax",
     )
-    return exact.join(F.broadcast(est), ["type_1", "type_2"]).select(
+    return exact.join(est, ["type_1", "type_2"]).select(
         "type_1",
         "type_2",
         "exact_overlap",

@@ -16,9 +16,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans._tables import table as _t
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.registry import register
-from grocery_store_sales_forecasting_etl_pipeline_spark.operators.sizing import (
-    gated_broadcast as _gbcast,
-)
 
 # ---------------------------------------------------------------------------
 # Pivot: order-year x priority revenue matrix
@@ -290,11 +287,9 @@ def customer_spend_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
         )
         .join(
-            _gbcast(
-                c.select(
-                    F.col("c_custkey").alias("custkey"),
-                    F.col("c_mktsegment").alias("segment"),
-                )
+            c.select(
+                F.col("c_custkey").alias("custkey"),
+                F.col("c_mktsegment").alias("segment"),
             ),
             F.col("o_custkey") == F.col("custkey"),
         )
@@ -427,6 +422,7 @@ def heavy_hitter_cms_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("custkey", "exact_n", F.col("c.row_i").alias("row_i"), F.col("c.bucket").alias("bucket"))
 
     return (
+        # pinned by test_plans.py::test_cms_sketch_bounded_shuffle_broadcast_probe
         probe.join(F.broadcast(cells), ["row_i", "bucket"])
         .groupBy("custkey", "exact_n")
         .agg(
@@ -511,9 +507,7 @@ def nation_customer_argmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _t(spark, sf_dir, "customer")
     o = _t(spark, sf_dir, "orders")
     ord_ = o.join(
-        _gbcast(
-            c.select(F.col("c_custkey").alias("custkey"), F.col("c_nationkey").alias("nationkey"))
-        ),
+        c.select(F.col("c_custkey").alias("custkey"), F.col("c_nationkey").alias("nationkey")),
         F.col("o_custkey") == F.col("custkey"),
     ).select(
         "nationkey",
@@ -553,6 +547,4 @@ def nation_customer_argmax(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.percentile("cents", F.lit(0.5)).alias("median_cents")
     )
 
-    return top_cust.join(F.broadcast(prio_mode), "nationkey").join(
-        F.broadcast(med), "nationkey"
-    )
+    return top_cust.join(prio_mode, "nationkey").join(med, "nationkey")

@@ -17,9 +17,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans._tables import table as _t
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.registry import register
-from grocery_store_sales_forecasting_etl_pipeline_spark.operators.sizing import (
-    gated_broadcast as _gbcast,
-)
 
 # ---------------------------------------------------------------------------
 # Weekly revenue autocorrelation (ACF lags 1..4)
@@ -290,11 +287,9 @@ def nation_spend_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
         )
         .join(
-            _gbcast(
-                c.select(
-                    F.col("c_custkey").alias("custkey"),
-                    F.col("c_nationkey").alias("nationkey"),
-                )
+            c.select(
+                F.col("c_custkey").alias("custkey"),
+                F.col("c_nationkey").alias("nationkey"),
             ),
             F.col("o_custkey") == F.col("custkey"),
         )

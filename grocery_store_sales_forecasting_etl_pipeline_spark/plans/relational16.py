@@ -30,9 +30,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans._tables import table as _t
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.registry import register
-from grocery_store_sales_forecasting_etl_pipeline_spark.operators.sizing import (
-    gated_broadcast as _gbcast,
-)
 
 _DEC = "decimal(18,2)"
 
@@ -102,10 +99,10 @@ def nation_pair_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) | ((F.col("supp_nation") == "NATION_2") & (F.col("cust_nation") == "NATION_1"))
     return (
         l.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(_gbcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(_gbcast(c), F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("n1_key"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("n2_key"))
+        .join(s, F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(c, F.col("o_custkey") == F.col("c_custkey"))
+        .join(n1, F.col("s_nationkey") == F.col("n1_key"))
+        .join(n2, F.col("c_nationkey") == F.col("n2_key"))
         .filter(pair)
         .groupBy(
             "supp_nation",
@@ -165,9 +162,9 @@ def product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     amount = _rev() - F.col("p_retailprice").cast(_DEC) * F.col("l_quantity").cast(_DEC)
     return (
         l.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(_gbcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(_gbcast(p), F.col("l_partkey") == F.col("p_partkey"))
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
+        .join(s, F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(p, F.col("l_partkey") == F.col("p_partkey"))
+        .join(n, F.col("s_nationkey") == F.col("n_nationkey"))
         .groupBy(
             F.col("n_name").alias("nation"),
             F.year("o_orderdate").cast("long").alias("o_year"),
@@ -283,7 +280,7 @@ def brand_size_disjunctive_rev(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("p_size").between(1, 15))
     )
     return (
-        l.join(_gbcast(p), F.col("p_partkey") == F.col("l_partkey"))
+        l.join(p, F.col("p_partkey") == F.col("l_partkey"))
         .filter(branches)
         .agg(
             F.round(F.sum(_rev()), 2).cast("double").alias("revenue"),

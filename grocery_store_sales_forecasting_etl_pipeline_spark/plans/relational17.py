@@ -117,8 +117,8 @@ def doc_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     dft = tf.groupBy("token").agg(F.count("*").cast("long").alias("dft"))
     s = (
         tf.join(dl, "doc_id")
-        .join(F.broadcast(dft), "token")
-        .crossJoin(F.broadcast(tot))
+        .join(dft, "token")
+        .crossJoin(tot)
         .withColumn(
             "s",
             ((F.col("n_docs") - F.col("dft") + F.lit(0.5)) / (F.col("dft") + F.lit(0.5)))
@@ -200,7 +200,7 @@ def rolling_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).distinct()
     spine = pairs.select(F.col("day").alias("d")).distinct()
     j = pairs.join(
-        F.broadcast(spine),
+        spine,
         (F.col("day") <= F.col("d")) & (F.col("day") >= F.date_sub(F.col("d"), 6)),
     )
     return (
@@ -268,7 +268,7 @@ def weighted_order_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = w.agg(F.sum("cents").cast("long").alias("sum_w"))
     d38 = "decimal(38,0)"
     return (
-        w.crossJoin(F.broadcast(tot))
+        w.crossJoin(tot)
         .filter(
             F.col("u24").cast(d38) * F.col("sum_w").cast(d38)
             < F.lit(_WSAMPLE_K).cast(d38) * F.col("cents").cast(d38) * F.lit(16777216)

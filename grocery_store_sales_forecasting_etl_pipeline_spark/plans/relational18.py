@@ -16,9 +16,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans._tables import table as _t
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.registry import register
-from grocery_store_sales_forecasting_etl_pipeline_spark.operators.sizing import (
-    gated_broadcast as _gbcast,
-)
 
 # ---------------------------------------------------------------------------
 # Entity resolution → golden record (survivorship)
@@ -175,7 +172,7 @@ def weekly_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         detr.join(
-            F.broadcast(seas),
+            seas,
             F.weekofyear("week_start").cast("long") == F.col("woy"),
         )
         .select(
@@ -285,10 +282,10 @@ def bigram_pmi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.split_part(F.col("bg"), F.lit(" "), F.lit(2)).alias("w2"),
             "c_xy",
         )
-        .join(_gbcast(u1), "w1")
-        .join(_gbcast(u2), "w2")
-        .crossJoin(F.broadcast(utot))
-        .crossJoin(F.broadcast(btot))
+        .join(u1, "w1")
+        .join(u2, "w2")
+        .crossJoin(utot)
+        .crossJoin(btot)
         .withColumn(
             "lift",
             (F.col("c_xy").cast("double") * F.col("n_uni") * F.col("n_uni"))
@@ -359,7 +356,7 @@ def negative_sample_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ns = _t(spark, sf_dir, "supplier").agg(F.count("*").cast("long").alias("n_supp"))
     cand = (
-        c.crossJoin(_gbcast(ns))
+        c.crossJoin(ns)
         .select(
             F.col("c_custkey").alias("custkey"),
             F.explode(F.sequence(F.lit(1), F.lit(_NEG_DRAWS))).alias("draw"),

@@ -17,9 +17,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans._tables import table as _t
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.registry import register
-from grocery_store_sales_forecasting_etl_pipeline_spark.operators.sizing import (
-    gated_broadcast as _gbcast,
-)
 
 _DEC = "decimal(18,2)"
 
@@ -92,9 +89,9 @@ def cheapest_supplier_per_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = _t(spark, sf_dir, "supplier")
     n = _t(spark, sf_dir, "nation")
     return (
-        best.join(_gbcast(p), F.col("partkey") == F.col("p_partkey"))
-        .join(_gbcast(s), F.col("suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
+        best.join(p, F.col("partkey") == F.col("p_partkey"))
+        .join(s, F.col("suppkey") == F.col("s_suppkey"))
+        .join(n, F.col("s_nationkey") == F.col("n_nationkey"))
         .select(
             "partkey",
             "p_name",
@@ -193,8 +190,8 @@ def part_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "s_suppkey"
     )
     return (
-        li.join(_gbcast(deny), F.col("l_suppkey") == F.col("s_suppkey"), "left_anti")
-        .join(_gbcast(p), F.col("l_partkey") == F.col("p_partkey"))
+        li.join(deny, F.col("l_suppkey") == F.col("s_suppkey"), "left_anti")
+        .join(p, F.col("l_partkey") == F.col("p_partkey"))
         .groupBy("p_type", "p_size")
         .agg(F.count_distinct("l_suppkey").alias("supplier_cnt"))
     )
@@ -252,7 +249,7 @@ def large_quantity_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         o.join(big, F.col("o_orderkey") == F.col("big_orderkey"))
-        .join(_gbcast(c), F.col("o_custkey") == F.col("c_custkey"))
+        .join(c, F.col("o_custkey") == F.col("c_custkey"))
         .join(li, F.col("o_orderkey") == F.col("l_orderkey"))
         .groupBy("c_name", "o_orderkey", "o_orderdate", "o_totalprice")
         .agg(F.sum(F.col("l_quantity").cast("long")).alias("total_qty"))

@@ -16,9 +16,6 @@ from grocery_store_sales_forecasting_etl_pipeline_spark.operators import (
 )
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans._tables import table as _t
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.registry import register
-from grocery_store_sales_forecasting_etl_pipeline_spark.operators.sizing import (
-    gated_broadcast as _gbcast,
-)
 
 # ---------------------------------------------------------------------------
 # Left-semi / left-anti joins (engine extension of reference J1-J3)
@@ -558,7 +555,7 @@ def shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     disc = F.col("l_discount").cast("decimal(18,2)")
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(_gbcast(c), o.o_custkey == c.c_custkey)
+        .join(c, o.o_custkey == c.c_custkey)
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
         .agg(F.sum(price * (F.lit(1) - disc)).cast("double").alias("revenue"))
         .select(

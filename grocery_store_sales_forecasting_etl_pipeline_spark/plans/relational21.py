@@ -22,9 +22,6 @@ from pyspark.sql import DataFrame, SparkSession
 import grocery_store_sales_forecasting_etl_pipeline_spark.operators.dedup as dd
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans._tables import table as _t
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.registry import register
-from grocery_store_sales_forecasting_etl_pipeline_spark.operators.sizing import (
-    gated_broadcast as _gbcast,
-)
 
 # ---------------------------------------------------------------------------
 # Promotion revenue share (TPC-H Q14 shape)
@@ -76,7 +73,7 @@ def promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
             & (F.col("l_shipdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
         )
-        .join(_gbcast(pt.select("p_partkey", "p_type")), li.l_partkey == pt.p_partkey)
+        .join(pt.select("p_partkey", "p_type"), li.l_partkey == pt.p_partkey)
         .select(
             (F.year("l_shipdate") * 100 + F.month("l_shipdate"))
             .cast("long")
@@ -159,7 +156,7 @@ def idle_customer_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderdate") >= F.lit("2000-01-01 00:00:00").cast("timestamp")
     ).select(F.col("o_custkey").alias("c_custkey"))
     idle = (
-        bal.crossJoin(F.broadcast(stats))
+        bal.crossJoin(stats)
         .filter(F.col("cents") * F.col("c") > F.col("s"))
         .join(recent, "c_custkey", "left_anti")
     )
@@ -234,7 +231,7 @@ def doc_boilerplate_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n = d.agg(F.count("*").cast("long").alias("n_docs"))
     df_frame = sh.groupBy("shingle").agg(F.count("*").cast("long").alias("df"))
-    flagged = sh.join(df_frame, "shingle").crossJoin(F.broadcast(n))
+    flagged = sh.join(df_frame, "shingle").crossJoin(n)
     boiler = F.sum(
         F.when(F.col("df") * 100 >= F.col("n_docs"), F.lit(1)).otherwise(F.lit(0))
     )

@@ -28,9 +28,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans._tables import table as _t
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.registry import register
-from grocery_store_sales_forecasting_etl_pipeline_spark.operators.sizing import (
-    gated_broadcast as _gbcast,
-)
 
 # ---------------------------------------------------------------------------
 # RFM segmentation
@@ -96,11 +93,9 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
         )
         .join(
-            _gbcast(
-                c.select(
-                    F.col("c_custkey").alias("custkey"),
-                    F.col("c_mktsegment").alias("segment"),
-                )
+            c.select(
+                F.col("c_custkey").alias("custkey"),
+                F.col("c_mktsegment").alias("segment"),
             ),
             F.col("o_custkey") == F.col("custkey"),
         )
@@ -110,7 +105,7 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").cast("long").alias("frequency"),
             F.sum("cents").cast("long").alias("monetary_cents"),
         )
-        .crossJoin(F.broadcast(anchor))
+        .crossJoin(anchor)
         .withColumn(
             "recency_days", F.datediff(F.col("mx"), F.col("last_order")).cast("long")
         )
@@ -263,7 +258,7 @@ def event_trigram_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("e2").isNotNull() & F.col("e3").isNotNull())
     c = s.groupBy("e1", "e2", "e3").agg(F.count("*").cast("long").alias("n"))
     total = c.agg(F.sum("n").alias("t"))
-    return c.crossJoin(F.broadcast(total)).select(
+    return c.crossJoin(total).select(
         "e1",
         "e2",
         "e3",

@@ -23,9 +23,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans._tables import table as _t
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.registry import register
-from grocery_store_sales_forecasting_etl_pipeline_spark.operators.sizing import (
-    gated_broadcast as _gbcast,
-)
 
 # ---------------------------------------------------------------------------
 # Spend-quartile migration matrix
@@ -90,11 +87,9 @@ def rfm_migration_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
         )
         .join(
-            _gbcast(
-                c.select(
-                    F.col("c_custkey").alias("custkey"),
-                    F.col("c_mktsegment").alias("segment"),
-                )
+            c.select(
+                F.col("c_custkey").alias("custkey"),
+                F.col("c_mktsegment").alias("segment"),
             ),
             F.col("o_custkey") == F.col("custkey"),
         )
@@ -257,7 +252,7 @@ def group_rare_category_collapse(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("long").alias("n")
     )
     tot = cnt.agg(F.sum("n").cast("long").alias("t"))
-    mapped = cnt.crossJoin(F.broadcast(tot)).select(
+    mapped = cnt.crossJoin(tot).select(
         F.when(F.col("n") * 1000 < F.col("t") * 15, F.lit("__other__"))
         .otherwise(F.col("category"))
         .alias("category"),
@@ -329,7 +324,7 @@ def orders_seasonality_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("rev_cents").cast("long").alias("year_cents"),
         F.count("*").cast("long").alias("n_months"),
     )
-    return m.join(F.broadcast(y), "yr").select(
+    return m.join(y, "yr").select(
         "yr",
         "mon",
         "n_orders",

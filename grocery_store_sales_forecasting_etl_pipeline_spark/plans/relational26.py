@@ -22,9 +22,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans._tables import table as _t
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.registry import register
-from grocery_store_sales_forecasting_etl_pipeline_spark.operators.sizing import (
-    gated_broadcast as _gbcast,
-)
 
 # ---------------------------------------------------------------------------
 # Discount lift ladder
@@ -84,7 +81,7 @@ def discount_quantity_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     per_line = F.col("total_qty") * 1.0 / F.col("n_lines")
     base_per_line = F.col("b_qty") * 1.0 / F.col("b_lines")
-    return lvl.crossJoin(F.broadcast(base)).select(
+    return lvl.crossJoin(base).select(
         "discount_pct",
         "n_lines",
         "total_qty",
@@ -146,11 +143,11 @@ def event_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         pairs.join(
-            F.broadcast(sz.select(F.col("event_type").alias("type_a"), F.col("n_users").alias("n_a"))),
+            sz.select(F.col("event_type").alias("type_a"), F.col("n_users").alias("n_a")),
             "type_a",
         )
         .join(
-            F.broadcast(sz.select(F.col("event_type").alias("type_b"), F.col("n_users").alias("n_b"))),
+            sz.select(F.col("event_type").alias("type_b"), F.col("n_users").alias("n_b")),
             "type_b",
         )
         .select(
@@ -218,13 +215,13 @@ def basket_size_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").cast("long").alias("basket_lines"))
     )
     dim = o.select("o_orderkey", "o_custkey").join(
-        _gbcast(c.select("c_custkey", F.col("c_mktsegment").alias("segment"))),
+        c.select("c_custkey", F.col("c_mktsegment").alias("segment")),
         F.col("o_custkey") == F.col("c_custkey"),
     ).select("o_orderkey", "segment")
     b = counts.join(dim, F.col("l_orderkey") == F.col("o_orderkey"))
     d = b.groupBy("segment", "basket_lines").agg(F.count("*").cast("long").alias("n_orders"))
     t = d.groupBy("segment").agg(F.sum("n_orders").cast("long").alias("seg_orders"))
-    return d.join(F.broadcast(t), "segment").select(
+    return d.join(t, "segment").select(
         "segment",
         "basket_lines",
         "n_orders",
@@ -282,7 +279,7 @@ def weekday_hour_activity_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame
         .agg(F.count("*").cast("long").alias("n_events"))
     )
     t = h.agg(F.sum("n_events").cast("long").alias("total"))
-    return h.crossJoin(F.broadcast(t)).select(
+    return h.crossJoin(t).select(
         "isodow",
         "hr",
         "n_events",

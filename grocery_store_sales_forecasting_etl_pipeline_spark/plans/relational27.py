@@ -129,7 +129,7 @@ def ship_delay_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mx = s.agg(F.max("diff").alias("mx"))
     return (
-        s.crossJoin(F.broadcast(mx))
+        s.crossJoin(mx)
         .agg(
             F.max("n_r").cast("long").alias("n_r"),
             F.max("n_n").cast("long").alias("n_n"),

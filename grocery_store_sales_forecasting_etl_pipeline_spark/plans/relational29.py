@@ -167,15 +167,15 @@ def ratio_to_parent_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     re = _t(spark, sf_dir, "region")
     dim = (
         c.select("c_custkey", "c_nationkey")
-        .join(F.broadcast(na.select("n_nationkey", "n_regionkey", F.col("n_name").alias("nation"))),
+        .join(na.select("n_nationkey", "n_regionkey", F.col("n_name").alias("nation")),
               F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(re.select("r_regionkey", F.col("r_name").alias("region"))),
+        .join(re.select("r_regionkey", F.col("r_name").alias("region")),
               F.col("n_regionkey") == F.col("r_regionkey"))
         .select("c_custkey", "nation", "region")
     )
     n = (
         o.select("o_custkey", F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"))
-        .join(_gbcast(dim), F.col("o_custkey") == F.col("c_custkey"))
+        .join(dim, F.col("o_custkey") == F.col("c_custkey"))
         .groupBy("region", "nation")
         .agg(F.sum("cents").cast("long").alias("nation_cents"))
     )
@@ -299,7 +299,7 @@ def embedding_maha_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sort_array(F.collect_list(F.struct("dim", "var"))), lambda s: s["var"]
         ).alias("vars"),
     )
-    scored = e.crossJoin(F.broadcast(arrs)).select(
+    scored = e.crossJoin(arrs).select(
         "vec_id",
         F.aggregate(
             F.sequence(F.lit(1), F.size("vm")),
@@ -366,11 +366,12 @@ def nation_supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = _t(spark, sf_dir, "supplier")
     na = _t(spark, sf_dir, "nation")
     dim = s.select("s_suppkey", "s_nationkey").join(
-        F.broadcast(na.select("n_nationkey", F.col("n_name").alias("nation"))),
+        na.select("n_nationkey", F.col("n_name").alias("nation")),
         F.col("s_nationkey") == F.col("n_nationkey"),
     ).select("s_suppkey", "nation")
     sr = (
         li.select("l_suppkey", F.round(F.col("l_extendedprice") * 100).cast("long").alias("c"))
+        # A/B sf0.1: 0.62 s with, 0.92 s without the hint
         .join(_gbcast(dim), F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy("nation", "l_suppkey")
         .agg(F.sum("c").cast("long").alias("cents"))

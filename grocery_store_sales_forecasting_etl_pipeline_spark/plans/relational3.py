@@ -10,9 +10,6 @@ from pyspark.sql import DataFrame, SparkSession
 from grocery_store_sales_forecasting_etl_pipeline_spark.operators import aggregates as agg_ops
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans._tables import table as _t
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.registry import register
-from grocery_store_sales_forecasting_etl_pipeline_spark.operators.sizing import (
-    gated_broadcast as _gbcast,
-)
 
 # ---------------------------------------------------------------------------
 # Pivot (wide conditional-aggregation matrix)
@@ -115,7 +112,7 @@ def fd_first_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
     c = _t(spark, sf_dir, "customer")
     return (
-        o.join(_gbcast(c), o.o_custkey == c.c_custkey)
+        o.join(c, o.o_custkey == c.c_custkey)
         .groupBy("o_custkey")
         .agg(
             F.count("*").alias("n_orders"),

@@ -20,9 +20,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans._tables import table as _t
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.registry import register
-from grocery_store_sales_forecasting_etl_pipeline_spark.operators.sizing import (
-    gated_broadcast as _gbcast,
-)
 
 # ---------------------------------------------------------------------------
 # Quarter-over-quarter growth per region
@@ -71,9 +68,9 @@ def region_quarter_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     re = _t(spark, sf_dir, "region")
     dim = (
         c.select("c_custkey", "c_nationkey")
-        .join(F.broadcast(na.select("n_nationkey", "n_regionkey")),
+        .join(na.select("n_nationkey", "n_regionkey"),
               F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(re.select("r_regionkey", F.col("r_name").alias("region"))),
+        .join(re.select("r_regionkey", F.col("r_name").alias("region")),
               F.col("n_regionkey") == F.col("r_regionkey"))
         .select("c_custkey", "region")
     )
@@ -83,7 +80,7 @@ def region_quarter_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.year("o_orderdate") * 10 + F.quarter("o_orderdate")).cast("long").alias("yq"),
             F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
         )
-        .join(_gbcast(dim), F.col("o_custkey") == F.col("c_custkey"))
+        .join(dim, F.col("o_custkey") == F.col("c_custkey"))
         .groupBy("region", "yq")
         .agg(
             F.count("*").cast("long").alias("n_orders"),
@@ -228,7 +225,7 @@ def brand_repeat_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     pt = _t(spark, sf_dir, "part")
     cb = (
         li.select("l_orderkey", "l_partkey")
-        .join(_gbcast(pt.select("p_partkey", F.col("p_brand").alias("brand"))),
+        .join(pt.select("p_partkey", F.col("p_brand").alias("brand")),
               F.col("l_partkey") == F.col("p_partkey"))
         .join(o.select("o_orderkey", "o_custkey"), F.col("l_orderkey") == F.col("o_orderkey"))
         .groupBy("brand", "o_custkey")

@@ -21,9 +21,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans._tables import table as _t
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.registry import register
-from grocery_store_sales_forecasting_etl_pipeline_spark.operators.sizing import (
-    gated_broadcast as _gbcast,
-)
 
 # ---------------------------------------------------------------------------
 # Open-order backlog aging
@@ -62,7 +59,7 @@ def orders_backlog_aging(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchor = o.agg(F.max("o_orderdate").alias("mx"))
     a = (
         o.filter(F.col("o_orderstatus") != "F")
-        .crossJoin(F.broadcast(anchor))
+        .crossJoin(anchor)
         .select(
             F.col("o_orderstatus").alias("status"),
             F.least(
@@ -129,7 +126,7 @@ def promo_uplift_did(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     pt = _t(spark, sf_dir, "part")
     r = (
-        li.join(_gbcast(pt.select("p_partkey", "p_type")), li.l_partkey == pt.p_partkey)
+        li.join(pt.select("p_partkey", "p_type"), li.l_partkey == pt.p_partkey)
         .select(
             F.when(F.col("p_type") == "PROMO", F.lit(1)).otherwise(F.lit(0)).alias("is_promo"),
             F.when(
@@ -158,7 +155,7 @@ def promo_uplift_did(spark: SparkSession, sf_dir: str) -> DataFrame:
         cell(1, 0).alias("pb"), cell(1, 1).alias("pa"),
         cell(0, 0).alias("cb"), cell(0, 1).alias("ca"),
     )
-    return g.crossJoin(F.broadcast(w)).select(
+    return g.crossJoin(w).select(
         "is_promo",
         "is_after",
         "n_lines",

@@ -23,9 +23,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans._tables import table as _t
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.registry import register
-from grocery_store_sales_forecasting_etl_pipeline_spark.operators.sizing import (
-    gated_broadcast as _gbcast,
-)
 
 # ---------------------------------------------------------------------------
 # Late-shipment priority pivot (TPC-H Q12 shape)
@@ -149,7 +146,7 @@ def part_dominant_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
             & (F.col("l_shipdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
         )
-        .join(_gbcast(part_keys), li.l_partkey == F.col("p_partkey"), "left_semi")
+        .join(part_keys, li.l_partkey == F.col("p_partkey"), "left_semi")
         .select(
             "l_partkey",
             "l_suppkey",
@@ -169,8 +166,8 @@ def part_dominant_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("n_nationkey")
     )
     return (
-        dom.join(_gbcast(sup), dom.l_suppkey == sup.s_suppkey)
-        .join(F.broadcast(nat), sup.s_nationkey == F.col("n_nationkey"))
+        dom.join(sup, dom.l_suppkey == sup.s_suppkey)
+        .join(nat, sup.s_nationkey == F.col("n_nationkey"))
         .groupBy("s_name")
         .agg(
             F.count("*").cast("long").alias("n_parts_dominated"),

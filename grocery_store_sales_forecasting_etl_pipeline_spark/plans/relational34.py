@@ -87,8 +87,8 @@ def priority_status_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     prios = observed.select("prio").distinct()
     statuses = observed.select("status").distinct()
     cells = (
-        prios.crossJoin(F.broadcast(statuses))
-        .join(F.broadcast(observed), ["prio", "status"], "left")
+        prios.crossJoin(statuses)
+        .join(observed, ["prio", "status"], "left")
         .select("prio", "status", F.coalesce("n", F.lit(0)).cast("long").alias("n"))
     )
     w_all = Window.partitionBy()
@@ -161,7 +161,7 @@ def lang_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     keep_all = F.col("n_survive") < F.lit(_QUOTA)
     bounds = counts.select("lang", keep_all.alias("keep_all"))
-    pruned = hashed.join(F.broadcast(bounds), "lang").filter(
+    pruned = hashed.join(bounds, "lang").filter(
         F.col("keep_all") | (F.col("h") < "40")
     )
     rk = F.row_number().over(Window.partitionBy("lang").orderBy("h", "doc_id"))

@@ -22,9 +22,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans._tables import table as _t
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.registry import register
-from grocery_store_sales_forecasting_etl_pipeline_spark.operators.sizing import (
-    gated_broadcast as _gbcast,
-)
 
 # ---------------------------------------------------------------------------
 # Referential-integrity orphan audit (all fact->dim FKs in one result)
@@ -70,7 +67,7 @@ def fk_orphan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     def leg(fact: str, fk: str, dim: str, pk: str, label: str) -> DataFrame:
         f = _t(spark, sf_dir, fact).select(fk)
         d = _t(spark, sf_dir, dim).select(pk)
-        orphans = f.join(_gbcast(d), f[fk] == d[pk], "left_anti")
+        orphans = f.join(d, f[fk] == d[pk], "left_anti")
         return orphans.agg(
             F.count("*").cast("long").alias("n_orphans"),
             F.min(fk).cast("long").alias("example_key"),

@@ -30,9 +30,6 @@ from grocery_store_sales_forecasting_etl_pipeline_spark.plans.registry import re
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.scalerank import (
     value_cum_counts,
 )
-from grocery_store_sales_forecasting_etl_pipeline_spark.operators.sizing import (
-    gated_broadcast as _gbcast,
-)
 
 # ---------------------------------------------------------------------------
 # Mann-Whitney rank-sum: ship delay of returned vs kept line items
@@ -244,11 +241,9 @@ def acctbal_spend_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.round(F.col("o_totalprice") * 100)).cast("long").alias("y")
         )
         .join(
-            _gbcast(
-                c.select(
-                    "c_custkey",
-                    F.round(F.col("c_acctbal") * 100).cast("long").alias("x"),
-                )
+            c.select(
+                "c_custkey",
+                F.round(F.col("c_acctbal") * 100).cast("long").alias("x"),
             ),
             F.col("o_custkey") == F.col("c_custkey"),
         )
@@ -360,7 +355,7 @@ def weekly_qty_revenue_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = w.select(
         F.col("week_start").alias("ws_b"), F.col("qty").alias("qb"), F.col("rev").alias("rb")
     )
-    p = a.join(F.broadcast(b), F.col("ws_a") < F.col("ws_b"))
+    p = a.join(b, F.col("ws_a") < F.col("ws_b"))
     sign = (F.col("qa") - F.col("qb")) * (F.col("ra") - F.col("rb"))
     s = p.agg(
         F.count("*").cast("long").alias("n_pairs"),

@@ -26,9 +26,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans._tables import table as _t
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.registry import register
-from grocery_store_sales_forecasting_etl_pipeline_spark.operators.sizing import (
-    gated_broadcast as _gbcast,
-)
 
 # ---------------------------------------------------------------------------
 # ABC revenue classification
@@ -428,7 +425,7 @@ def brand_safety_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wk = (
         li.join(
-            _gbcast(p.select("p_partkey", "p_brand")),
+            p.select("p_partkey", "p_brand"),
             F.col("l_partkey") == F.col("p_partkey"),
         )
         .groupBy(F.col("p_brand").alias("brand"), monday.alias("week_start"))
@@ -448,7 +445,7 @@ def brand_safety_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("qty").cast(dec)).alias("sq"),
         F.sum(F.col("qty").cast(dec) * F.col("qty")).alias("sqq"),
     )
-    j = agg.crossJoin(F.broadcast(span))
+    j = agg.crossJoin(span)
     s_d = F.col("s").cast("double")
     sq_d = F.col("sq").cast("double")
     sqq_d = F.col("sqq").cast("double")

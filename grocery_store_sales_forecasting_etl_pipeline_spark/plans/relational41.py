@@ -196,7 +196,7 @@ def order_mean_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast(dec)
         .alias("tot"),
     )
-    s = base.crossJoin(F.broadcast(m)).select(
+    s = base.crossJoin(m).select(
         "n_orders",
         (F.col("tot").cast("double") / F.col("n_orders")).alias("point_mean"),
         F.aggregate("means", F.lit(0.0), lambda acc, x: acc + x).alias("sm"),
@@ -302,7 +302,7 @@ def zipf_slope_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     slope = (F.col("k") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
         F.col("k") * F.col("sxx") - F.col("sx") * F.col("sx")
     )
-    return s.crossJoin(F.broadcast(top)).select(
+    return s.crossJoin(top).select(
         F.col("k").cast("long").alias("k_tokens"),
         "top_count",
         F.round(slope, 4).alias("zipf_slope"),
@@ -374,7 +374,7 @@ def doc_unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sc = (
         tok.join(cnt, "token")
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .groupBy("doc_id")
         .agg(
             F.count("*").cast("long").alias("n_tokens"),
@@ -452,7 +452,7 @@ def source_type_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     docs = d.groupBy("source").agg(F.count("*").cast("long").alias("n_docs"))
     return (
-        agg.join(F.broadcast(docs), "source")
+        agg.join(docs, "source")
         .select(
             "source",
             "n_docs",

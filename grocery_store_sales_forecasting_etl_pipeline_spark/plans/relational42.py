@@ -216,7 +216,7 @@ def theil_sen_weekly_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = w.select(F.col("x").alias("xa"), F.col("y").alias("ya"))
     b = w.select(F.col("x").alias("xb"), F.col("y").alias("yb"))
-    p = a.join(F.broadcast(b), F.col("xa") < F.col("xb")).select(
+    p = a.join(b, F.col("xa") < F.col("xb")).select(
         ((F.col("yb") - F.col("ya")) / (F.col("xb") - F.col("xa")).cast("double")).alias(
             "slope"
         )
@@ -239,7 +239,7 @@ def theil_sen_weekly_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("x").cast(dec) * F.col("x")).alias("sxx"),
         F.sum(F.col("x").cast(dec) * F.col("y")).alias("sxy"),
     )
-    return s.crossJoin(F.broadcast(med)).select(
+    return s.crossJoin(med).select(
         F.col("n").cast("long").alias("n_weeks"),
         (F.col("n") * (F.col("n") - 1) / 2).cast("long").alias("n_pairs"),
         F.round("ts_slope", 4).alias("ts_slope"),
@@ -411,7 +411,7 @@ def hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         score = piece if score is None else score + piece
     brank = (
         perdoc.filter(any_term)
-        .crossJoin(F.broadcast(stats))
+        .crossJoin(stats)
         .select("doc_id", score.alias("score"))
         .withColumn(
             "rk", F.row_number().over(Window.orderBy(F.col("score").desc(), "doc_id"))
@@ -555,7 +555,7 @@ def empirical_bayes_return_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = F.col("sp") / F.col("k")
     v = (F.col("spp") - F.col("sp") * F.col("sp") / F.col("k")) / (F.col("k") - 1)
     prior = mom.select(m.alias("m"), (m * (1 - m) / v - 1).alias("kappa"))
-    return pr.crossJoin(F.broadcast(prior)).select(
+    return pr.crossJoin(prior).select(
         "partkey",
         "n_lines",
         "n_returns",

@@ -24,9 +24,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans._tables import table as _t
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.registry import register
-from grocery_store_sales_forecasting_etl_pipeline_spark.operators.sizing import (
-    gated_broadcast as _gbcast,
-)
 
 # ---------------------------------------------------------------------------
 # Bloom-filter join pre-filter audit
@@ -148,15 +145,13 @@ def bloom_filter_join_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # three jobs — measured 20.3s -> fixed at the sf1 probe)
     hits = (
         positions(probe)
-        .join(F.broadcast(bits), "pos")
+        .join(bits, "pos")
         .groupBy("k")
         .agg(F.count("*").alias("n_hit"))
     )
     perkey = (
         probe.join(hits, "k", "left")
-        .join(
-            _gbcast(build.select("k", F.lit(1).alias("is_true"))), "k", "left"
-        )
+        .join(build.select("k", F.lit(1).alias("is_true")), "k", "left")
         .select(
             F.when(F.col("n_hit") == _BLOOM_K, 1).otherwise(0).alias("passed"),
             F.coalesce(F.col("is_true"), F.lit(0)).alias("is_true"),
@@ -169,8 +164,8 @@ def bloom_filter_join_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     s = (
         build.agg(F.count("*").cast("long").alias("n_build"))
-        .crossJoin(F.broadcast(probe_tot))
-        .crossJoin(F.broadcast(bits.agg(F.count("*").cast("long").alias("n_set_bits"))))
+        .crossJoin(probe_tot)
+        .crossJoin(bits.agg(F.count("*").cast("long").alias("n_set_bits")))
     )
     theory = F.pow(
         1 - F.exp(F.lit(-float(_BLOOM_K)) * F.col("n_build") / F.lit(_BLOOM_M)),
@@ -296,18 +291,16 @@ def kmv_jaccard_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("h")
     )
     shared = (
-        un.join(F.broadcast(sa), "h", "left_semi")
-        .join(F.broadcast(sb), "h", "left_semi")
+        un.join(sa, "h", "left_semi")
+        .join(sb, "h", "left_semi")
         .agg(F.count("*").cast("long").alias("kmv_shared"))
     )
     n_a = a.agg(F.count("*").cast("long").alias("n_a"))
     n_b = b.agg(F.count("*").cast("long").alias("n_b"))
-    n_i = a.join(_gbcast(b), "k", "left_semi").agg(
+    n_i = a.join(b, "k", "left_semi").agg(
         F.count("*").cast("long").alias("n_intersect")
     )
-    s = n_a.crossJoin(F.broadcast(n_b)).crossJoin(F.broadcast(n_i)).crossJoin(
-        F.broadcast(shared)
-    )
+    s = n_a.crossJoin(n_b).crossJoin(n_i).crossJoin(shared)
     return s.select(
         "n_a",
         "n_b",
@@ -436,7 +429,7 @@ def weekly_esd_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         z = (F.col("y") - mean) / std
         m = (
-            remaining.crossJoin(F.broadcast(s))
+            remaining.crossJoin(s)
             .select("x", "y", z.alias("z"))
             .orderBy(F.abs(F.col("z")).desc(), "x")
             .limit(1)

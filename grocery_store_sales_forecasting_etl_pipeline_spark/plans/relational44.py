@@ -143,14 +143,14 @@ def huber_weekly_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(_HUBER_C) * F.col("scale") / r
         )
         cur = (
-            w.crossJoin(F.broadcast(cur.select("n_weeks", "m", "scale")))
+            w.crossJoin(cur.select("n_weeks", "m", "scale"))
             .agg(
                 F.max("n_weeks").alias("n_weeks"),
                 (F.sum(wgt * F.col("y")) / F.sum(wgt)).alias("m"),
                 F.max("scale").alias("scale"),
             )
         )
-    return cur.crossJoin(F.broadcast(init.select(F.col("m").alias("m0"), F.col("scale").alias("s0")))).select(
+    return cur.crossJoin(init.select(F.col("m").alias("m0"), F.col("scale").alias("s0"))).select(
         "n_weeks",
         F.round("m0", 4).alias("plain_mean"),
         F.round("s0", 4).alias("scale"),

@@ -21,9 +21,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans._tables import table as _t
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.registry import register
-from grocery_store_sales_forecasting_etl_pipeline_spark.operators.sizing import (
-    gated_broadcast as _gbcast,
-)
 
 # ---------------------------------------------------------------------------
 # Nearest as-of join: closest click to each purchase (either direction)
@@ -206,7 +203,7 @@ def repeat_purchase_gap_percentiles(spark: SparkSession, sf_dir: str) -> DataFra
     o = _t(spark, sf_dir, "orders")
     c = _t(spark, sf_dir, "customer")
     j = o.join(
-        _gbcast(c.select("c_custkey", "c_mktsegment")),
+        c.select("c_custkey", "c_mktsegment"),
         F.col("o_custkey") == F.col("c_custkey"),
     ).select(
         F.col("c_mktsegment").alias("segment"),

@@ -22,9 +22,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans._tables import table as _t
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.registry import register
-from grocery_store_sales_forecasting_etl_pipeline_spark.operators.sizing import (
-    gated_broadcast as _gbcast,
-)
 
 # ---------------------------------------------------------------------------
 # Cohort LTV curve
@@ -104,7 +101,7 @@ def cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     sizes = cohorts.groupBy("cw").agg(F.count("*").cast("long").alias("cohort_users"))
     purch = (
         e.filter(F.col("event_type") == "purchase")
-        .join(_gbcast(cohorts), "user_id")
+        .join(cohorts, "user_id")
         .groupBy(
             "cw",
             (F.datediff(monday(F.col("ts").cast("date")), F.col("cw")) / 7)
@@ -127,7 +124,7 @@ def cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_purchases",
         F.sum("rev").over(w_cum).cast("long").alias("cum_revenue_cents"),
     )
-    return cum.join(F.broadcast(sizes), "cw").select(
+    return cum.join(sizes, "cw").select(
         F.col("cw").alias("cohort_week"),
         "age_weeks",
         "n_purchases",
@@ -197,8 +194,8 @@ def shift_share_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = _t(spark, sf_dir, "nation")
     r = (
         li.filter(F.year("l_shipdate").isin(1996, 1997))
-        .join(_gbcast(s.select("s_suppkey", "s_nationkey")), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(n.select("n_nationkey", "n_name")), F.col("s_nationkey") == F.col("n_nationkey"))
+        .join(s.select("s_suppkey", "s_nationkey"), F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(n.select("n_nationkey", "n_name"), F.col("s_nationkey") == F.col("n_nationkey"))
         .groupBy(F.col("n_name").alias("nation"), F.year("l_shipdate").alias("yr"))
         .agg(
             F.sum(
@@ -221,7 +218,7 @@ def shift_share_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = p.agg(
         F.sum("r0").cast("long").alias("t0"), F.sum("r1").cast("long").alias("t1")
     )
-    j = p.crossJoin(F.broadcast(tot))
+    j = p.crossJoin(tot)
     tide = F.col("r0") * (F.col("t1").cast("double") / F.col("t0") - 1)
     return j.select(
         "nation",
@@ -298,7 +295,7 @@ def brand_price_indices(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = _t(spark, sf_dir, "part")
     py = (
         li.filter(F.year("l_shipdate").isin(1996, 1997))
-        .join(_gbcast(p.select("p_partkey", "p_brand")), F.col("l_partkey") == F.col("p_partkey"))
+        .join(p.select("p_partkey", "p_brand"), F.col("l_partkey") == F.col("p_partkey"))
         .groupBy(
             F.col("p_brand").alias("brand"),
             F.col("l_partkey").alias("partkey"),

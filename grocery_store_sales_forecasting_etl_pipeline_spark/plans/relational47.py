@@ -213,7 +213,7 @@ def model_gains_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = F.floor(F.col("n_all") / 10)
     rem = F.col("n_all") % 10
     cut = rem * (base + 1)
-    dec = ranked.crossJoin(F.broadcast(tot)).select(
+    dec = ranked.crossJoin(tot).select(
         "pos",
         F.when(F.col("rn") <= cut, F.floor((F.col("rn") - 1) / (base + 1)) + 1)
         .otherwise(rem + F.floor((F.col("rn") - cut - 1) / base) + 1)
@@ -333,7 +333,7 @@ def calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
         bucketed_row_number(
             lab, "o_totalprice", ["o_orderkey"], coarse_div=100
         )
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .select("pos", (F.col("rn") - 1).alias("rn0"), "n_all")
     )
     b = rk.select(

@@ -25,9 +25,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans._tables import table as _t
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.registry import register
-from grocery_store_sales_forecasting_etl_pipeline_spark.operators.sizing import (
-    gated_broadcast as _gbcast,
-)
 
 # ---------------------------------------------------------------------------
 # Economic order quantity per brand
@@ -77,7 +74,7 @@ def brand_eoq(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     p = _t(spark, sf_dir, "part")
     d = (
-        li.join(_gbcast(p.select("p_partkey", "p_brand")),
+        li.join(p.select("p_partkey", "p_brand"),
                 li.l_partkey == F.col("p_partkey"))
         .groupBy(F.col("p_brand").alias("brand"))
         .agg(
@@ -167,7 +164,7 @@ def brand_newsvendor_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     p = _t(spark, sf_dir, "part")
     wd = (
-        li.join(_gbcast(p.select("p_partkey", "p_brand")),
+        li.join(p.select("p_partkey", "p_brand"),
                 li.l_partkey == F.col("p_partkey"))
         .groupBy(
             F.col("p_brand").alias("brand"),

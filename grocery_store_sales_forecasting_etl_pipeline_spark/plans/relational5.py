@@ -32,9 +32,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans._tables import table as _t
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.registry import register
-from grocery_store_sales_forecasting_etl_pipeline_spark.operators.sizing import (
-    gated_broadcast as _gbcast,
-)
 
 _DEC = "decimal(18,2)"
 
@@ -123,7 +120,7 @@ def important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.sum("value_dec").cast("double") * F.lit(0.00065)).alias("__thresh")
     )
     return (
-        partval.join(F.broadcast(threshold))
+        partval.join(threshold)
         .filter(F.col("value_dec").cast("double") > F.col("__thresh"))
         .select(
             F.col("l_partkey").alias("partkey"),
@@ -175,9 +172,9 @@ def top_revenue_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mx = rev.agg(F.max("total_dec").alias("__max_dec"))
     return (
-        rev.join(F.broadcast(mx))
+        rev.join(mx)
         .filter(F.col("total_dec") == F.col("__max_dec"))
-        .join(_gbcast(s), F.col("suppkey") == F.col("s_suppkey"))
+        .join(s, F.col("suppkey") == F.col("s_suppkey"))
         .select(
             "s_suppkey",
             "s_name",
@@ -220,7 +217,7 @@ def small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.lit(0.5) * F.avg("l_quantity")).alias("__half_avg")
     )
     small = (
-        l.join(_gbcast(p), F.col("l_partkey") == F.col("p_partkey"))
+        l.join(p, F.col("l_partkey") == F.col("p_partkey"))
         .join(half_avg.withColumnRenamed("l_partkey", "__pk"), F.col("l_partkey") == F.col("__pk"))
         .filter(F.col("l_quantity") < F.col("__half_avg"))
     )
@@ -297,7 +294,7 @@ def lone_late_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         "left_anti",
     )
     return (
-        sole.join(_gbcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
+        sole.join(s, F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy("s_name")
         .agg(F.count("*").alias("numwait"))
     )

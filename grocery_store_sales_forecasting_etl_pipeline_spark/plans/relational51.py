@@ -28,9 +28,6 @@ from grocery_store_sales_forecasting_etl_pipeline_spark.plans.relational15 impor
     _WEEKLY_CTE,
     _weekly_dollars,
 )
-from grocery_store_sales_forecasting_etl_pipeline_spark.operators.sizing import (
-    gated_broadcast as _gbcast,
-)
 
 # ---------------------------------------------------------------------------
 # Per-document bigram surprisal
@@ -114,10 +111,10 @@ def doc_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     sc = (
         bi.join(bcnt, "bg")
         .join(
-            _gbcast(ucnt),
+            ucnt,
             F.split_part(F.col("bg"), F.lit(" "), F.lit(1)) == F.col("w"),
         )
-        .crossJoin(F.broadcast(vocab))
+        .crossJoin(vocab)
         .groupBy("doc_id")
         .agg(
             F.count("*").cast("long").alias("n_bigrams"),
@@ -200,8 +197,8 @@ def supplier_overlap_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     z1 = sz.select(F.col("s").alias("s1"), F.col("a").alias("n_parts_1"))
     z2 = sz.select(F.col("s").alias("s2"), F.col("a").alias("n_parts_2"))
     j = (
-        inter.join(_gbcast(z1), "s1")
-        .join(_gbcast(z2), "s2")
+        inter.join(z1, "s1")
+        .join(z2, "s2")
         .select(
             "s1",
             "s2",
@@ -274,11 +271,11 @@ def nation_brand_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = _t(spark, sf_dir, "part")
     d38 = "decimal(38,0)"
     mix = (
-        li.join(_gbcast(s.select("s_suppkey", "s_nationkey")),
+        li.join(s.select("s_suppkey", "s_nationkey"),
                 li.l_suppkey == F.col("s_suppkey"))
-        .join(F.broadcast(n.select("n_nationkey", "n_name")),
+        .join(n.select("n_nationkey", "n_name"),
               F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(_gbcast(p.select("p_partkey", "p_brand")),
+        .join(p.select("p_partkey", "p_brand"),
               li.l_partkey == F.col("p_partkey"))
         .groupBy(F.col("n_name").alias("nation"), F.col("p_brand").alias("brand"))
         .agg(F.count("*").cast("long").alias("c"))

@@ -138,7 +138,7 @@ def price_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = base.filter(F.col("period") == "a")
     cc = value_cum_counts(a.select("cents"), "cents", coarse_div=10000)
     tot = cc.agg(F.sum("c").cast("long").alias("n"))
-    edges = cc.crossJoin(F.broadcast(tot)).agg(
+    edges = cc.crossJoin(tot).agg(
         *[
             F.min(
                 F.when(
@@ -152,7 +152,7 @@ def price_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     bin_expr = sum(
         F.when(F.col("cents") > F.col(f"e{k}"), 1).otherwise(0) for k in range(1, 10)
     )
-    binned = base.crossJoin(F.broadcast(edges)).select(
+    binned = base.crossJoin(edges).select(
         "period", bin_expr.cast("long").alias("bin")
     )
     per = binned.groupBy("bin").agg(
@@ -284,7 +284,7 @@ def brown_forsythe_variance_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("g")
         .agg(F.min("cents").cast("long").alias("m"))
     )
-    z = x.join(F.broadcast(med), "g").select(
+    z = x.join(med, "g").select(
         "g", F.abs(F.col("cents") - F.col("m")).alias("z")
     )
     d38 = "decimal(38,0)"

@@ -25,9 +25,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans._tables import table as _t
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.registry import register
-from grocery_store_sales_forecasting_etl_pipeline_spark.operators.sizing import (
-    gated_broadcast as _gbcast,
-)
 
 # ---------------------------------------------------------------------------
 # Per-user event cadence regularity
@@ -326,7 +323,7 @@ def sign_sketch_hamming_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             - F.col("sy").cast("double") * F.col("sy").cast("double")
         )
     )
-    return sc.crossJoin(F.broadcast(corr)).select(
+    return sc.crossJoin(corr).select(
         "id_1",
         "id_2",
         "hamming",
@@ -391,14 +388,11 @@ def supplier_part_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     with one identical double tree, rounded once.
 
     Scale notes: one distinct fold to the edge list, two degree folds
-    (map-side combinable), and two joins whose degree side carries a
-    SIZE-GATED broadcast hint (r12: the hint is kept while the source
-    input is small and dropped at scale so AQE picks the strategy from
-    actual sizes — the degree frames are supplier/part-grain and grow
-    with the data, so an unconditional broadcast was the r11 verdict's
-    named 100 TB scale-killer). The final Pearson is a scalar
-    aggregate. The edge list never self-joins — cost is linear in
-    edges, unlike the pairwise Jaccard sibling.
+    (map-side combinable), and two joins on the degree frames, which
+    carry no hint: they are supplier/part-grain and grow with the data,
+    so the planner and AQE pick the join from their sizes. The final
+    Pearson is a scalar aggregate. The edge list never self-joins —
+    cost is linear in edges, unlike the pairwise Jaccard sibling.
     """
     li = _t(spark, sf_dir, "lineitem")
     ed = (
@@ -409,8 +403,8 @@ def supplier_part_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ds = ed.groupBy("s").agg(F.count("*").cast("long").alias("deg_s"))
     dp = ed.groupBy("p").agg(F.count("*").cast("long").alias("deg_p"))
     j = (
-        ed.join(_gbcast(ds), "s")
-        .join(_gbcast(dp), "p")
+        ed.join(ds, "s")
+        .join(dp, "p")
         .select(F.col("deg_s").alias("x"), F.col("deg_p").alias("y"))
     )
     d38 = "decimal(38,0)"

@@ -22,9 +22,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans._tables import table as _t
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.registry import register
-from grocery_store_sales_forecasting_etl_pipeline_spark.operators.sizing import (
-    gated_broadcast as _gbcast,
-)
 
 # ---------------------------------------------------------------------------
 # TF-IDF cosine document pairs (df-capped sparse vectors)
@@ -108,7 +105,7 @@ def tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = (
         tf.join(dfreq, "token")
-        .crossJoin(F.broadcast(nn))
+        .crossJoin(nn)
         .select(
             "doc_id",
             "token",
@@ -129,8 +126,8 @@ def tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     n1 = nrm.select(F.col("doc_id").alias("id_1"), F.col("nm").alias("nm1"))
     n2 = nrm.select(F.col("doc_id").alias("id_2"), F.col("nm").alias("nm2"))
     scored = (
-        dots.join(_gbcast(n1), "id_1")
-        .join(_gbcast(n2), "id_2")
+        dots.join(n1, "id_1")
+        .join(n2, "id_2")
         .select(
             "id_1",
             "id_2",
@@ -302,7 +299,7 @@ def split_gain_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lab = (
         o.join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == F.col("n_nationkey"))
+        .join(n, c.c_nationkey == F.col("n_nationkey"))
         .join(ret, o.o_orderkey == ret.l_orderkey, "left")
         .select(
             F.col("o_orderpriority").alias("prio"),

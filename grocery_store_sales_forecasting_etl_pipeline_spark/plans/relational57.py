@@ -28,9 +28,6 @@ from grocery_store_sales_forecasting_etl_pipeline_spark.plans.registry import re
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.scalerank import (
     value_cum_counts,
 )
-from grocery_store_sales_forecasting_etl_pipeline_spark.operators.sizing import (
-    gated_broadcast as _gbcast,
-)
 
 # ---------------------------------------------------------------------------
 # Time-weighted average value per user (step-function integral)
@@ -219,7 +216,7 @@ def numeric_split_point_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cc = value_cum_counts(lab.select("cents"), "cents", coarse_div=10000)
     tot = cc.agg(F.sum("c").cast("long").alias("n"))
-    edges = cc.crossJoin(F.broadcast(tot)).agg(
+    edges = cc.crossJoin(tot).agg(
         *[
             F.min(
                 F.when(
@@ -230,7 +227,7 @@ def numeric_split_point_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
             for k in range(1, 10)
         ]
     )
-    folded = lab.crossJoin(F.broadcast(edges)).agg(
+    folded = lab.crossJoin(edges).agg(
         F.count("*").cast("long").alias("n"),
         F.sum("pos").cast("long").alias("p"),
         *[
@@ -362,7 +359,7 @@ def brand_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     p = _t(spark, sf_dir, "part")
     bs = (
-        li.join(_gbcast(p.select("p_partkey", "p_brand")),
+        li.join(p.select("p_partkey", "p_brand"),
                 li.l_partkey == F.col("p_partkey"))
         .groupBy(F.col("l_orderkey").alias("o"))
         .agg(F.collect_set("p_brand").alias("bs"))
@@ -391,9 +388,9 @@ def brand_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = nb.select(F.col("b").alias("antecedent"), F.col("n_b").alias("n_antecedent"))
     c = nb.select(F.col("b").alias("consequent"), F.col("n_b").alias("n_consequent"))
     rules = (
-        pairs.join(F.broadcast(a), "antecedent")
-        .join(F.broadcast(c), "consequent")
-        .crossJoin(F.broadcast(tot))
+        pairs.join(a, "antecedent")
+        .join(c, "consequent")
+        .crossJoin(tot)
         .select(
             "antecedent",
             "consequent",

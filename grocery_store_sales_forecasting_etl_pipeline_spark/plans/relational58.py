@@ -269,7 +269,7 @@ def price_effect_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         / (F.col("n1") + F.col("n2") - 2)
     )
-    return piv.crossJoin(F.broadcast(cliff)).select(
+    return piv.crossJoin(cliff).select(
         "n1",
         "n2",
         F.round(d, 6).alias("cohens_d"),

@@ -26,9 +26,6 @@ from grocery_store_sales_forecasting_etl_pipeline_spark.plans.registry import re
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.scalerank import (
     ranked_points, value_cum_counts,
 )
-from grocery_store_sales_forecasting_etl_pipeline_spark.operators.sizing import (
-    gated_broadcast as _gbcast,
-)
 
 # ---------------------------------------------------------------------------
 # Weighted median price per brand
@@ -89,7 +86,7 @@ def brand_weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = _t(spark, sf_dir, "part")
     d38 = "decimal(38,0)"
     x = li.join(
-        _gbcast(p.select("p_partkey", "p_brand")),
+        p.select("p_partkey", "p_brand"),
         li.l_partkey == F.col("p_partkey"),
     ).select(
         F.col("p_brand").alias("brand"),
@@ -311,7 +308,7 @@ def order_gap_exponential_qq(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = cc.agg(F.sum("c").cast("long").alias("n"))
     pts = (
         ranked_points(cc, "g")
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .select(
             "g",
             (-F.log(1 - F.col("i").cast("double") / (F.col("n") + 1))).alias("q"),

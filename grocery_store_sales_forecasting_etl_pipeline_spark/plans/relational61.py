@@ -372,8 +372,8 @@ def doc_query_likelihood_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     qterms = cf.select("token", "cf")  # query terms present in corpus
     scored = (
-        dlen.crossJoin(F.broadcast(qterms))
-        .crossJoin(F.broadcast(ctot))
+        dlen.crossJoin(qterms)
+        .crossJoin(ctot)
         .join(tf, ["doc_id", "token"], "left")
         .groupBy("doc_id")
         .agg(

@@ -165,7 +165,7 @@ def price_gmm2_em(spark: SparkSession, sf_dir: str) -> DataFrame:
     init = quarts.crossJoin(sg0).withColumn("pi1", F.lit(0.5))
 
     def em_pass(params: DataFrame, two_sigma: bool) -> DataFrame:
-        joined = vc.crossJoin(F.broadcast(params))
+        joined = vc.crossJoin(params)
         if two_sigma:
             w1 = (
                 F.col("pi1")
@@ -394,7 +394,7 @@ def order_gap_weibull_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = cc.agg(F.sum("c").cast("long").alias("n"))
     pts = (
         ranked_points(cc, "g")
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .select(
             F.log(F.col("g").cast("double")).alias("x"),
             F.log(
@@ -486,7 +486,7 @@ def order_value_var_es(spark: SparkSession, sf_dir: str) -> DataFrame:
     cc = value_cum_counts(x, "v", coarse_div=10000).localCheckpoint(eager=False)
     tot = cc.agg(F.sum("c").cast("long").alias("n"))
     var_rank = F.floor((95 * F.col("n") + 99) / 100)
-    sel1 = cc.crossJoin(F.broadcast(tot)).agg(
+    sel1 = cc.crossJoin(tot).agg(
         F.first("n").alias("n"),
         F.min(F.when(F.col("cum") >= var_rank, F.col("v")))
         .cast("long")
@@ -495,7 +495,7 @@ def order_value_var_es(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("cum95"),
     )
-    sel = cc.crossJoin(F.broadcast(sel1)).agg(
+    sel = cc.crossJoin(sel1).agg(
         F.first("n").alias("n"),
         F.first("var95").alias("var95"),
         F.first("cum95").alias("cum95"),

@@ -131,7 +131,7 @@ def price_qty_tail_dependence(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     th = p95_of("p").crossJoin(p95_of("q"))
-    cnt = x.crossJoin(F.broadcast(th)).agg(
+    cnt = x.crossJoin(th).agg(
         F.count("*").cast("long").alias("n"),
         F.sum(F.when(F.col("p") > F.col("p95"), 1).otherwise(0))
         .cast("long")
@@ -439,7 +439,7 @@ def nation_weekly_acf1(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = _t(spark, sf_dir, "nation")
     weekly = (
         o.join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == F.col("n_nationkey"))
+        .join(n, c.c_nationkey == F.col("n_nationkey"))
         .groupBy(
             F.col("n_name").alias("nation"),
             F.date_trunc("week", "o_orderdate").cast("date").alias("week_start"),

@@ -113,7 +113,7 @@ def weekly_revenue_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("week_start").alias("ws_b"), F.col("dollars").alias("x_b")
     )
     pairs = (
-        a.join(F.broadcast(b), F.col("ws_a") < F.col("ws_b"))
+        a.join(b, F.col("ws_a") < F.col("ws_b"))
         .agg(
             F.sum(
                 F.when(F.col("x_b") > F.col("x_a"), 1)
@@ -144,7 +144,7 @@ def weekly_revenue_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     n = weekly.agg(F.count("*").cast("long").alias("n"))
-    j = pairs.crossJoin(F.broadcast(ties)).crossJoin(F.broadcast(n))
+    j = pairs.crossJoin(ties).crossJoin(n)
     n_d = F.col("n").cast("double")
     s_d = F.col("s").cast("double")
     cc = F.when(F.col("s") > 0, 1).when(F.col("s") < 0, -1).otherwise(0)
@@ -285,7 +285,7 @@ def priority_price_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame
     w_local = Window.partitionBy("bucket").orderBy("cents").rowsBetween(
         Window.unboundedPreceding, -1
     )
-    v = v5.join(F.broadcast(boff), "bucket").withColumn(
+    v = v5.join(boff, "bucket").withColumn(
         "r2",
         F.lit(2)
         * (F.col("bucket_before") + F.coalesce(F.sum("t").over(w_local), F.lit(0)))

@@ -26,9 +26,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans._tables import table as _t
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.registry import register
-from grocery_store_sales_forecasting_etl_pipeline_spark.operators.sizing import (
-    gated_broadcast as _gbcast,
-)
 
 # ---------------------------------------------------------------------------
 # Dunning LLR keywords per language
@@ -115,8 +112,8 @@ def lang_llr_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     dec = "decimal(38,0)"
     j = (
         tl.join(tt, "token")
-        .join(F.broadcast(lt), "lang")
-        .crossJoin(F.broadcast(gt))
+        .join(lt, "lang")
+        .crossJoin(gt)
         .select(
             "lang",
             "token",
@@ -410,7 +407,7 @@ def weekly_brand_topk_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("cents"),
         )
-        .join(_gbcast(p.select("p_partkey", F.col("p_brand").alias("brand"))),
+        .join(p.select("p_partkey", F.col("p_brand").alias("brand")),
               F.col("l_partkey") == F.col("p_partkey"))
         .groupBy("week_start", "brand")
         .agg(F.sum("cents").cast("long").alias("cents"))

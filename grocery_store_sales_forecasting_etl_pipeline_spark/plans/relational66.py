@@ -108,7 +108,7 @@ def supplier_part_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = a2.agg(F.sum("auth").cast(dec).alias("t"))
     rk = (
         a2.join(a1, "p")
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .select(
             F.col("p").alias("partkey"),
             F.col("deg").alias("n_suppliers"),
@@ -206,7 +206,7 @@ def click_purchase_hourly_ccf(spark: SparkSession, sf_dir: str) -> DataFrame:
     for k in _CCF_LAGS:
         frames.append(
             a.join(
-                F.broadcast(b),
+                b,
                 F.col("hr_b") == F.expr(f"hr_a + ({k}) * INTERVAL '1' HOUR"),
             ).select(F.lit(k).cast("long").alias("lag"), "x", "y")
         )
@@ -407,7 +407,7 @@ def weekly_trend_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=False)  # A/B sf0.1: 0.78 s with, 0.90 s without
     )
     w0 = weekly.agg(F.min("week_start").alias("w0"))
-    t = weekly.crossJoin(F.broadcast(w0)).select(
+    t = weekly.crossJoin(w0).select(
         "week_start",
         "y",
         F.expr("CAST(datediff(week_start, w0) DIV 7 AS BIGINT)").alias("t"),
@@ -427,7 +427,7 @@ def weekly_trend_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = (F.col("sy").cast("double") - b * F.col("st").cast("double")) / F.col("n")
     coef = s.select("n", b.alias("b"), a.alias("a"))
-    e = t.crossJoin(F.broadcast(coef)).select(
+    e = t.crossJoin(coef).select(
         "week_start",
         (F.col("y").cast("double") - F.col("a") - F.col("b") * F.col("t")).alias("e"),
         "n",

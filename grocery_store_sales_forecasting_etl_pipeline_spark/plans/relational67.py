@@ -319,7 +319,7 @@ def nation_balance_quantile_map(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("c").over(Window.partitionBy("nation")).cast("long").alias("n"),
     )
     nq = (
-        nc.crossJoin(F.broadcast(deciles))
+        nc.crossJoin(deciles)
         .groupBy("nation", "q")
         .agg(
             F.min(
@@ -340,7 +340,7 @@ def nation_balance_quantile_map(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("c").over(Window.partitionBy()).cast("long").alias("n"),
     )
     pq = (
-        pc.crossJoin(F.broadcast(deciles))
+        pc.crossJoin(deciles)
         .groupBy("q")
         .agg(
             F.min(
@@ -352,7 +352,7 @@ def nation_balance_quantile_map(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        nq.join(F.broadcast(pq), "q")
+        nq.join(pq, "q")
         .select(
             "nation",
             F.col("q").alias("decile"),

@@ -30,9 +30,6 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans._tables import table as _t
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.registry import register
-from grocery_store_sales_forecasting_etl_pipeline_spark.operators.sizing import (
-    gated_broadcast as _gbcast,
-)
 
 # ---------------------------------------------------------------------------
 # Kaplan-Meier life table: weeks from first to second order
@@ -139,7 +136,7 @@ def repeat_purchase_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min(F.when(F.col("r") == 2, F.col("d"))).alias("d2"),
     )
     horizon = o.agg(F.max("d").alias("dmax"))
-    subj = per.crossJoin(F.broadcast(horizon)).select(
+    subj = per.crossJoin(horizon).select(
         F.when(
             F.col("d2").isNotNull(),
             F.expr("CAST(datediff(d2, d1) DIV 7 AS BIGINT)"),
@@ -378,7 +375,7 @@ def brand_return_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
     b = (
         li.select("l_partkey", "l_returnflag")
-        .join(_gbcast(p), F.col("l_partkey") == F.col("p_partkey"))
+        .join(p, F.col("l_partkey") == F.col("p_partkey"))
         .groupBy(F.col("p_brand").alias("brand"))
         .agg(
             F.count("*").cast("long").alias("n"),
@@ -513,7 +510,7 @@ def brand_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
     wk = (
         li.select("l_partkey", "l_shipdate", "l_quantity", "l_extendedprice")
-        .join(_gbcast(p), F.col("l_partkey") == F.col("p_partkey"))
+        .join(p, F.col("l_partkey") == F.col("p_partkey"))
         .groupBy(
             F.col("p_brand").alias("brand"),
             F.date_trunc("week", "l_shipdate").cast("date").alias("week"),

@@ -28,9 +28,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans._tables import table as _t
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.registry import register
-from grocery_store_sales_forecasting_etl_pipeline_spark.operators.sizing import (
-    gated_broadcast as _gbcast,
-)
 
 # ---------------------------------------------------------------------------
 # Blocked Levenshtein near-match pairs over part names
@@ -349,7 +346,7 @@ def segment_value_cvm(spark: SparkSession, sf_dir: str) -> DataFrame:
     dec = "decimal(38,0)"
     x = (
         o.select("o_custkey", F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"))
-        .join(_gbcast(cust), F.col("o_custkey") == F.col("c_custkey"))
+        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
         .filter(F.col("c_mktsegment").isin("BUILDING", "MACHINERY"))
     )
     v = x.groupBy("cents").agg(
@@ -476,7 +473,7 @@ def nation_revenue_theil(spark: SparkSession, sf_dir: str) -> DataFrame:
     dec = "decimal(38,0)"
     cust = (
         o.select("o_custkey", F.round(F.col("o_totalprice") * 100).cast("long").alias("pc"))
-        .join(_gbcast(cust_dim), F.col("o_custkey") == F.col("c_custkey"))
+        .join(cust_dim, F.col("o_custkey") == F.col("c_custkey"))
         .groupBy(F.col("c_custkey"), F.col("c_nationkey").alias("nation"))
         .agg(F.sum("pc").cast("long").alias("cents"))
     )

@@ -24,9 +24,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans._tables import table as _t
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.registry import register
-from grocery_store_sales_forecasting_etl_pipeline_spark.operators.sizing import (
-    gated_broadcast as _gbcast,
-)
 
 _DEC = "decimal(18,2)"
 
@@ -82,14 +79,14 @@ def region_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     return (
         l.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(_gbcast(c), F.col("o_custkey") == F.col("c_custkey"))
+        .join(c, F.col("o_custkey") == F.col("c_custkey"))
         .join(
-            _gbcast(s),
+            s,
             (F.col("l_suppkey") == F.col("s_suppkey"))
             & (F.col("c_nationkey") == F.col("s_nationkey")),
         )
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey"))
+        .join(n, F.col("s_nationkey") == F.col("n_nationkey"))
+        .join(r, F.col("n_regionkey") == F.col("r_regionkey"))
         .groupBy("n_name")
         .agg(F.round(F.sum(_rev()), 2).cast("double").alias("revenue"))
     )
@@ -144,9 +141,9 @@ def nation_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         l.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(_gbcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey"))
+        .join(s, F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(n, F.col("s_nationkey") == F.col("n_nationkey"))
+        .join(r, F.col("n_regionkey") == F.col("r_regionkey"))
         .groupBy(F.year("o_orderdate").cast("long").alias("o_year"))
         .agg(
             F.round(
@@ -198,8 +195,8 @@ def returned_item_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = _t(spark, sf_dir, "nation")
     return (
         l.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(_gbcast(c), F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey"))
+        .join(c, F.col("o_custkey") == F.col("c_custkey"))
+        .join(n, F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("c_custkey", "c_name", "n_name")
         .agg(F.round(F.sum(_rev()), 2).cast("double").alias("lost_revenue"))
         .orderBy(F.desc("lost_revenue"), F.asc("c_custkey"))

@@ -535,7 +535,7 @@ def weekly_stl_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("d53").cast("long").alias("ssum"),
         F.count("*").cast("long").alias("c"),
     )
-    r = d.join(F.broadcast(sea), "woy").select(
+    r = d.join(sea, "woy").select(
         "week_start",
         (F.col("d53").cast("double") / 53.0).alias("det"),
         (
@@ -568,7 +568,7 @@ def weekly_stl_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("rn"),
     ).filter(F.col("rn") == 1)
     fs = F.lit(1.0) - F.col("var_r") / F.col("var_d")
-    return f.crossJoin(F.broadcast(pk)).select(
+    return f.crossJoin(pk).select(
         F.col("n").alias("n_weeks_used"),
         F.round(F.when(fs > 0.0, fs).otherwise(0.0), 4).alias("f_seasonal"),
         F.col("woy").alias("peak_week_of_year"),

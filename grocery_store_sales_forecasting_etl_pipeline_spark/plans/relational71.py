@@ -29,9 +29,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans._tables import table as _t
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.registry import register
-from grocery_store_sales_forecasting_etl_pipeline_spark.operators.sizing import (
-    gated_broadcast as _gbcast,
-)
 
 # ---------------------------------------------------------------------------
 # Haar wavelet energy decomposition of weekly revenue
@@ -116,7 +113,7 @@ def weekly_revenue_haar_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("i"),
     ).filter(F.col("i") < _HAAR_N)
     lv = spark.range(1, _HAAR_LEVELS + 1).select(F.col("id").cast("long").alias("lvl"))
-    cells = idx.crossJoin(F.broadcast(lv)).select(
+    cells = idx.crossJoin(lv).select(
         "lvl",
         F.expr("i DIV (1 << CAST(lvl AS INT))").alias("b"),
         F.expr("(i DIV (1 << CAST(lvl - 1 AS INT))) % 2").alias("side"),
@@ -402,7 +399,7 @@ def weekly_revenue_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("n_record_lows"),
     )
-    return recs.crossJoin(F.broadcast(streaks)).select(
+    return recs.crossJoin(streaks).select(
         "n_weeks",
         "longest_up_streak",
         "longest_down_streak",
@@ -492,7 +489,7 @@ def weekly_brand_kendall_w(spark: SparkSession, sf_dir: str) -> DataFrame:
     dec = "decimal(38,0)"
     wk = (
         li.select("l_partkey", "l_shipdate", "l_extendedprice", "l_discount")
-        .join(_gbcast(p), F.col("l_partkey") == F.col("p_partkey"))
+        .join(p, F.col("l_partkey") == F.col("p_partkey"))
         .groupBy(
             F.col("p_brand").alias("brand"),
             F.date_trunc("week", "l_shipdate").cast("date").alias("week"),
@@ -511,11 +508,11 @@ def weekly_brand_kendall_w(spark: SparkSession, sf_dir: str) -> DataFrame:
     full_weeks = (
         wk.groupBy("week")
         .agg(F.count("*").alias("nb"))
-        .crossJoin(F.broadcast(k_frame))
+        .crossJoin(k_frame)
         .filter(F.col("nb") == F.col("k"))
         .select("week")
     )
-    base = wk.join(F.broadcast(full_weeks), "week")
+    base = wk.join(full_weeks, "week")
     r = base.select(
         "week",
         "brand",
@@ -536,12 +533,8 @@ def weekly_brand_kendall_w(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("t").cast(dec) * F.col("t") - 1).cast("long").alias("st"),
     )
     agg = (
-        glob.crossJoin(F.broadcast(k_frame))
-        .crossJoin(
-            F.broadcast(
-                rb.agg(F.sum(F.col("r2b").cast(dec) * F.col("r2b")).cast(dec).alias("sr2"))
-            )
-        )
+        glob.crossJoin(k_frame)
+        .crossJoin(rb.agg(F.sum(F.col("r2b").cast(dec) * F.col("r2b")).cast(dec).alias("sr2")))
         .withColumn("m", F.expr("nr DIV k"))
     )
     m_d = F.col("m").cast("double")

@@ -28,9 +28,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans._tables import table as _t
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.registry import register
-from grocery_store_sales_forecasting_etl_pipeline_spark.operators.sizing import (
-    gated_broadcast as _gbcast,
-)
 
 # ---------------------------------------------------------------------------
 # Log-rank test: BUILDING vs other segments' repeat-purchase survival
@@ -147,8 +144,8 @@ def repeat_purchase_logrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     horizon = o.agg(F.max("d").alias("dmax"))
     seg = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     subj = (
-        per.join(_gbcast(seg), F.col("cust") == F.col("c_custkey"))
-        .crossJoin(F.broadcast(horizon))
+        per.join(seg, F.col("cust") == F.col("c_custkey"))
+        .crossJoin(horizon)
         .select(
             F.when(F.col("c_mktsegment") == "BUILDING", 1).otherwise(0).alias("g"),
             F.when(
@@ -417,7 +414,7 @@ def nation_supplier_concentration(spark: SparkSession, sf_dir: str) -> DataFrame
     dec = "decimal(38,0)"
     per = (
         li.select("l_suppkey", "l_extendedprice", "l_discount")
-        .join(_gbcast(sup), F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(sup, F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy(
             F.col("s_nationkey").alias("nation"), F.col("l_suppkey").alias("supp")
         )

@@ -30,9 +30,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans._tables import table as _t
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.registry import register
-from grocery_store_sales_forecasting_etl_pipeline_spark.operators.sizing import (
-    gated_broadcast as _gbcast,
-)
 
 # ---------------------------------------------------------------------------
 # Bass diffusion fit to weekly new-customer adoption
@@ -311,7 +308,7 @@ def segment_price_hellinger(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     x = (
         o.select("o_custkey", F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"))
-        .join(_gbcast(cust), F.col("o_custkey") == F.col("c_custkey"))
+        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
         .filter(F.col("c_mktsegment").isin("AUTOMOBILE", "HOUSEHOLD"))
     )
     v = x.groupBy("cents").agg(
@@ -330,7 +327,7 @@ def segment_price_hellinger(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     deciles = spark.range(1, 10).select(F.col("id").cast("long").alias("q"))
     edges = (
-        c.crossJoin(F.broadcast(deciles))
+        c.crossJoin(deciles)
         .groupBy("q")
         .agg(
             F.min(
@@ -342,7 +339,7 @@ def segment_price_hellinger(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     bucketed = (
-        v.crossJoin(F.broadcast(edges))
+        v.crossJoin(edges)
         .groupBy("cents", "ca", "cb")
         .agg(
             F.sum(F.when(F.col("edge") < F.col("cents"), 1).otherwise(0))
@@ -472,7 +469,7 @@ def order_value_lognormal_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("cum") >= F.expr("(n + 1) DIV 2"))
         .agg(F.min("cents").alias("med_cents"))
     )
-    fit = acc.crossJoin(F.broadcast(med)).select(
+    fit = acc.crossJoin(med).select(
         "n",
         (F.col("sl") / F.col("n")).alias("mu"),
         ((F.col("sll") - F.col("sl") * F.col("sl") / F.col("n")) / F.col("n")).alias("s2"),
@@ -607,7 +604,7 @@ def revenue_pareto_crossing(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("(max(n) + 9) DIV 10").alias("kt"),
     )
     top10 = (
-        c.crossJoin(F.broadcast(k10.select("kt")))
+        c.crossJoin(k10.select("kt"))
         .filter(F.col("cum") >= F.col("kt"))
         .agg(
             F.min(
@@ -619,8 +616,8 @@ def revenue_pareto_crossing(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        k10.crossJoin(F.broadcast(k80))
-        .crossJoin(F.broadcast(top10))
+        k10.crossJoin(k80)
+        .crossJoin(top10)
         .select(
             F.col("n").alias("n_customers"),
             F.col("k").alias("k80_customers"),

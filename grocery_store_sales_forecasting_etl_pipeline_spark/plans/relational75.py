@@ -28,9 +28,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans._tables import table as _t
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.registry import register
-from grocery_store_sales_forecasting_etl_pipeline_spark.operators.sizing import (
-    gated_broadcast as _gbcast,
-)
 
 # ---------------------------------------------------------------------------
 # Granger test: daily clicks -> next-day purchases
@@ -338,7 +335,7 @@ def session_concurrency_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         "t", F.sum("delta").over(w_sweep).cast("long").alias("conc")
     )
     mx = walk.agg(F.max("conc").alias("max_conc"))
-    arg = walk.crossJoin(F.broadcast(mx)).filter(
+    arg = walk.crossJoin(mx).filter(
         F.col("conc") == F.col("max_conc")
     ).agg(F.min("t").alias("peak_ts"))
     us = lambda c: F.unix_micros(F.col(c).cast("timestamp"))
@@ -348,8 +345,8 @@ def session_concurrency_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.max(us("t1")) - F.min(us("t0"))).cast("long").alias("span_us"),
     )
     return (
-        agg.crossJoin(F.broadcast(mx))
-        .crossJoin(F.broadcast(arg))
+        agg.crossJoin(mx)
+        .crossJoin(arg)
         .select(
             "n_sessions",
             "max_conc",
@@ -437,7 +434,7 @@ def part_price_dispersion_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     pn = (
         li.filter(F.col("l_quantity") > 0)
         .select("l_partkey", "l_suppkey", "l_extendedprice", "l_quantity")
-        .join(_gbcast(sup), F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(sup, F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy(F.col("l_partkey").alias("part"), F.col("s_nationkey").alias("nation"))
         .agg(
             F.sum(

@@ -342,6 +342,7 @@ def embedding_centroid_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     term = (F.col("c") * F.col("q") - F.col("s")).cast(dec)
     dist = (
+        # A/B sf1: 4.66 s with, 11.56 s without the hint
         qd.join(F.broadcast(cent), F.col("dim") == F.col("cdim"))
         .groupBy("vec_id", "label", "k")
         .agg(
@@ -482,6 +483,7 @@ def embedding_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=False)  # A/B sf0.1: 0.76 s with, 0.88 s without
     )
     xv = (
+        # A/B sf0.1: 1.12 s with, 1.31 s without the hint
         qd.join(F.broadcast(v1), "dim")
         .groupBy("vec_id")
         .agg(F.sum(F.col("q").cast(dec) * F.col("w")).cast(dec).alias("xv1"))
@@ -518,8 +520,8 @@ def embedding_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("rnk"),
     ).filter(F.col("rnk") <= 10)
     return (
-        rk.crossJoin(F.broadcast(ray))
-        .crossJoin(F.broadcast(den))
+        rk.crossJoin(ray)
+        .crossJoin(den)
         .select(
             "dim",
             F.col("w").cast("long").alias("component"),

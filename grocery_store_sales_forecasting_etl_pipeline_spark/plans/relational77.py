@@ -28,9 +28,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans._tables import table as _t
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.registry import register
-from grocery_store_sales_forecasting_etl_pipeline_spark.operators.sizing import (
-    gated_broadcast as _gbcast,
-)
 
 # ---------------------------------------------------------------------------
 # Exact two-sample energy distance: BUILDING vs FURNITURE order values
@@ -125,7 +122,7 @@ def segment_value_energy_distance(spark: SparkSession, sf_dir: str) -> DataFrame
     dec = "decimal(38,0)"
     x = (
         o.select("o_custkey", F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"))
-        .join(_gbcast(cust), F.col("o_custkey") == F.col("c_custkey"))
+        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
         .filter(F.col("c_mktsegment").isin("BUILDING", "FURNITURE"))
     )
     v = x.groupBy("cents").agg(
@@ -392,7 +389,7 @@ def conformal_coverage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rk") >= F.ceil(F.lit(0.9) * (F.col("nc") + 1)).cast("long"))
         .agg(F.min("ae").alias("q90"))
     )
-    cov = tst.crossJoin(F.broadcast(q)).agg(
+    cov = tst.crossJoin(q).agg(
         F.count("*").cast("long").alias("n_test"),
         F.sum(F.when(F.col("ae") <= F.col("q90"), 1).otherwise(0))
         .cast("long")
@@ -400,7 +397,7 @@ def conformal_coverage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("q90").alias("q90"),
     )
     ncal = cal.agg(F.count("*").cast("long").alias("n_calibration"))
-    return cov.crossJoin(F.broadcast(ncal)).select(
+    return cov.crossJoin(ncal).select(
         "n_calibration",
         "n_test",
         F.col("q90").alias("q90_dollars"),

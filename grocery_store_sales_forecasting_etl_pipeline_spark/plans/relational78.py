@@ -26,11 +26,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans._tables import table as _t
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.registry import register
+from grocery_store_sales_forecasting_etl_pipeline_spark.plans.scalerank import (
+    bucketed_row_number,
+)
 from grocery_store_sales_forecasting_etl_pipeline_spark.operators.similarity import (
     exact_knn_block_gemm,
-)
-from grocery_store_sales_forecasting_etl_pipeline_spark.operators.sizing import (
-    gated_broadcast as _gbcast,
 )
 
 # ---------------------------------------------------------------------------
@@ -96,21 +96,20 @@ def contrastive_pair_sampler(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale notes: the ring join is equi on rank+offset (the anchor
     frame × {_RING_WINDOW} offsets — linear, never all-pairs); the
-    global ring sort is the one total order, the same shape as any
-    shuffle-based sampler. Anchors near the ring's end may lack
-    candidates (no wraparound) — documented.
+    ring ranks come from ``scalerank.bucketed_row_number`` over 1024
+    md5-prefix buckets, so no step sorts the corpus in one task.
+    Anchors near the ring's end may lack candidates (no wraparound) —
+    documented.
     """
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
-    ring = docs.select(
-        "doc_id",
-        "lang",
-        F.row_number()
-        .over(Window.orderBy(F.md5(F.col("doc_id").cast("string")), F.asc("doc_id")))
-        .cast("long")
-        .alias("rnk"),
-        # pinned by test_no_unpartitioned_window_over_fact_scale_input;
-        # A/B sf1 (with the site below): 1.48 s with, 1.32 s without
-    ).localCheckpoint(eager=False)
+    docs = _t(spark, sf_dir, "documents").select(
+        "doc_id", "lang", F.md5(F.col("doc_id").cast("string")).alias("_h")
+    )
+    # the first 8 hex digits as a number order the ring like the md5
+    # string does; the full md5, then doc_id, break its ties
+    docs = docs.withColumn("_hv", F.conv(F.substring("_h", 1, 8), 16, 10).cast("long"))
+    ring = bucketed_row_number(
+        docs, "_hv", ["_h", "doc_id"], coarse_div=1 << 22, rank_col="rnk"
+    ).select("doc_id", "lang", "rnk")
     offs = spark.range(1, _RING_WINDOW + 1).select(F.col("id").cast("long").alias("off"))
     b = ring.select(
         F.col("rnk").alias("brnk"),
@@ -118,7 +117,7 @@ def contrastive_pair_sampler(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("lang").alias("cand_lang"),
     )
     cand = (
-        ring.crossJoin(F.broadcast(offs))
+        ring.crossJoin(offs)
         .withColumn("brnk", F.col("rnk") + F.col("off"))
         .join(b, "brnk")
         .select("doc_id", "lang", "cand_id", "cand_lang", "off")
@@ -286,7 +285,7 @@ def brand_repeat_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
     bc = (
         li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(_gbcast(p), F.col("l_partkey") == F.col("p_partkey"))
+        .join(p, F.col("l_partkey") == F.col("p_partkey"))
         .groupBy(F.col("p_brand").alias("brand"), F.col("o_custkey").alias("cust"))
         .agg(F.countDistinct("l_orderkey").cast("long").alias("n_orders"))
     )
@@ -394,9 +393,7 @@ def token_bigram_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
             clc.alias("uclc"),
             F.count("*").cast("long").alias("v1"),
         )
-        .crossJoin(
-            F.broadcast(big.agg(clc.alias("bclc"), F.count("*").cast("long").alias("v2")))
-        )
+        .crossJoin(big.agg(clc.alias("bclc"), F.count("*").cast("long").alias("v2")))
     )
     n_d = F.col("n").cast("double")
     h1 = F.log(n_d) - F.col("uclc") / F.col("n")

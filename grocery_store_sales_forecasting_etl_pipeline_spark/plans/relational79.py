@@ -26,9 +26,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans._tables import table as _t
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.registry import register
-from grocery_store_sales_forecasting_etl_pipeline_spark.operators.sizing import (
-    gated_broadcast as _gbcast,
-)
 
 # ---------------------------------------------------------------------------
 # Order-to-ship SLA percentiles per priority
@@ -208,7 +205,7 @@ def median_ci_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("hi_rank"),
     )
     return (
-        cw.crossJoin(F.broadcast(ranks.withColumnRenamed("n", "nr")))
+        cw.crossJoin(ranks.withColumnRenamed("n", "nr"))
         .groupBy("nr", "lo_rank", "hi_rank")
         .agg(
             F.min(
@@ -306,7 +303,7 @@ def order_value_quantile_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     octs = spark.range(1, 8).select(F.col("id").cast("long").alias("q"))
     oct_f = (
-        cw.crossJoin(F.broadcast(octs))
+        cw.crossJoin(octs)
         .groupBy("q")
         .agg(
             F.min(
@@ -429,7 +426,7 @@ def priority_segment_association(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     t = (
         o.select("o_custkey", "o_orderpriority")
-        .join(_gbcast(cust), F.col("o_custkey") == F.col("c_custkey"))
+        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
         .groupBy(
             F.col("o_orderpriority").alias("prio"),
             F.col("c_mktsegment").alias("seg"),
@@ -473,8 +470,8 @@ def priority_segment_association(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.max("rn").cast("long").alias("overall_max"))
     )
     return (
-        chi.crossJoin(F.broadcast(lam))
-        .crossJoin(F.broadcast(row_max))
+        chi.crossJoin(lam)
+        .crossJoin(row_max)
         .select(
             F.col("tot").alias("n_orders"),
             F.col("r").alias("n_priorities"),

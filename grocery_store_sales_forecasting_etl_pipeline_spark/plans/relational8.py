@@ -271,7 +271,7 @@ def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     monday = F.date_sub(
         F.col("first_day"), (F.dayofweek("first_day") + F.lit(5)) % F.lit(7)
     )
-    joined = ev.join(_gbcast(firsts), "user_id")
+    joined = ev.join(firsts, "user_id")
     return (
         joined.groupBy(
             monday.alias("cohort_start"),
@@ -518,7 +518,8 @@ def nation_qty_price_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     sup = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     nat = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    dim = _gbcast(sup.join(F.broadcast(nat), sup.s_nationkey == nat.n_nationkey))
+    # A/B sf0.1: 1.01 s with, 1.40 s without the hint
+    dim = _gbcast(sup.join(nat, sup.s_nationkey == nat.n_nationkey))
     j = li.join(dim, li.l_suppkey == dim.s_suppkey).select(
         "n_name",
         F.col("l_quantity").cast("long").alias("x"),
@@ -698,7 +699,7 @@ def scd2_pit_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (hist.valid_from <= o.as_of_v)
         & (hist.valid_to.isNull() | (o.as_of_v < hist.valid_to))
     )
-    return o.join(_gbcast(hist), cond).select(
+    return o.join(hist, cond).select(
         "o_orderkey",
         "o_custkey",
         "as_of_v",

@@ -33,9 +33,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans._tables import table as _t
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.registry import register
-from grocery_store_sales_forecasting_etl_pipeline_spark.operators.sizing import (
-    gated_broadcast as _gbcast,
-)
 
 # shared weekly floor-dollar frame (the relational15 idiom: exact cents
 # sums, then integer division — Spark DIV == DuckDB // on non-negatives)
@@ -149,7 +146,7 @@ def daily_traffic_revenue_xi(spark: SparkSession, sf_dir: str) -> DataFrame:
     w_x = Window.orderBy("x", "y", "d")
     s = r.select("r_i", "t_i", F.lag("r_i").over(w_x).alias("r_prev"))
     n_df = daily.agg(F.count("*").cast("long").alias("n"))
-    agg = s.crossJoin(F.broadcast(n_df)).agg(
+    agg = s.crossJoin(n_df).agg(
         F.max("n").alias("n"),
         F.sum(F.abs(F.col("r_i") - F.col("r_prev")).cast("decimal(38,0)")).alias("num"),
         F.sum(
@@ -328,7 +325,7 @@ def segment_brand_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = (
         li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(c, F.col("o_custkey") == F.col("c_custkey"))
-        .join(_gbcast(p), F.col("l_partkey") == F.col("p_partkey"))
+        .join(p, F.col("l_partkey") == F.col("p_partkey"))
         .groupBy(F.col("c_mktsegment").alias("seg"), F.col("p_brand").alias("brand"))
         .agg(F.count("*").cast("long").alias("n"))
         .localCheckpoint(eager=False)  # A/B sf0.1: 1.40 s with, 1.67 s without
@@ -340,8 +337,8 @@ def segment_brand_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("seg", "brand", F.coalesce(F.col("n"), F.lit(0)).alias("n"))
     )
     tot = dense.groupBy("seg").agg(F.sum("n").cast("long").alias("nt"))
-    a = dense.alias("a").join(F.broadcast(tot).alias("ta"), F.col("a.seg") == F.col("ta.seg"))
-    b = dense.alias("b").join(F.broadcast(tot).alias("tb"), F.col("b.seg") == F.col("tb.seg"))
+    a = dense.alias("a").join(tot.alias("ta"), F.col("a.seg") == F.col("ta.seg"))
+    b = dense.alias("b").join(tot.alias("tb"), F.col("b.seg") == F.col("tb.seg"))
     pairs = a.join(
         b,
         (F.col("a.brand") == F.col("b.brand")) & (F.col("a.seg") < F.col("b.seg")),

@@ -124,7 +124,7 @@ def priority_value_mood_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("m")
     )
     g = (
-        c.crossJoin(F.broadcast(med))
+        c.crossJoin(med)
         .groupBy("prio")
         .agg(
             F.count("*").cast("long").alias("n_i"),
@@ -141,7 +141,7 @@ def priority_value_mood_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     exp_b = F.col("n_i").cast("double") * (F.col("n") - F.col("a")) / F.col("n")
     d_a = F.col("a_i") - exp_a
     d_b = (F.col("n_i") - F.col("a_i")) - exp_b
-    return g.crossJoin(F.broadcast(t)).select(
+    return g.crossJoin(t).select(
         F.col("prio").alias("priority"),
         F.col("n_i").alias("n_orders"),
         F.col("a_i").alias("n_above"),
@@ -228,7 +228,7 @@ def weekday_block_friedman(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.expr("sum(cents) DIV 100").alias("dollars"))
     )
     full_wk = daily.groupBy("wk").agg(F.count("*").alias("nd")).filter(F.col("nd") == 7)
-    blocks = daily.join(F.broadcast(full_wk.select("wk")), "wk")
+    blocks = daily.join(full_wk.select("wk"), "wk")
     w_cum = (
         Window.partitionBy("wk")
         .orderBy("dollars")
@@ -254,7 +254,7 @@ def weekday_block_friedman(spark: SparkSession, sf_dir: str) -> DataFrame:
             * F.col("rank_sum_x2").cast("decimal(38,0)")
         ).alias("ss"),
     )
-    return per_dow.crossJoin(F.broadcast(stat)).select(
+    return per_dow.crossJoin(stat).select(
         F.col("dow").alias("weekday_iso"),
         "n_blocks",
         "rank_sum_x2",
@@ -335,7 +335,7 @@ def weekly_revenue_cox_stuart(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_df = rn.agg(F.max("n").alias("n"))
     m = F.sum(F.when(F.col("x2") != F.col("x1"), 1).otherwise(0))
     plus = F.sum(F.when(F.col("x2") > F.col("x1"), 1).otherwise(0))
-    return pairs.crossJoin(F.broadcast(n_df)).agg(
+    return pairs.crossJoin(n_df).agg(
         F.max("n").alias("n_weeks"),
         m.cast("long").alias("n_pairs"),
         plus.cast("long").alias("n_plus"),

@@ -260,7 +260,7 @@ def nation_order_kish_neff(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     w = (
         o.join(c, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey"))
+        .join(n, F.col("c_nationkey") == F.col("n_nationkey"))
         .select(
             F.col("n_name").alias("nation"),
             F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
@@ -374,8 +374,8 @@ def bigram_good_turing_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
     nxt = spec.select(F.col("r").alias("r_nxt"), F.col("vr").alias("vr_next"))
     lowr = (
         spec.filter(F.col("r") <= 5)
-        .join(F.broadcast(nxt), F.col("r_nxt") == F.col("r") + 1, "left")
-        .crossJoin(F.broadcast(tot))
+        .join(nxt, F.col("r_nxt") == F.col("r") + 1, "left")
+        .crossJoin(tot)
     )
     n_d = F.col("n").cast("double")
     return lowr.select(

@@ -120,7 +120,7 @@ def embedding_anisotropy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     u = dims.agg(F.sum(F.col("s") * F.col("s")).cast(_DEC).alias("u2"))
     t_d = F.col("t").cast("double")
     u_d = F.col("u2").cast("double")
-    return norms.crossJoin(F.broadcast(u)).select(
+    return norms.crossJoin(u).select(
         F.col("n").alias("n_vectors"),
         F.col("d").alias("n_dims"),
         F.col("t").alias("sum_sq_norms"),
@@ -227,9 +227,9 @@ def embedding_participation_ratio(spark: SparkSession, sf_dir: str) -> DataFrame
     sa = sums.select(F.col("dim").alias("k"), F.col("s").alias("s_k"))
     sb = sums.select(F.col("dim").alias("l"), F.col("s").alias("s_l"))
     m = (
-        gram.join(F.broadcast(sa), "k")
-        .join(F.broadcast(sb), "l")
-        .crossJoin(F.broadcast(nn))
+        gram.join(sa, "k")
+        .join(sb, "l")
+        .crossJoin(nn)
         .select(
             "k",
             "l",
@@ -246,7 +246,7 @@ def embedding_participation_ratio(spark: SparkSession, sf_dir: str) -> DataFrame
         F.sum(F.col("mkl").cast("double") * F.col("mkl").cast("double")).alias("frob2"),
     )
     tr_d = F.col("tr").cast("double")
-    return acc.crossJoin(F.broadcast(nn)).select(
+    return acc.crossJoin(nn).select(
         F.col("n").alias("n_vectors"),
         F.col("d").alias("n_dims"),
         F.col("tr").alias("trace_scaled"),
@@ -464,7 +464,7 @@ def segment_value_cucconi(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = cum.agg(F.sum("c").cast("long").alias("nn"))
     r2 = F.lit(2) * F.col("cum") - F.col("c") + 1  # doubled midrank per value
     contra = F.lit(2) * (F.col("nn") + 1) - r2
-    g = cum.crossJoin(F.broadcast(tot)).agg(
+    g = cum.crossJoin(tot).agg(
         F.max("nn").alias("nn"),
         F.sum("c_auto").cast("long").alias("n1"),
         F.sum(F.col("c_auto").cast(_DEC) * r2.cast(_DEC) * r2.cast(_DEC))

@@ -115,7 +115,7 @@ def hourly_event_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
     spine = (
         ev.select("event_type")
         .distinct()
-        .crossJoin(F.broadcast(bounds))
+        .crossJoin(bounds)
         .select("event_type", F.explode(F.sequence("h0", "h1")).alias("h"))
     )
     c = ev.groupBy("event_type", "h").agg(F.count("*").cast("long").alias("c"))
@@ -248,7 +248,7 @@ def daily_revenue_extremal_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("n").alias("n_days"),
     )
     exc = (
-        daily.crossJoin(F.broadcast(thr))
+        daily.crossJoin(thr)
         .filter(F.col("dollars") > F.col("u"))
         .select("d")
     )
@@ -266,7 +266,7 @@ def daily_revenue_extremal_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("n_clusters"),
     )
-    return g.crossJoin(F.broadcast(thr)).select(
+    return g.crossJoin(thr).select(
         "n_days",
         F.col("u").alias("threshold_dollars"),
         "n_exceed",
@@ -347,7 +347,7 @@ def customer_spend_lorenz_asymmetry(spark: SparkSession, sf_dir: str) -> DataFra
         F.sum("cents").cast(_DEC).alias("total"),
     )
     below = F.col("cents").cast(_DEC) * F.col("n").cast(_DEC) < F.col("total")
-    g = spend.crossJoin(F.broadcast(tot)).agg(
+    g = spend.crossJoin(tot).agg(
         F.max("n").alias("n"),
         F.max("total").alias("total"),
         F.sum(F.when(below, 1).otherwise(0)).cast("long").alias("m_below"),

@@ -151,14 +151,14 @@ def weekly_revenue_sample_entropy(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     cnt = (
         a.join(b, F.col("a.i") < F.col("b.i"))
-        .crossJoin(F.broadcast(tol))
+        .crossJoin(tol)
         .agg(
             F.sum(F.when(m2 <= F.col("r"), 1).otherwise(0)).cast("long").alias("b_cnt"),
             F.sum(F.when(m3 <= F.col("r"), 1).otherwise(0)).cast("long").alias("a_cnt"),
             F.max("r").alias("r"),
         )
     )
-    return cnt.crossJoin(F.broadcast(nw)).select(
+    return cnt.crossJoin(nw).select(
         "n_weeks",
         F.col("r").alias("tolerance_dollars"),
         F.col("b_cnt").alias("m2_matches"),
@@ -244,7 +244,7 @@ def order_value_benford_second_digit(spark: SparkSession, sf_dir: str) -> DataFr
     )
     j = (
         expected.join(obs, "d", "left")
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .select(
             "d",
             F.coalesce(F.col("n_obs"), F.lit(0)).cast("long").alias("n_obs"),
@@ -351,7 +351,7 @@ def weekly_yoy_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("long").alias("n_diffs"),
         F.sum(F.when(F.col("d") > 0, 1).otherwise(0)).cast("long").alias("n_pos"),
     )
-    return med.crossJoin(F.broadcast(pos)).select(
+    return med.crossJoin(pos).select(
         "n_diffs",
         "n_walsh",
         "n_pos",
@@ -442,7 +442,7 @@ def weekly_revenue_spectral_entropy(spark: SparkSession, sf_dir: str) -> DataFra
         * F.col("t")
         / F.col("n")
     )
-    terms = idx.crossJoin(F.broadcast(ks)).select(
+    terms = idx.crossJoin(ks).select(
         "k",
         "n",
         (centered * F.cos(ang)).alias("ct"),

@@ -273,7 +273,7 @@ def daily_change_var_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("m").alias("n_train"),
     )
     test = (
-        rn.crossJoin(F.broadcast(var95))
+        rn.crossJoin(var95)
         .filter(F.lit(4) * F.col("i") > F.lit(3) * F.col("n"))
         .select("i", F.when(F.col("x") < F.col("v"), 1).otherwise(0).alias("e"))
     )
@@ -333,7 +333,7 @@ def daily_change_var_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n11") * F.log(F.col("n11").cast("double") / (F.col("n10") + F.col("n11"))),
         ).otherwise(F.lit(0.0))
     )
-    return cnts.crossJoin(F.broadcast(var95)).select(
+    return cnts.crossJoin(var95).select(
         "n_train",
         F.col("nt").alias("n_test"),
         F.col("v").alias("var95_dollars"),
@@ -530,7 +530,7 @@ def qty_price_blomqvist_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("v")
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         )
-        cw = v.join(F.broadcast(bp), "b").select(
+        cw = v.join(bp, "b").select(
             "v",
             (F.col("pre") + F.sum("c").over(w_in)).cast("long").alias("cum"),
             "n",
@@ -548,8 +548,8 @@ def qty_price_blomqvist_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("qty") > F.col("mq")) & (F.col("price") < F.col("mp"))
     ) | ((F.col("qty") < F.col("mq")) & (F.col("price") > F.col("mp")))
     g = (
-        li.crossJoin(F.broadcast(mq))
-        .crossJoin(F.broadcast(mp))
+        li.crossJoin(mq)
+        .crossJoin(mp)
         .agg(
             F.count("*").cast("long").alias("n"),
             F.max("mq").alias("med_qty"),

@@ -328,7 +328,7 @@ def weekly_change_tail_asymmetry(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.lit(20) * (F.col("n") - F.col("cum")) < F.col("n"), F.col("d"))
         ).alias("hi"),
     )
-    t = chg.crossJoin(F.broadcast(cuts)).agg(
+    t = chg.crossJoin(cuts).agg(
         F.sum(F.when(F.col("d") <= F.col("lo"), 1).otherwise(0)).cast("long").alias("n_lo"),
         F.sum(F.when(F.col("d") <= F.col("lo"), F.col("d")).otherwise(0))
         .cast("long")

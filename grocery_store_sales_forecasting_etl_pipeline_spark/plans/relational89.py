@@ -31,9 +31,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans._tables import table as _t
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.registry import register
-from grocery_store_sales_forecasting_etl_pipeline_spark.operators.sizing import (
-    gated_broadcast as _gbcast,
-)
 
 _DEC = "decimal(38,0)"
 
@@ -195,8 +192,8 @@ def embedding_cluster_validity(spark: SparkSession, sf_dir: str) -> DataFrame:
     diff = F.col("a.s").cast("double") / F.col("na") - F.col("b.s").cast("double") / F.col("nb")
     pairs = (
         a.join(b, (F.col("a.dim") == F.col("b.dim")) & (F.col("a.label") < F.col("b.label")))
-        .join(F.broadcast(ca), F.col("a.label") == F.col("la_key"))
-        .join(F.broadcast(cb), F.col("b.label") == F.col("lb_key"))
+        .join(ca, F.col("a.label") == F.col("la_key"))
+        .join(cb, F.col("b.label") == F.col("lb_key"))
         .groupBy(F.col("a.label").alias("la"), F.col("b.label").alias("lb"))
         .agg(
             F.sqrt(F.sum(diff * diff)).alias("d_ij"),
@@ -216,8 +213,8 @@ def embedding_cluster_validity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg((F.sum("mx") / F.count("*")).alias("db_index"))
     )
     return (
-        glob.crossJoin(F.broadcast(gnorm))
-        .crossJoin(F.broadcast(db))
+        glob.crossJoin(gnorm)
+        .crossJoin(db)
         .select(
             F.col("n").alias("n_vectors"),
             F.col("k").alias("n_clusters"),
@@ -301,7 +298,7 @@ def return_discount_mantel_haenszel(spark: SparkSession, sf_dir: str) -> DataFra
     base = (
         li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(c, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey"))
+        .join(n, F.col("c_nationkey") == F.col("n_nationkey"))
         .select(
             F.col("n_name").alias("nation"),
             F.when(F.col("l_discount") >= 0.05, 1).otherwise(0).alias("exp_"),
@@ -400,7 +397,7 @@ def segment_brand_weighted_jaccard(spark: SparkSession, sf_dir: str) -> DataFram
     base = (
         li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(c, F.col("o_custkey") == F.col("c_custkey"))
-        .join(_gbcast(p), F.col("l_partkey") == F.col("p_partkey"))
+        .join(p, F.col("l_partkey") == F.col("p_partkey"))
         .groupBy(F.col("c_mktsegment").alias("seg"), F.col("p_brand").alias("brand"))
         .agg(F.sum(F.col("l_quantity").cast("long")).cast("long").alias("q"))
         .localCheckpoint(eager=False)  # A/B sf1: 2.90 s with, 5.19 s without
@@ -547,9 +544,9 @@ def discount_tax_twoway_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cells_s = cells.agg(F.sum(mean_term).alias("sc"))
     g = (
-        tot.crossJoin(F.broadcast(ra_s))
-        .crossJoin(F.broadcast(rb_s))
-        .crossJoin(F.broadcast(cells_s))
+        tot.crossJoin(ra_s)
+        .crossJoin(rb_s)
+        .crossJoin(cells_s)
     )
     grand = F.col("sy").cast("double") * F.col("sy") / F.col("n")
     ssa = F.col("sa") - grand

@@ -60,6 +60,7 @@ def counts_to_cum(
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return (
+        # A/B sf1: 2.08 s with, 2.75 s without the hint
         src.join(F.broadcast(off), "_b")
         .withColumn(
             "cum",
@@ -125,7 +126,7 @@ def grouped_value_cum_counts(
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return (
-        src.join(F.broadcast(off), [*group_cols, "_b"])
+        src.join(off, [*group_cols, "_b"])
         .withColumn("cum", (F.col("_off") + F.sum("c").over(w_in)).cast("long"))
         .drop("_b", "_off")
         .select(*group_cols, value_col, "c", "cum")
@@ -159,7 +160,7 @@ def bucketed_row_number(
     ] + [F.col(c).asc() for c in tiebreak_cols]
     w_in = Window.partitionBy("_b").orderBy(*in_order)
     return (
-        src.join(F.broadcast(off), "_b")
+        src.join(off, "_b")
         .withColumn(
             rank_col,
             (F.col("_off") + F.row_number().over(w_in)).cast("long"),

@@ -484,8 +484,8 @@ def knn_label_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     # not implicitly with data growth
     queries = emb.filter((F.col("vec_id") % 25 == 0) & (F.col("vec_id") < 10000))
     knn = sim.brute_force_knn(emb, queries, id_col="vec_id", vec_col="embedding", k=10)
-    q_labels = F.broadcast(
-        queries.select(F.col("vec_id").alias("query_id"), F.col("label").alias("query_label"))
+    q_labels = queries.select(
+        F.col("vec_id").alias("query_id"), F.col("label").alias("query_label")
     )
     # neighbor labels come from the full corpus — the GROWING side, so
     # the bounded (panel x k)-row knn frame is the broadcast side and the
@@ -494,6 +494,7 @@ def knn_label_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("neighbor_id"), F.col("label").alias("neighbor_label")
     )
     per_query = (
+        # pinned by test_plans.py::test_label_agreement_broadcasts_panel_not_corpus
         n_labels.join(F.broadcast(knn.join(q_labels, "query_id")), "neighbor_id")
         .groupBy("query_id", "query_label")
         .agg(

@@ -9,9 +9,6 @@ from pyspark.sql import DataFrame, SparkSession
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans._tables import table as _t
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.registry import register
 from grocery_store_sales_forecasting_etl_pipeline_spark.streaming import events as ev
-from grocery_store_sales_forecasting_etl_pipeline_spark.operators.sizing import (
-    gated_broadcast as _gbcast,
-)
 
 # Spark session_window merges events whose [ts, ts+gap) windows overlap —
 # i.e. a new session starts when the gap to the previous event is >= gap.
@@ -387,7 +384,7 @@ def event_dim_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _t(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_nationkey"
     )
-    joined = ev.enrich_with_dim(e, _gbcast(c), on="user_id", how="inner")
+    joined = ev.enrich_with_dim(e, c, on="user_id", how="inner")
     return joined.groupBy(
         F.col("c_nationkey").alias("nationkey"), "event_type"
     ).agg(

@@ -778,7 +778,7 @@ def doc_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = docs.agg(F.count("*").alias("n"))
     scored = (
         tf.withColumn("df", F.count("*").over(Window.partitionBy("term")))
-        .crossJoin(F.broadcast(n))
+        .crossJoin(n)
         .select(
             "doc_id",
             "term",
@@ -873,6 +873,7 @@ def benchmark_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hits = (
         grams.filter(F.col("doc_id") % _DECON_MOD != 0)
+        # A/B sf0.1: 0.98 s with, 1.13 s without the hint
         .join(_gbcast(bench), "gram")
         .groupBy("doc_id", "n_grams")
         .agg(F.count("*").cast("long").alias("n_hit_grams"))
@@ -1116,7 +1117,6 @@ def edit_distance_verify(
     *,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_max_pairs: int | None = 1_000_000,
     lev_threshold: int | None = None,
     length_band: tuple[int, int] | None = None,
 ) -> DataFrame:
@@ -1126,13 +1126,10 @@ def edit_distance_verify(
 
     The pair list explodes to (pair, side, doc_id) rows and joins against
     the corpus; joining the corpus twice — once per side — would scan
-    100 TB twice. The join strategy is size-gated: when the surviving
-    pair list fits (``<= broadcast_max_pairs`` rows) it BROADCASTs, so
-    the corpus never shuffles; above the gate (or with
-    ``broadcast_max_pairs=None``) it falls back to a shuffle hash join —
-    slower but safe, instead of OOMing the driver on an oversized
-    broadcast. The gate counts the (cached) pair sliver, which the main
-    query then reuses.
+    100 TB twice. The planner and AQE choose the join from the sizes:
+    a pair sliver under the broadcast threshold broadcasts, so the
+    corpus never shuffles, and a larger one shuffles instead of
+    OOMing the driver.
 
     ``lev_threshold`` caps the O(len²) levenshtein term per pair
     (Spark's 3-arg ``levenshtein(l, r, t)``): distances above the cap
@@ -1148,16 +1145,6 @@ def edit_distance_verify(
     skew vs a SQL oracle). Pairs with a NULL text are kept so NULL still
     propagates into lev/nld like the unfiltered path.
     """
-    over = False
-    if broadcast_max_pairs is not None:
-        # the gate count materializes the candidates once and the main
-        # query reuses the blocks; not persist(), which the plan cache
-        # would serve to a later identical build (BASELINE.md r5)
-        pairs = pairs.localCheckpoint(eager=False)  # A/B sf0.1: 8.03 s with, 10.58 s without
-        try:
-            over = pairs.limit(broadcast_max_pairs + 1).count() > broadcast_max_pairs
-        except Exception:
-            over = True
     sides = pairs.select(
         "id_1",
         "id_2",
@@ -1169,8 +1156,6 @@ def edit_distance_verify(
             )
         ).alias("__s"),
     ).select("id_1", "id_2", "jaccard", f"__s.{id_col}", "__s.side")
-    if broadcast_max_pairs is not None and not over:
-        sides = F.broadcast(sides)
     matched = docs.select(F.col(id_col), F.col(text_col).alias("__text")).join(
         sides, id_col
     )
@@ -1224,9 +1209,9 @@ def near_dup_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs at sf0.01 on the r10 corpus vs 125k doc pairs; absolute
     counts move when the driver regenerates testdata). The heavy
     lifting lives in
-    :func:`edit_distance_verify`: ONE corpus scan, size-gated pair-side
-    broadcast (auto-falls back to a shuffle join past 1M pairs), all
-    JVM-side codegen'd levenshtein. The ``_NDV_BAND`` length prefilter
+    :func:`edit_distance_verify`: ONE corpus scan, the pair-side join
+    strategy left to the planner and AQE, all JVM-side codegen'd
+    levenshtein. The ``_NDV_BAND`` length prefilter
     CHANGES the reported pair multiset (44 → 36 at sf0.01, r10): it is
     exact only w.r.t. a downstream similarity ≥ 0.6 near-dup DECISION —
     no dropped pair could have passed that threshold (lev ≥ |Δlen|) —
@@ -1306,6 +1291,7 @@ def temperature_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "long"
     )
     return (
+        # A/B sf1: 0.22 s with, 0.28 s without the hint
         d.join(F.broadcast(counts), "source")
         .filter(u * F.col("source_docs") < F.col("source_quota") * F.lit(_MIX_HASH_SPACE))
         .select("doc_id", "source", "source_docs", "source_quota")
@@ -1439,7 +1425,7 @@ def vocab_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "tok", F.lit(1).alias("__in_vocab")
     )
     ex = d.select("doc_id", F.explode("__tk").alias("tok"))
-    scored = ex.join(F.broadcast(vocab), "tok", "left")
+    scored = ex.join(vocab, "tok", "left")
     per = scored.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_tokens"),
         F.sum(F.when(F.col("__in_vocab").isNull(), 1).otherwise(0))

@@ -141,8 +141,8 @@ def test_winnow_containment_fuzz(spark):
 
 def test_edit_distance_verify_capped_and_fallback(spark, sf_oracle):
     """The capped lev_threshold variant agrees with the unbounded one
-    below the cap (and returns -1/-1 above it); the size-gated shuffle
-    fallback (broadcast_max_pairs=0 forces it) produces identical rows
+    below the cap (and returns -1/-1 above it); a shuffle join of the
+    pair side (broadcast threshold -1 forces it) produces identical rows
     to the broadcast path."""
     from grocery_store_sales_forecasting_etl_pipeline_spark.plans.textops import (
         doc_ngram_jaccard,
@@ -169,11 +169,16 @@ def test_edit_distance_verify_capped_and_fallback(spark, sf_oracle):
         else:
             assert capped[k] == (-1, -1.0)
 
-    # force the shuffle-join fallback: every pair count exceeds the gate
-    shuffled = {
-        (r["id_1"], r["id_2"]): (r["lev"], r["nld"])
-        for r in edit_distance_verify(pairs, docs, broadcast_max_pairs=0).collect()
-    }
+    # force a shuffle join: no side is small enough to broadcast
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        shuffled = {
+            (r["id_1"], r["id_2"]): (r["lev"], r["nld"])
+            for r in edit_distance_verify(pairs, docs).collect()
+        }
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     assert shuffled == base
 
 
