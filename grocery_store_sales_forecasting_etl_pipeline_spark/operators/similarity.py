@@ -41,25 +41,11 @@ def _with_vec_norm(df: DataFrame, vec_col: str, out_vec: str, out_norm: str) -> 
     ).withColumn(out_norm, F.expr(_NORM.format(a=out_vec)))
 
 
-def _pair_cosine(
-    vec_a: str, norm_a: str, vec_b: str, norm_b: str, dim: int | None = None
-) -> Column:
+def _pair_cosine(vec_a: str, norm_a: str, vec_b: str, norm_b: str) -> Column:
     """dot/(‖a‖·‖b‖) over pre-normed double arrays — identical float
     shape to ``cosine`` (left-to-right dot, sqrt·sqrt denominator), so
-    rounded results stay oracle-exact.
-
-    With ``dim``, the dot product can be emitted as a static
-    ``a[1]*b[1] + … + a[d]*b[d]`` chain. Measured on the all-pairs bench
-    this is ~3× SLOWER than the zip_with fold at d=64 (the 2d-term
-    expression tree exceeds codegen thresholds and falls back to
-    interpreted eval), so callers leave ``dim=None``; the option remains
-    for small d where the static chain does codegen."""
-    if dim is None:
-        dot = _DOT.format(a=vec_a, b=vec_b)
-    else:
-        dot = " + ".join(
-            f"element_at({vec_a}, {i}) * element_at({vec_b}, {i})" for i in range(1, dim + 1)
-        )
+    rounded results stay oracle-exact."""
+    dot = _DOT.format(a=vec_a, b=vec_b)
     return F.expr(f"({dot}) / ({norm_a} * {norm_b})")
 
 

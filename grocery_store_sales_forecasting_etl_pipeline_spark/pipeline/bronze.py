@@ -149,16 +149,15 @@ def _upsert_source(
     table = f"raw.{name}"
     if not spark.catalog.tableExists(table):
         return ingest_csv(spark, path, schema, table, QUARANTINE_TABLE, partition_by_date=by_date)
-    clean, n_q = prepare_clean(spark, path, schema, QUARANTINE_TABLE, partition_by_date=by_date)
     keys = list(SOURCE_KEYS[name])
     if by_date and "date" in keys:
         # partition column in the key => keys can't move partitions
-        n = maintenance.partition_upsert(
-            spark, table, clean, keys=keys, partition_cols=("year", "month")
+        upsert = partial(
+            maintenance.partition_upsert, spark, table, keys=keys, partition_cols=("year", "month")
         )
     else:
-        n = maintenance.merge_upsert(spark, table, clean, keys=keys)
-    return n, n_q
+        upsert = partial(maintenance.merge_upsert, spark, table, keys=keys)
+    return prepare_clean(spark, path, schema, upsert, QUARANTINE_TABLE, partition_by_date=by_date)
 
 
 def run_incremental(
@@ -177,6 +176,9 @@ def run_incremental(
       quarantine append when it has corrupt rows)
     - a source absent from the day's folder is skipped (sources deliver
       on their own cadence), unlike the full run where absence raises
+    - corrupt rows go to ``logs.quarantine`` only after the source's
+      write succeeds (``csv_ingest.prepare_clean``, the same split as the
+      full run), so a failed source quarantines nothing
     - a failing source is raised after the other sources have finished
 
     Returns {name: (rows_written, rows_quarantined)} for present

@@ -23,9 +23,9 @@ from grocery_store_sales_forecasting_etl_pipeline_spark.plans.registry import re
 # ---------------------------------------------------------------------------
 
 
-# shared by weekly_revenue_acf / weekly_revenue_cusum: the weekly floor
-# -dollar series (cents summed exactly, then integer-divided by 100;
-# Spark DIV == DuckDB // on non-negatives)
+# the weekly floor-dollar series every weekly-revenue query imports from
+# here (cents summed exactly, then integer-divided by 100; Spark DIV ==
+# DuckDB // on non-negatives)
 _WEEKLY_CTE = """
 WITH weekly AS (
   SELECT CAST(date_trunc('week', o_orderdate) AS DATE) AS week_start,

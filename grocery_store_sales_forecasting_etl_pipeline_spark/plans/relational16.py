@@ -30,14 +30,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans._tables import table as _t
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.registry import register
+from grocery_store_sales_forecasting_etl_pipeline_spark.plans.relational5 import _revenue_dec
 
 _DEC = "decimal(18,2)"
-
-
-def _rev() -> F.Column:
-    return F.col("l_extendedprice").cast(_DEC) * (
-        F.lit(1).cast(_DEC) - F.col("l_discount").cast(_DEC)
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -109,7 +104,7 @@ def nation_pair_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cust_nation",
             F.year("l_shipdate").cast("long").alias("l_year"),
         )
-        .agg(F.round(F.sum(_rev()), 2).cast("double").alias("trade_volume"))
+        .agg(F.round(F.sum(_revenue_dec()), 2).cast("double").alias("trade_volume"))
     )
 
 
@@ -159,7 +154,7 @@ def product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = _t(spark, sf_dir, "supplier")
     p = _t(spark, sf_dir, "part").filter(F.col("p_name").like("%gear%"))
     n = _t(spark, sf_dir, "nation")
-    amount = _rev() - F.col("p_retailprice").cast(_DEC) * F.col("l_quantity").cast(_DEC)
+    amount = _revenue_dec() - F.col("p_retailprice").cast(_DEC) * F.col("l_quantity").cast(_DEC)
     return (
         l.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(s, F.col("l_suppkey") == F.col("s_suppkey"))
@@ -283,7 +278,7 @@ def brand_size_disjunctive_rev(spark: SparkSession, sf_dir: str) -> DataFrame:
         l.join(p, F.col("p_partkey") == F.col("l_partkey"))
         .filter(branches)
         .agg(
-            F.round(F.sum(_rev()), 2).cast("double").alias("revenue"),
+            F.round(F.sum(_revenue_dec()), 2).cast("double").alias("revenue"),
             F.count(F.lit(1)).alias("n_lines"),
         )
     )

@@ -24,14 +24,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans._tables import table as _t
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.registry import register
+from grocery_store_sales_forecasting_etl_pipeline_spark.plans.relational5 import _revenue_dec
 
 _DEC = "decimal(18,2)"
-
-
-def _rev() -> F.Column:
-    return F.col("l_extendedprice").cast(_DEC) * (
-        F.lit(1).cast(_DEC) - F.col("l_discount").cast(_DEC)
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -88,7 +83,7 @@ def region_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(n, F.col("s_nationkey") == F.col("n_nationkey"))
         .join(r, F.col("n_regionkey") == F.col("r_regionkey"))
         .groupBy("n_name")
-        .agg(F.round(F.sum(_rev()), 2).cast("double").alias("revenue"))
+        .agg(F.round(F.sum(_revenue_dec()), 2).cast("double").alias("revenue"))
     )
 
 
@@ -135,7 +130,7 @@ def nation_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = _t(spark, sf_dir, "supplier")
     n = _t(spark, sf_dir, "nation")
     r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
-    volume = _rev()
+    volume = _revenue_dec()
     german = F.when(F.col("n_name") == "GERMANY", volume).otherwise(
         F.lit(0).cast(_DEC)
     )
@@ -198,7 +193,7 @@ def returned_item_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(c, F.col("o_custkey") == F.col("c_custkey"))
         .join(n, F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("c_custkey", "c_name", "n_name")
-        .agg(F.round(F.sum(_rev()), 2).cast("double").alias("lost_revenue"))
+        .agg(F.round(F.sum(_revenue_dec()), 2).cast("double").alias("lost_revenue"))
         .orderBy(F.desc("lost_revenue"), F.asc("c_custkey"))
         .limit(20)
     )

@@ -26,25 +26,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans._tables import table as _t
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.registry import register
-
-_WEEKLY_CTE = """
-WITH weekly AS (
-  SELECT CAST(date_trunc('week', o_orderdate) AS DATE) AS week_start,
-         sum(CAST(round(o_totalprice * 100) AS BIGINT)) // 100 AS dollars
-  FROM orders GROUP BY week_start
-)"""
-
-
-def _weekly_dollars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
-    return (
-        o.select(
-            F.date_trunc("week", "o_orderdate").cast("date").alias("week_start"),
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-        )
-        .groupBy("week_start")
-        .agg(F.expr("sum(cents) DIV 100").alias("dollars"))
-    )
+from grocery_store_sales_forecasting_etl_pipeline_spark.plans.relational15 import (
+    _WEEKLY_CTE,
+    _weekly_dollars,
+)
 
 
 # ---------------------------------------------------------------------------

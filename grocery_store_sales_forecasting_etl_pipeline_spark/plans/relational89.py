@@ -31,41 +31,16 @@ from pyspark.sql import DataFrame, SparkSession
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans._tables import table as _t
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.registry import register
+from grocery_store_sales_forecasting_etl_pipeline_spark.plans.relational76 import _QDIM, _qdim_spark
 
 _DEC = "decimal(38,0)"
-
-_QDIM_L = """
-  SELECT vec_id, label, CAST(u AS BIGINT) AS dim,
-         CAST(round(CAST(v AS DOUBLE) * 1000000) AS BIGINT) AS q
-  FROM (
-    SELECT vec_id, label,
-           unnest(embedding) AS v,
-           unnest(range(0, len(embedding))) AS u
-    FROM embeddings
-  )
-"""
-
-
-def _qdim_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
-    return emb.select(
-        "vec_id",
-        "label",
-        F.posexplode("embedding").alias("dim", "v"),
-    ).select(
-        "vec_id",
-        "label",
-        F.col("dim").cast("long").alias("dim"),
-        F.round(F.col("v").cast("double") * 1_000_000).cast("long").alias("q"),
-    )
-
 
 # ---------------------------------------------------------------------------
 # Calinski-Harabasz + Davies-Bouldin cluster validity
 # ---------------------------------------------------------------------------
 
 _VALIDITY_ORACLE = f"""
-WITH qd AS ({_QDIM_L}),
+WITH qd AS ({_QDIM}),
 per AS (
   SELECT label, dim,
          CAST(sum(CAST(q AS HUGEINT)) AS DECIMAL(38,0)) AS s

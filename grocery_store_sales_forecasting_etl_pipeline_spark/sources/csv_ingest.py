@@ -4,19 +4,25 @@
 The reference relies on Databricks-only ``badRecordsPath``; OSS Spark
 re-expresses it (SURVEY.md §2.1 S3): read PERMISSIVE with a
 ``_corrupt_record`` column, split the frame — clean rows to the bronze
-table, corrupt raw lines to a quarantine table. The split is two
-filters over one cached read: the clean write observes the clean and
-corrupt counts as it goes, and the corrupt rows are appended from the
-cache afterwards, only when there are any.
+table, corrupt raw lines to a quarantine table. ``write_split`` is the
+only split, for the full load (``ingest_csv``, an overwrite), the daily
+load (``prepare_clean``, the caller's upsert) and JSONL: two filters
+over one cached read, where the clean write observes the clean and
+corrupt counts as it goes and the corrupt rows are appended from the
+cache afterwards, only when there are any and the write succeeded.
 
 Scale notes: schema is always explicit (never inferSchema — that is a
 full extra pass over 100 TB). A full load is one write job per source
 (plus one append for a source with corrupt rows), fully parallel over
 the file's splits, and ``pipeline/bronze`` runs the sources' jobs
 concurrently rather than in the reference's one-after-another loop.
+A daily load runs no count job: its counts ride the upsert's stage write.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
+from functools import partial
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -73,65 +79,38 @@ def _clean_rows(df: DataFrame, by_date: bool) -> DataFrame:
     return clean
 
 
-def prepare_clean(
-    spark: SparkSession,
-    path: str,
-    schema: StructType,
-    quarantine_table: str | None = None,
-    partition_by_date: bool = False,
-    stage: str = "bronze_ingestion",
-) -> tuple[DataFrame, int]:
-    """Read + quarantine-split WITHOUT writing the clean side: returns
-    ``(clean_df, n_quarantined)`` for callers that route clean rows into
-    an upsert instead of an overwrite (the incremental daily-batch path,
-    ``pipeline/bronze.run_incremental``).
-
-    The read is cached only across the quarantine count/write (Spark
-    rejects corrupt-column-only queries on an uncached CSV read —
-    UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN) and unpersisted
-    before returning: the clean frame recomputes from the file when the
-    caller's upsert materializes it, so no cache entry outlives this call
-    in a long-running orchestrator. Daily batches are small by
-    construction; the second scan is the right trade.
-    """
-    try:
-        df = read_csv_permissive(spark, path, schema).cache()
-        n_quarantined = 0
-        try:
-            if quarantine_table is not None:
-                corrupt = _corrupt_rows(df, stage)
-                n_quarantined = corrupt.count()
-                if n_quarantined:
-                    append_audit(corrupt, quarantine_table)
-        finally:
-            df.unpersist()
-        return _clean_rows(df, partition_by_date and "date" in df.columns), n_quarantined
-    except Exception as exc:  # noqa: BLE001 — reference logs then re-raises any failure
-        log_error(spark, str(exc), stage=stage, source_file=path)
-        raise
+def _overwrite(table: str, partitioned: bool, clean: DataFrame) -> None:
+    """The full load's write step: overwrite ``table`` with ``clean``,
+    partitioned by year/month when ``partitioned``."""
+    writer = clean.write.mode("overwrite").format("parquet")
+    if partitioned:
+        writer = writer.partitionBy("year", "month")
+    writer.saveAsTable(table)
 
 
 def write_split(
     df: DataFrame,
-    table: str,
+    write: Callable[[DataFrame], int | None],
     quarantine_table: str | None = None,
     partition_by_date: bool = False,
     stage: str = "bronze_ingestion",
 ) -> tuple[int, int]:
-    """Overwrite ``table`` with the clean rows of the permissive read
-    ``df`` and append its corrupt rows to ``quarantine_table``. Returns
-    (clean_rows, quarantined_rows).
+    """Hand the clean rows of the permissive read ``df`` to ``write`` (an
+    overwrite or an upsert) and append its corrupt rows to
+    ``quarantine_table``. Returns (rows_written, quarantined_rows), where
+    rows_written is what ``write`` returns, or the clean rows when it
+    returns None.
 
-    One write job: an ``Observation`` on the cached read, below the
-    clean filter, counts clean and corrupt rows while the clean write
-    runs. The corrupt rows are then appended from the cache, only when
-    there are any, so a failed clean write quarantines nothing and a
-    retry does not record the same rows twice.
+    An ``Observation`` on the cached read, below the clean filter, counts
+    clean and corrupt rows while ``write`` runs. The corrupt rows are then
+    appended from the cache, only when there are any, so a failed write
+    quarantines nothing and a retry does not record the same rows twice.
     """
-    # cache: the append reads the corrupt rows back from memory, and
-    # Spark rejects corrupt-column-only queries on an uncached read
+    # cache: every branch of ``write`` and the append read one parse of the
+    # file. An uncached read parses only the columns a branch needs, so a
+    # branch that needs only ``date`` would take a corrupt line for a clean
+    # row, and Spark rejects corrupt-column-only queries on it outright.
     df = df.cache()
-    by_date = partition_by_date and "date" in df.columns
     try:
         counts = Observation()
         corrupt = F.col(CORRUPT_COL).isNotNull()
@@ -140,16 +119,12 @@ def write_split(
             F.count(F.when(~corrupt, 1)).alias("clean"),
             F.count(F.when(corrupt, 1)).alias("corrupt"),
         )
-        clean = _clean_rows(observed, by_date)
-        writer = clean.write.mode("overwrite").format("parquet")
-        if by_date:
-            writer = writer.partitionBy("year", "month")
-        writer.saveAsTable(table)
+        written = write(_clean_rows(observed, partition_by_date))
         metrics = counts.get
         n_quarantined = metrics["corrupt"] if quarantine_table is not None else 0
         if n_quarantined:
             append_audit(_corrupt_rows(df, stage), quarantine_table)
-        return metrics["clean"], n_quarantined
+        return (metrics["clean"] if written is None else written), n_quarantined
     finally:
         df.unpersist()
 
@@ -166,8 +141,8 @@ def ingest_csv(
     """Reference ``load_to_bronze`` (bronze_ingestion.py.py:12-46) with
     OSS quarantine. Returns (clean_rows, quarantined_rows).
 
-    - clean rows → overwrite ``table`` (partitioned by year/month when a
-      date column exists and ``partition_by_date``)
+    - clean rows → overwrite ``table`` (partitioned by year/month of its
+      ``date`` column when ``partition_by_date``)
     - corrupt rows (raw line + source file + timestamp) → append
       ``quarantine_table`` after the clean write (``write_split``)
     - any failure → structured row in logs.etl_errors, then re-raise
@@ -175,7 +150,34 @@ def ingest_csv(
     """
     try:
         df = read_csv_permissive(spark, path, schema)
-        return write_split(df, table, quarantine_table, partition_by_date, stage)
+        write = partial(_overwrite, table, partition_by_date)
+        return write_split(df, write, quarantine_table, partition_by_date, stage)
+    except Exception as exc:  # noqa: BLE001 — reference logs then re-raises any failure
+        log_error(spark, str(exc), stage=stage, source_file=path)
+        raise
+
+
+def prepare_clean(
+    spark: SparkSession,
+    path: str,
+    schema: StructType,
+    write: Callable[[DataFrame], int],
+    quarantine_table: str | None = None,
+    partition_by_date: bool = False,
+    stage: str = "bronze_ingestion",
+) -> tuple[int, int]:
+    """The daily twin of ``ingest_csv``: the clean rows of ``path`` go to
+    the caller's ``write`` step (a ``maintenance`` upsert into an existing
+    table, ``pipeline/bronze.run_incremental``) instead of an overwrite.
+    Returns (rows_written as ``write`` counts them, quarantined_rows).
+
+    Same split (``write_split``), same contract: corrupt rows append to
+    ``quarantine_table`` only after ``write`` succeeds, and any failure
+    logs a structured row to logs.etl_errors, then re-raises.
+    """
+    try:
+        df = read_csv_permissive(spark, path, schema)
+        return write_split(df, write, quarantine_table, partition_by_date, stage)
     except Exception as exc:  # noqa: BLE001 — reference logs then re-raises any failure
         log_error(spark, str(exc), stage=stage, source_file=path)
         raise

@@ -18,12 +18,15 @@ executor gets work.
 
 from __future__ import annotations
 
+from functools import partial
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.sources.csv_ingest import (
     CORRUPT_COL,
+    _overwrite,
     _with_corrupt_capture,
     write_split,
 )
@@ -57,7 +60,7 @@ def ingest_jsonl(
     row to logs.etl_errors and re-raise. Returns (clean, quarantined)."""
     try:
         df = read_jsonl_permissive(spark, path, schema)
-        return write_split(df, table, quarantine_table, stage=stage)
+        return write_split(df, partial(_overwrite, table, False), quarantine_table, stage=stage)
     except Exception as exc:  # noqa: BLE001 — same contract as reference E1
         log_error(spark, str(exc), stage=stage, source_file=path)
         raise

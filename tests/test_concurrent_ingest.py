@@ -1,9 +1,12 @@
 """Bronze ingests its sources concurrently (pipeline/bronze.py): one
 write job per source plus one quarantine append per source with corrupt
 rows, every job tagged with the caller's job group, and counts that match
-a recount; a first daily load writes the same way. The shared audit
-tables and the session-global partition overwrite mode stay correct
-under concurrent writers, and a partition upsert's job count is pinned."""
+a recount; a first daily load writes the same way. A daily upsert splits
+its delivery the same way too: corrupt lines never reach the upsert and
+are quarantined only once it succeeds. The shared audit tables and the
+session-global partition overwrite mode stay correct under concurrent
+writers, and the job counts of a partition upsert and of a daily
+dimension upsert are pinned."""
 
 from __future__ import annotations
 
@@ -186,3 +189,80 @@ def test_partition_upsert_job_count(spark):
         assert _run_in_group(spark, "partition-upsert", upsert) == (3, 5)
     finally:
         spark.sql("DROP DATABASE IF EXISTS upsert_jobs CASCADE")
+
+
+DAY = dt.date(2017, 1, 31)
+DAY_ROWS = [f"{DAY.isoformat()},{s},{500 + s}" for s in (1, 2, 3)]
+
+
+def _deliver(src, name: str, lines: list[str]) -> str:
+    """Write ``<src>/YYYY/MM/DD/<name>.csv`` for ``DAY``; returns its path."""
+    day_dir = src / f"{DAY:%Y/%m/%d}"
+    day_dir.mkdir(parents=True, exist_ok=True)
+    (day_dir / f"{name}.csv").write_text("\n".join(lines))
+    return str(day_dir / f"{name}.csv")
+
+
+def _upsert_transactions(spark, src, bad: tuple[str, ...]) -> tuple[str, dict]:
+    """Backfill, then deliver ``DAY_ROWS`` plus the ``bad`` lines as the
+    day's transactions and upsert them. Returns the delivered path and
+    ``run_incremental``'s counts."""
+    bronze.run(spark, str(src))
+    path = _deliver(src, "transactions", ["date,store_nbr,transactions", *DAY_ROWS, *bad])
+    return path, bronze.run_incremental(spark, str(src), DAY)
+
+
+def _quarantined(spark, path: str) -> list[str]:
+    q = spark.table(bronze.QUARANTINE_TABLE).filter(F.col("source_file").endswith(path))
+    return sorted(r.raw_record for r in q.collect())
+
+
+def test_daily_corrupt_lines_are_quarantined_not_parsed(spark, src):
+    # too few fields, and fields that do not parse: both once crashed the
+    # upsert, whose partition branch parsed the date column alone
+    bad = ("garbage line 123", "bad,row,x")
+    path, counts = _upsert_transactions(spark, src, bad)
+    assert counts["transactions"][1] == len(bad)
+    assert _quarantined(spark, path) == sorted(bad)
+    day = spark.table("raw.transactions").filter(F.col("date") == DAY)
+    assert {r.store_nbr: r.transactions for r in day.filter("store_nbr <= 3").collect()} == {
+        1: 501,
+        2: 502,
+        3: 503,
+    }
+
+
+def test_daily_corrupt_line_does_not_widen_the_upsert(spark, src):
+    # a corrupt line dated in December must not pull December into an
+    # upsert of January: only the delivered partition is written
+    _, counts = _upsert_transactions(spark, src, ("2016-12-20,notanint,5",))
+    january = spark.table("raw.transactions").filter("year = 2017 AND month = 1").count()
+    assert counts == {"transactions": (january, 1)}
+
+
+def test_failed_daily_upsert_quarantines_nothing(spark, src, monkeypatch):
+    def fail(*args, **kwargs):
+        raise RuntimeError("rewrite failed")
+
+    monkeypatch.setattr(maintenance, "rewrite_staged", fail)
+    bronze.run(spark, str(src))
+    quarantined = spark.table(bronze.QUARANTINE_TABLE).count()
+    path = _deliver(src, "transactions", ["date,store_nbr,transactions", *DAY_ROWS, "bad,row,x"])
+    with pytest.raises(RuntimeError, match="rewrite failed"):
+        bronze.run_incremental(spark, str(src), DAY)
+    assert spark.table(bronze.QUARANTINE_TABLE).count() == quarantined
+    errors = spark.table(catalog.ERROR_LOG_TABLE).filter(F.col("stage") == "bronze_ingestion")
+    assert [r.source_file for r in errors.collect()] == [path]
+
+
+def test_daily_dimension_upsert_job_count(spark, src):
+    bronze.run(spark, str(src))
+    _deliver(src, "stores", ["store_nbr,city,state,type,cluster", "1,Quito,state1,B,4", "x,y"])
+    load = partial(bronze.run_incremental, spark, str(src), DAY)
+    counts, n_jobs = _run_in_group(spark, "daily-stores", load)
+    assert counts == {"stores": (spark.table("raw.stores").count(), 1)}
+    # four jobs write the merge's stage (AQE materializes the cached read
+    # once for each of its two uses, and runs the broadcast of the keys
+    # and the write as jobs of their own), one inserts it and one appends
+    # the corrupt line; no job counts the corrupt lines
+    assert n_jobs == 6

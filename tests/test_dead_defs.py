@@ -1,15 +1,21 @@
-"""Lint: every top-level package function has a caller.
+"""Lint: every top-level package function has a caller, and every
+package function the benchmark tracer wraps exists.
 
 Counts, by AST, the identifiers used in the package, ``tests/``,
 ``tools/``, ``perfbench/`` and ``bench.py`` (names, attributes, imports)
 and fails on any top-level package function whose name occurs nowhere
 outside its own body. ``@register`` builders are exempt: the query
 registry calls them by name.
+
+``perfbench/tracing.py`` wraps package functions by module and name, so
+deleting or renaming one breaks ``perfbench/run.py --trace 1`` and
+nothing else; the second lint reads those names from its ``install``.
 """
 
 from __future__ import annotations
 
 import ast
+import importlib
 from collections import Counter
 from pathlib import Path
 
@@ -47,3 +53,29 @@ def test_every_top_level_def_has_a_caller():
         and used[node.name] == _identifiers(node)[node.name]
     ]
     assert not unreferenced, f"top-level defs with no caller (delete them): {unreferenced}"
+
+
+def test_every_traced_function_exists():
+    tracer = ast.parse((ROOT / "perfbench" / "tracing.py").read_text())
+    install = next(
+        n for n in ast.walk(tracer) if isinstance(n, ast.FunctionDef) and n.name == "install"
+    )
+    modules = {
+        alias.asname or alias.name: f"{node.module}.{alias.name}"
+        for node in ast.walk(install)
+        if isinstance(node, ast.ImportFrom) and node.module.startswith(PKG.name)
+        for alias in node.names
+    }
+    wrapped = [
+        (modules[call.args[0].id], call.args[1].value)
+        for call in ast.walk(install)
+        if isinstance(call, ast.Call)
+        and getattr(call.func, "attr", None) in ("wrap", "wrap_everywhere")
+        and isinstance(call.args[0], ast.Name)
+        and call.args[0].id in modules
+    ]
+    assert wrapped, "found no (module, name) wrapped in the tracer's install()"
+    missing = [
+        f"{m}.{name}" for m, name in wrapped if not hasattr(importlib.import_module(m), name)
+    ]
+    assert not missing, f"the tracer wraps package functions that do not exist: {missing}"

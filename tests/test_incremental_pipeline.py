@@ -5,13 +5,15 @@ and re-delivered (duplicate) rows upsert idempotently."""
 from __future__ import annotations
 
 import datetime as dt
+from functools import partial
 
 import pyspark.sql.functions as F
 import pytest
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.sources import catalog, maintenance as mx
 from grocery_store_sales_forecasting_etl_pipeline_spark.sources.csv_ingest import (
-    read_csv_permissive,
+    ingest_csv,
+    prepare_clean,
 )
 from grocery_store_sales_forecasting_etl_pipeline_spark.pipeline.bronze import (
     TRANSACTIONS_SCHEMA,
@@ -36,28 +38,15 @@ def incr_env(spark, tmp_path):
 
 
 def _ingest_day(spark, csv_path: str) -> None:
-    df = (
-        read_csv_permissive(spark, csv_path, TRANSACTIONS_SCHEMA)
-        .filter(F.col("_corrupt_record").isNull())
-        .drop("_corrupt_record")
-        .withColumn("date", F.to_date("date", "yyyy-MM-dd"))
-        .withColumn("year", F.year("date"))
-        .withColumn("month", F.month("date"))
-    )
-    if "raw" in [d.name for d in spark.catalog.listDatabases()] and spark.catalog.tableExists(
-        "raw.transactions_incr"
-    ):
-        mx.partition_upsert(
-            spark,
-            "raw.transactions_incr",
-            df,
-            keys=["date", "store_nbr"],
-            partition_cols=["year", "month"],
-        )
-    else:
-        df.write.mode("overwrite").partitionBy("year", "month").format("parquet").saveAsTable(
-            "raw.transactions_incr"
-        )
+    """Load one day's CSV the way bronze does: the first day creates the
+    table, later days upsert into their partitions."""
+    table = "raw.transactions_incr"
+    if not spark.catalog.tableExists(table):
+        ingest_csv(spark, csv_path, TRANSACTIONS_SCHEMA, table, partition_by_date=True)
+        return
+    keys, parts = ["date", "store_nbr"], ["year", "month"]
+    upsert = partial(mx.partition_upsert, spark, table, keys=keys, partition_cols=parts)
+    prepare_clean(spark, csv_path, TRANSACTIONS_SCHEMA, upsert, partition_by_date=True)
 
 
 def test_daily_incremental_ingest_and_replay(spark, incr_env):

@@ -67,10 +67,10 @@ def test_non_file_frame_defaults_to_broadcast(spark):
 # audit").
 _GATED = ["benchmark_decontam", "nation_qty_price_corr", "nation_supplier_hhi"]
 
-# Join strategy never changes rows. The first six queries lost every
-# hint in the broadcast-hint audit and pin that the audit changed no
-# rows; the rest keep a hint that changes their plan, so each leg below
-# runs a different plan.
+# Join strategy never changes rows. The first eight queries lost every
+# hint (the last two when their literal frames gained size statistics)
+# and pin that removing them changed no rows; the rest keep a hint that
+# changes their plan, so each leg below runs a different plan.
 _DIFFERENTIAL = [
     "dim_enrich_join",
     "nation_pair_trade",
@@ -78,6 +78,8 @@ _DIFFERENTIAL = [
     "bigram_pmi_topk",
     "supplier_overlap_jaccard",
     "tfidf_cosine_pairs",
+    "segment_value_shift_function",
+    "weekly_quantile_pinball_eval",
     *_GATED,
     "class_balance_downsample",
     "embedding_centroid_silhouette",
@@ -86,10 +88,8 @@ _DIFFERENTIAL = [
     "nation_balance_mad_outliers",
     "range_bucket_join",
     "segment_value_ansari_bradley",
-    "segment_value_shift_function",
     "target_encoding_loo",
     "temperature_mixture_sample",
-    "weekly_quantile_pinball_eval",
 ]
 
 
