@@ -53,15 +53,20 @@ def train_predict_global(
     in 32 partitions pays ~50 jobs × 32 near-empty tasks of pure
     scheduler overhead; a handful of right-sized partitions halves wall
     time. Leave None at real scale — there the default partitioning is
-    the right one.
+    the right one. Feature columns must be numeric or boolean; they are
+    cast to double before assembly.
     """
     from pyspark.ml.feature import VectorAssembler
     from pyspark.ml.regression import GBTRegressor
 
+    # VectorAssembler casts a non-double input to a column named after its
+    # random uid, so each call generated new code text and compiled it
+    # again; the same casts under fixed names keep the text stable
+    doubles = {f"__f_{c}": F.col(c).cast("double") for c in feature_cols}
     assembler = VectorAssembler(
-        inputCols=list(feature_cols), outputCol="__features", handleInvalid="keep"
+        inputCols=list(doubles), outputCol="__features", handleInvalid="keep"
     )
-    assembled = assembler.transform(features)
+    assembled = assembler.transform(features.withColumns(doubles)).drop(*doubles)
     if train_partitions is not None:
         assembled = assembled.repartition(train_partitions)
     assembled = assembled.persist()

@@ -15,6 +15,14 @@ behavior:
   grows beyond this for non-skew cases).
 - session timezone pinned to UTC so date/timestamp semantics are stable
   across environments and match the DuckDB oracle.
+- a codegen cache large enough for the engine's working set, so each
+  generated class compiles once per session instead of once per pass.
+  Spark keeps compiled classes in one LRU per JVM, keyed by source text
+  and sized by a static conf read when the JVM first generates code; it
+  holds 100 by default. Only a JVM whose first session ``get_spark``
+  built gets the larger cache: the driver contract's vanilla session,
+  ``tools/verify_contract.py`` and the Delta test session keep Spark's
+  default.
 """
 
 from __future__ import annotations
@@ -82,6 +90,16 @@ def get_spark(
         # inflation by the tail of a 158-query full-registry bench).
         # Force a periodic driver GC so cleanup actually runs.
         .config("spark.cleaner.periodicGC.interval", "2min")
+        # Spark's LRU of compiled classes holds 100 by default, fewer than
+        # one pass compiles (measured with the cache unbounded, 4 cores):
+        # 136 distinct classes in a perfbench eager_build pass, 165 in a
+        # medallion_dag backfill plus 37 on the first daily batch, and
+        # 5,352 in one bench.py registry pass at sf0.1. At 100 that pass
+        # compiled 7,901 times and each warm eager_build pass recompiled
+        # 107-129 classes. A power of two above the registry's count
+        # ends that; the cached classes cost Metaspace (243 MB after the
+        # registry pass, against 197 MB at 100).
+        .config("spark.sql.codegen.cache.maxEntries", "8192")
     )
     if master is not None:
         builder = builder.master(master)

@@ -9,9 +9,11 @@ module supplies the real operations, Delta-free:
 - ``merge_upsert``: keyed MERGE = target ∖ updates (left-anti) ∪ updates.
   Correct but rewrites the table — use for dims/small tables.
 - ``partition_upsert``: the 100 TB path — only partitions present in the
-  update batch are rewritten (dynamic partition overwrite); untouched
-  partitions are never read or written. A daily 1-partition update to a
-  3-year table costs 1/1000th of the full rewrite.
+  update batch are read and rewritten. Their values are collected and
+  filter the target as literals, so the scan lists only those
+  partitions, and the write is a dynamic partition overwrite. A daily
+  1-partition update to a 3-year table costs 1/1000th of the full
+  rewrite.
 - ``compact_table``: rewrite a table into ``target_files`` files per
   partition — the small-files fix after many appends.
 
@@ -25,9 +27,11 @@ replaces, leaving nothing stale to clean up); with Delta installed,
 
 from __future__ import annotations
 
+import operator
 import threading
 import uuid
 from collections.abc import Sequence
+from functools import reduce
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -150,8 +154,10 @@ def partition_upsert(
     check_key_movement: bool = False,
 ) -> int:
     """Partition-scoped upsert: merge ``updates`` into only the
-    partitions they touch, leaving every other partition untouched
-    (dynamic partition overwrite — ``partitionOverwriteMode=dynamic``).
+    partitions they touch, leaving every other partition unread and
+    unwritten (dynamic partition overwrite —
+    ``partitionOverwriteMode=dynamic``). One job collects the batch's
+    partition values to the driver.
 
     Returns rows written. ``partition_cols`` must be the table's
     partitioning; update rows must carry them.
@@ -166,13 +172,21 @@ def partition_upsert(
     operator otherwise avoids, so it is opt-in.
     """
     # the affected-partition set is small by construction (a daily batch
-    # touches a few partitions) — broadcast it as a semi-join filter
-    affected = updates.select(*partition_cols).distinct()
+    # touches a few partitions): collected, it filters the target by
+    # literals, which prunes the scan to those partitions at planning
+    # time. A semi-join against the batch's distinct does not: dynamic
+    # partition pruning needs a selective predicate on the batch side.
+    affected = updates.select(*partition_cols).distinct().collect()
+    in_batch = F.lit(False)
+    for row in affected:
+        in_batch = in_batch | reduce(
+            operator.and_, (F.col(c) == v for c, v in zip(partition_cols, row))
+        )
     target = spark.table(table)
     if check_key_movement:
-        moved = (
-            target.join(F.broadcast(affected), on=list(partition_cols), how="left_anti")
-            .join(updates.select(*keys).distinct(), on=list(keys), how="left_semi")
+        # a NULL partition value is outside the batch
+        moved = target.filter(~F.coalesce(in_batch, F.lit(False))).join(
+            updates.select(*keys).distinct(), on=list(keys), how="left_semi"
         )
         if moved.limit(1).count() > 0:
             raise ValueError(
@@ -180,8 +194,7 @@ def partition_upsert(
                 "update batch (cross-partition key movement); use merge_upsert "
                 "or delete the old rows first"
             )
-    old_affected = target.join(F.broadcast(affected), on=list(partition_cols), how="left_semi")
-    kept = old_affected.join(updates.select(*keys), on=list(keys), how="left_anti")
+    kept = target.filter(in_batch).join(updates.select(*keys), on=list(keys), how="left_anti")
     merged = kept.unionByName(updates.select(*target.columns))
     return rewrite_staged(spark, table, merged, dynamic=True)
 

@@ -74,6 +74,25 @@ def test_partition_upsert_touches_only_affected_partition(spark, partitioned_tab
     assert mtimes_before == mtimes_after
 
 
+def test_partition_upsert_reads_only_affected_partition(spark, partitioned_table):
+    import glob
+
+    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    # an unreadable untouched partition: any scan that lists it fails
+    for f in glob.glob(f"{warehouse}/mxdb2.db/t/month=2024-02/*.parquet"):
+        with open(f, "wb") as fh:
+            fh.write(b"not parquet")
+    spark.catalog.refreshTable(partitioned_table)
+
+    updates = spark.createDataFrame([(2, 99.0, "2024-01")], "id long, v double, month string")
+    n = mx.partition_upsert(
+        spark, partitioned_table, updates, keys=["id"], partition_cols=["month"]
+    )
+    assert n == 2
+    jan = spark.table(partitioned_table).filter(F.col("month") == "2024-01")
+    assert {r.id: r.v for r in jan.collect()} == {1: 10.0, 2: 99.0}
+
+
 def test_compact_reduces_files(spark, base_table):
     import glob
 

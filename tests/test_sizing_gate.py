@@ -67,8 +67,8 @@ def test_non_file_frame_defaults_to_broadcast(spark):
 # audit").
 _GATED = ["benchmark_decontam", "nation_qty_price_corr", "nation_supplier_hhi"]
 
-# Join strategy never changes rows. The first eight queries lost every
-# hint (the last two when their literal frames gained size statistics)
+# Join strategy never changes rows. The first nine queries lost every
+# hint (the last three when their literal frames gained size statistics)
 # and pin that removing them changed no rows; the rest keep a hint that
 # changes their plan, so each leg below runs a different plan.
 _DIFFERENTIAL = [
@@ -80,11 +80,11 @@ _DIFFERENTIAL = [
     "tfidf_cosine_pairs",
     "segment_value_shift_function",
     "weekly_quantile_pinball_eval",
+    "event_retention_curve",
     *_GATED,
     "class_balance_downsample",
     "embedding_centroid_silhouette",
     "embedding_power_iteration",
-    "event_retention_curve",
     "nation_balance_mad_outliers",
     "range_bucket_join",
     "segment_value_ansari_bradley",
