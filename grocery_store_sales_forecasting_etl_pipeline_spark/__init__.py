@@ -7,7 +7,7 @@ Layout
 ------
 - ``session``    : SparkSession factory (AQE, Arrow, local warehouse).
 - ``sources``    : CSV ingest w/ corrupt-record quarantine, catalog DDL,
-                   partitioned parquet sinks.
+                   error log, keyed upserts and SCD2 merge.
 - ``operators``  : relational operator library (dedup, joins, aggregates,
                    windows, similarity, data-quality checks).
 - ``functions``  : scalar/column function library (datetime, text analysis,
@@ -19,7 +19,8 @@ Layout
 - ``ml``         : distributed forecasting (MLlib GBT + per-group
                    applyInPandas), replacing the reference's driver-side
                    LightGBM collect (reference gold_feature.py.py:54).
-- ``streaming``  : Structured Streaming facade over the events table.
+- ``streaming``  : event-time operators (windows, sessions, interval
+                   joins) for batch and streaming frames alike.
 """
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.session import get_spark

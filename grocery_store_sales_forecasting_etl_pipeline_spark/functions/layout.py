@@ -17,9 +17,6 @@ bit-identical computation — integers end to end, no parity risk.
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
-from pyspark.sql import Column
-
 # (shift, mask) doubling steps spreading 16 bits across 32 positions.
 # Masks written in decimal: Spark SQL has no 0x literals.
 _SPREAD_STEPS = (
@@ -56,23 +53,6 @@ def morton_sql(x: str, y: str, dialect: str) -> str:
     sx = _spread16(f"(CAST({x} AS BIGINT) & 65535)", shl)
     sy = _spread16(f"(CAST({y} AS BIGINT) & 65535)", shl)
     return f"({sx} | {shl(sy, 1)})"
-
-
-def morton_col(x: str, y: str) -> Column:
-    """Spark Column form of :func:`morton_sql` (map-only, codegen)."""
-    return F.expr(morton_sql(x, y, "spark"))
-
-
-def morton_py(x: int, y: int) -> int:
-    """Pure-Python reference for tests — same masks, same steps."""
-
-    def spread(v: int) -> int:
-        v &= 65535
-        for n, mask in _SPREAD_STEPS:
-            v = (v | (v << n)) & mask
-        return v
-
-    return spread(x) | (spread(y) << 1)
 
 
 def scale16_sql(col: str, lo: str, hi: str, dialect: str) -> str:

@@ -26,7 +26,7 @@ from __future__ import annotations
 from collections.abc import Callable, Iterator
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -61,14 +61,6 @@ def _pruned_output(
     only keep scalars pass the blob columns here and the bytes cross
     the boundary exactly once (inbound)."""
     return StructType([f for f in fields if f.name not in set(drop_cols)])
-
-
-def read_binary_dir(spark: SparkSession, path: str, glob: str | None = None) -> DataFrame:
-    """Blob ingestion: (path, modificationTime, length, content)."""
-    reader = spark.read.format("binaryFile")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    return reader.load(path)
 
 
 def with_media_metadata(df: DataFrame, content_col: str = "content") -> DataFrame:
@@ -154,44 +146,6 @@ _fake_decode = _make_fake_decode()
 _real_decode = _make_real_decode()
 
 
-def decode_images(
-    df: DataFrame,
-    content_col: str = "content",
-    strict: bool = False,
-    decoder: Callable[[bytes], tuple[int, int, int]] | None = None,
-) -> DataFrame:
-    """Image decode via ``mapInPandas``: appends (width, height,
-    n_channels). Decoder resolution: explicit ``decoder`` arg → PIL if
-    importable → deterministic fake (or NotImplementedError when
-    ``strict``)."""
-    import pandas as pd
-
-    out_schema = StructType(list(df.schema.fields) + DECODED_SCHEMA_FIELDS)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        dec = decoder
-        if dec is None:
-            try:
-                import PIL  # noqa: F401
-
-                dec = _real_decode
-            except ImportError:
-                if strict:
-                    raise NotImplementedError(
-                        "no image decoder available: install PIL or pass decoder="
-                    )
-                dec = _fake_decode
-        for pdf in batches:
-            dims = [dec(bytes(b)) for b in pdf[content_col]]
-            pdf = pdf.copy()
-            pdf["width"] = [d[0] for d in dims]
-            pdf["height"] = [d[1] for d in dims]
-            pdf["n_channels"] = [d[2] for d in dims]
-            yield pdf
-
-    return df.mapInPandas(run, schema=out_schema)
-
-
 def _make_fake_resize():
     def fake_resize(data: bytes, new_w: int, new_h: int) -> bytes:
         """Deterministic stand-in resizer (no image libs in container):
@@ -239,7 +193,7 @@ def resize_images(
     side to ``max_side`` (aspect preserved, never upscale, floor to
     ints, min 1 px), and emit the resized blob plus audit columns
     (``new_width/new_height/resized/resized_len/resized_byte_sum``).
-    Decoder/resizer resolution mirrors ``decode_images``: explicit arg →
+    Decoder/resizer resolution: explicit args →
     PIL if importable → deterministic fake (or NotImplementedError when
     ``strict``). The dims arithmetic is plain IEEE double ops
     (``floor(w * (max_side / max(w, h)))``) so an external SQL oracle

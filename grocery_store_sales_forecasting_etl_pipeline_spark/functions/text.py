@@ -105,16 +105,6 @@ def winnow_select(gram_hashes: Column, w: int = 8) -> Column:
     )
 
 
-def shingles(col: str | Column, k: int = 2) -> Column:
-    """Distinct word k-gram shingles. 1-indexed transform so the same
-    expression is writable in ANSI SQL (element_at semantics).
-
-    Convenience form for one-shot/small inputs: inlines the tokenize,
-    which Spark re-evaluates per element_at — on a hot path project
-    ``tokens(...)`` first and use ``shingles_from_tokens``."""
-    return shingles_from_tokens(tokens(col), k)
-
-
 def fingerprint(col: str | Column) -> Column:
     """Deterministic document fingerprint: md5 of the lower-cased,
     whitespace-collapsed text. Stable across engines (md5 is md5)."""

@@ -48,101 +48,6 @@ def exact_text_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def collapse_exact_text(
-    df: DataFrame, id_col: str, text_col: str
-) -> tuple[DataFrame, DataFrame]:
-    """Exact-duplicate pre-collapse for candidate search: return
-    ``(reps, members)`` where ``reps`` keeps ONE row per distinct raw
-    text (the min-id doc carries it, plus ``group_n``) and ``members``
-    maps every id → its group's ``rep_id``. NULL texts form one group.
-
-    Why this exists (100 TB): every pairwise-candidate operator
-    downstream (banded SimHash/MinHash, n-gram Jaccard) does work that
-    grows with bucket occupancy squared, and exact duplicates are the
-    degenerate buckets — b copies of one page contribute b² join rows
-    for zero information. Collapsing first makes the candidate stage
-    run on DISTINCT texts only; :func:`expand_rep_pairs` restores the
-    doc-grain pair set EXACTLY (fingerprints are functions of the text,
-    so every member inherits its rep's candidates, and intra-group
-    pairs are known without search). One window shuffle, no join;
-    grouping is on the raw text value, not a hash — exact by
-    construction, no collision caveat.
-
-    Measured applicability contract (BASELINE.md r11 two-regime A/B):
-    collapse is NOT default-on. It wins ~3× when duplicate mass sits in
-    LARGE clusters (10×3,000-copy boilerplate at sf1 scale: the direct
-    path pays 4·b² banded probes + a distinct per cluster vs one b²
-    intra emit here) and LOSES ~1.5× when duplicates are scattered
-    pairs (b ≤ 3: the window shuffle + expansion joins outweigh the b²
-    savings). Decide per corpus from the exact-dup group-size histogram
-    (the first stage of :func:`exact_text_groups` computes it)."""
-    w = Window.partitionBy(text_col)
-    m = (
-        df.select(F.col(id_col), F.col(text_col))
-        .withColumn("rep_id", F.min(id_col).over(w))
-        .withColumn("group_n", F.count("*").over(w).cast("long"))
-    )
-    reps = m.filter(F.col(id_col) == F.col("rep_id")).select(
-        F.col(id_col), F.col(text_col), F.col("group_n")
-    )
-    members = m.select(F.col(id_col), F.col("rep_id"))
-    return reps, members
-
-
-def expand_rep_pairs(
-    pairs: DataFrame,
-    members: DataFrame,
-    id_col: str = "doc_id",
-    intra: dict[str, object] | None = None,
-) -> DataFrame:
-    """Expand rep-level candidate pairs (id_1, id_2, payload...) back to
-    the doc grain after :func:`collapse_exact_text`.
-
-    Cross-group pairs: every member of id_1's group pairs with every
-    member of id_2's group, inheriting the rep pair's payload columns —
-    exact because identical texts have identical fingerprints, so the
-    payload (hamming, jaccard, ...) is a function of the two texts.
-    ``intra`` adds the within-group pairs search cannot see (b docs of
-    one text → C(b,2) pairs) with literal payload values, e.g.
-    ``{"hamming": 0}`` for SimHash or ``{"jaccard": 1.0}`` for Jaccard;
-    None skips them (rep-only semantics). Output ids are canonical
-    id_1 < id_2. No distinct needed: each doc pair maps to exactly one
-    rep pair, and intra pairs are disjoint from cross pairs."""
-    payload = [c for c in pairs.columns if c not in ("id_1", "id_2")]
-    ma = members.select(
-        F.col("rep_id").alias("id_1"), F.col(id_col).alias("__a")
-    )
-    mb = members.select(
-        F.col("rep_id").alias("id_2"), F.col(id_col).alias("__b")
-    )
-    out = (
-        pairs.join(ma, "id_1")
-        .join(mb, "id_2")
-        .select(
-            F.least("__a", "__b").alias("id_1"),
-            F.greatest("__a", "__b").alias("id_2"),
-            *payload,
-        )
-    )
-    if intra is not None:
-        missing = [c for c in payload if c not in intra]
-        if missing:
-            raise ValueError(f"intra payload missing columns: {missing}")
-        ga = members.select(F.col("rep_id"), F.col(id_col).alias("__a"))
-        gb = members.select(F.col("rep_id"), F.col(id_col).alias("__b"))
-        intra_pairs = (
-            ga.join(gb, "rep_id")
-            .filter(F.col("__a") < F.col("__b"))
-            .select(
-                F.col("__a").alias("id_1"),
-                F.col("__b").alias("id_2"),
-                *[F.lit(v).alias(k) for k, v in intra.items()],
-            )
-        )
-        out = out.unionByName(intra_pairs.select("id_1", "id_2", *payload))
-    return out
-
-
 def _shingle_rows(
     df: DataFrame, id_col: str, text_col: str, k: int, block_cols: Sequence[str]
 ) -> DataFrame:

@@ -93,113 +93,6 @@ def brute_force_knn(
     )
 
 
-def cosine_dup_pairs(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.9,
-    block_col: str | None = None,
-) -> DataFrame:
-    """All pairs with cosine ≥ threshold — embedding near-dedup.
-    Unblocked this is O(n²): acceptable for ≤10⁵ vectors or within
-    LSH/label blocks; use ``lsh_sign_buckets`` to block first at scale."""
-    normed = _with_vec_norm(df, vec_col, "__vd", "__vn")
-    a = normed.select(F.col(id_col).alias("id_1"), F.col("__vd").alias("v1"),
-                      F.col("__vn").alias("n1"), *(
-        [F.col(block_col).alias("blk1")] if block_col else []
-    ))
-    b = normed.select(F.col(id_col).alias("id_2"), F.col("__vd").alias("v2"),
-                      F.col("__vn").alias("n2"), *(
-        [F.col(block_col).alias("blk2")] if block_col else []
-    ))
-    cond = F.col("id_1") < F.col("id_2")
-    if block_col:
-        cond = cond & (F.col("blk1") == F.col("blk2"))
-    return (
-        a.join(b, cond)
-        .select(
-            "id_1",
-            "id_2",
-            F.round(_pair_cosine("v1", "n1", "v2", "n2"), 6).alias("cosine_sim"),
-        )
-        .filter(F.col("cosine_sim") >= threshold)
-    )
-
-
-def cosine_dup_pairs_gemm(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.9,
-    round_to: int = 4,
-    max_broadcast_rows: int = 200_000,
-) -> DataFrame:
-    """All-pairs cosine ≥ threshold via broadcast + BLAS: the corpus's
-    normalized matrix is broadcast (like a dim table — bounded by
-    ``max_broadcast_rows``), and each partition multiplies its block
-    against it with numpy GEMM (``mapInPandas``). ~20× the expression-
-    fold path at 2k×64d.
-
-    Results round to ``round_to`` (4dp default): GEMM accumulates in a
-    different order than a sequential fold, so last-ulp differences
-    exist — at 4dp the flip probability is ~1e-11 per pair, which is the
-    tradeoff for BLAS speed. Use ``cosine_dup_pairs`` when 6dp exactness
-    against a fold-order oracle matters more than speed.
-    """
-    import numpy as np
-
-    rows = df.select(id_col, vec_col).collect()
-    if len(rows) > max_broadcast_rows:
-        raise ValueError(
-            f"corpus too large to broadcast ({len(rows)} > {max_broadcast_rows}); "
-            "block with lsh_sign_buckets first"
-        )
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    mat = np.array([r[1] for r in rows], dtype=np.float64)
-    mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-    sc = df.sparkSession.sparkContext
-    b_ids = sc.broadcast(ids)
-    b_mat = sc.broadcast(mat)
-
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    out_schema = StructType(
-        [
-            StructField("id_1", LongType()),
-            StructField("id_2", LongType()),
-            StructField("cosine_sim", DoubleType()),
-        ]
-    )
-
-    def run(batches):
-        import numpy as np_
-        import pandas as pd
-
-        all_ids, all_mat = b_ids.value, b_mat.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            q_ids = pdf[id_col].to_numpy(dtype="int64")
-            q = np_.array(list(pdf[vec_col]), dtype="float64")
-            q /= np_.linalg.norm(q, axis=1, keepdims=True)
-            sims = np_.round(q @ all_mat.T, round_to)
-            qi, ci = np_.nonzero((sims >= threshold) & (q_ids[:, None] < all_ids[None, :]))
-            yield pd.DataFrame(
-                {
-                    "id_1": q_ids[qi],
-                    "id_2": all_ids[ci],
-                    "cosine_sim": sims[qi, ci],
-                }
-            )
-
-    return df.select(id_col, vec_col).mapInPandas(run, schema=out_schema)
-
-
 def cosine_dup_pairs_blocked(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -209,8 +102,8 @@ def cosine_dup_pairs_blocked(
     n_blocks: int = 8,
 ) -> DataFrame:
     """EXACT all-pairs cosine ≥ threshold with distributed block-triangle
-    GEMM — the scale-safe replacement for ``cosine_dup_pairs_gemm``'s
-    driver-side broadcast: nothing is ever collected to the driver.
+    GEMM: nothing is ever collected to the driver, so there is no
+    corpus-size ceiling.
 
     Ids hash-partition into ``n_blocks`` blocks; every unordered block
     pair (b1 ≤ b2) becomes one cogroup whose two sides are the full
@@ -218,8 +111,8 @@ def cosine_dup_pairs_blocked(
     ``applyInPandas``. Every vector pair lands in exactly one cogroup
     (diagonal groups dedup with id_1 < id_2; off-diagonal pairs appear
     once because blocks partition the id space), so the result is
-    identical to the exact O(n²) scan — same float shape as the
-    broadcast kernel (unit-normalize in float64, GEMM, round).
+    identical to the exact O(n²) scan (unit-normalize in float64, GEMM,
+    round).
 
     Scale accounting: shuffle volume is (n_blocks+1)·|corpus| rows (each
     row participates in n_blocks+1 block pairs); per-task memory is the
@@ -446,27 +339,6 @@ def lsh_sign_bucket_col(
         )
         bucket = bucket + (dot > 0).cast("long") * F.lit(2**p).cast("long")
     return bucket
-
-
-def lsh_sign_buckets(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 8,
-    dim: int | None = None,
-    table_id: int = 0,
-) -> DataFrame:
-    """Sign-random-projection bucket id per vector: (id, bucket) with
-    bucket in [0, 2^n_planes). ``table_id`` selects an independent plane
-    set. Standalone (id, bucket) view — to bucket a frame you are about
-    to score, prefer attaching ``lsh_sign_bucket_col`` directly instead
-    of joining this back to its own source."""
-    if dim is None:
-        dim = len(df.select(vec_col).first()[0])
-    return df.select(
-        F.col(id_col),
-        lsh_sign_bucket_col(vec_col, n_planes, dim, table_id).alias("bucket"),
-    )
 
 
 def _subsplit_blocks(base: DataFrame, block_col: str, max_block_rows: int) -> DataFrame:

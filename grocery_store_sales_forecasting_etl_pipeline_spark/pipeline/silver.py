@@ -7,10 +7,12 @@ semantics-exact reproduction, including the load-bearing lossy steps
 - the post-join ``na.drop()`` that silently removes dates with no oil
   quote (weekend/holiday gaps in the oil series).
 
-Scale notes: the three dims are broadcast (stores ~54 rows, holidays
-~350, oil ~1.2k in the reference data; bounded small in any deployment),
-so the fact table never shuffles for enrichment; the only wide exchanges
-are the keyed dedups, which do map-side partial dedup first.
+Scale notes: the three dims are small (stores ~54 rows, holidays ~350,
+oil ~1.2k in the reference data). The planner broadcasts the
+unpartitioned ``raw.stores`` on its own; the two date-partitioned dims
+carry no catalog statistics, so their joins plan as sort-merge joins
+that AQE may demote at run time (BASELINE.md, hint audit). The keyed
+dedups do map-side partial dedup first.
 """
 
 from __future__ import annotations
@@ -59,11 +61,11 @@ def build(
         .dropDuplicates(["date"])
         .na.drop()
     )
-    # 5. enrichment joins (left; dims broadcast) + holiday null-fill
+    # 5. enrichment joins (left) + holiday null-fill
     sales_cleaned = (
-        transactions_silver.join(F.broadcast(stores_silver), on="store_nbr", how="left")
-        .join(F.broadcast(holidays_silver), on="date", how="left")
-        .join(F.broadcast(oil_silver), on="date", how="left")
+        transactions_silver.join(stores_silver, on="store_nbr", how="left")
+        .join(holidays_silver, on="date", how="left")
+        .join(oil_silver, on="date", how="left")
         .withColumn("is_holiday", F.coalesce(F.col("is_holiday"), F.lit(False)))
     )
     # drop stale partition/lineage columns if present (dynamic schema

@@ -264,8 +264,8 @@ def video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     only scalar digests cross the driver boundary.
 
     Scale notes: map-only with a bounded 8-way explode — at 100 TB
-    frames flow straight into the Arrow-batched decode stage
-    (decode_images) without any shuffle; the digest projection here
+    frames flow straight into an Arrow-batched decode stage (like
+    resize_images) without any shuffle; the digest projection here
     stands in for that consumer. A real container format would swap
     the fixed-stride slicer for a keyframe-index lookup; the
     partitioning and schema shape are identical.

@@ -516,7 +516,8 @@ def nation_customer_argmax(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
     # three aggregation grains consume this frame; pinned by
-    # test_argmax_three_grains_share_one_materialized_scan;
+    # test_argmax_three_grains_read_orders_once (their exchanges differ,
+    # so without it each grain re-scans orders);
     # A/B sf1: 1.79 s with, 1.48 s without
     ord_ = ord_.localCheckpoint(eager=False)
 

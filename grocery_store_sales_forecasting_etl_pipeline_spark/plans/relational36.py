@@ -78,7 +78,7 @@ def order_total_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integer centi-cent products), then an order-grain LEFT join
     — both sides are order-grain, so this is one shuffle each under
     AQE (or co-located for free if both tables are bucketed by
-    orderkey, see sinks.write_bucketed). Bucketing compares integers
+    orderkey). Bucketing compares integers
     cross-multiplied — no float ever enters. Output ≤ 5 rows.
     """
     li = _t(spark, sf_dir, "lineitem")

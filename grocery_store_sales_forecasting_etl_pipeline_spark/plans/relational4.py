@@ -120,8 +120,7 @@ def array_agg_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     array_distinct cardinality, membership, and a higher-order
     ``F.aggregate`` fold — all JVM-side on the collect_list result, with
     arrays serialized/reduced before the driver boundary (its
-    canonicalizer cannot hash list cells; see ``array_agg_arrays_typed``
-    in tests for the array-typed output itself)."""
+    canonicalizer cannot hash list cells)."""
     li = _t(spark, sf_dir, "lineitem")
     qty = F.col("l_quantity").cast("long")
     agg = li.groupBy("l_suppkey").agg(
@@ -150,25 +149,6 @@ def array_agg_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (CORRECTNESS_r03 "unhashable type: 'list'"), so array-typed outputs
 # never cross the driver boundary. tests/test_oracle_parity.py compares
 # this against its oracle with the local harness, which serializes lists.
-ARRAY_AGG_TYPED_ORACLE = """
-SELECT
-  user_id,
-  array_agg(event_id ORDER BY event_id)  AS event_ids,
-  array_agg(DISTINCT event_type ORDER BY event_type) AS types
-FROM events
-WHERE user_id < 1020
-GROUP BY user_id
-"""
-
-
-def array_agg_arrays_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Array-typed collect_list/collect_set results (pytest-only; the
-    registered ``array_agg_arrays`` reduces every array before output)."""
-    ev = _t(spark, sf_dir, "events").filter(F.col("user_id") < 1020)
-    return ev.groupBy("user_id").agg(
-        F.sort_array(F.collect_list("event_id")).alias("event_ids"),
-        F.sort_array(F.collect_set("event_type")).alias("types"),
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -29,34 +29,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans._tables import table as _t
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.registry import register
+from grocery_store_sales_forecasting_etl_pipeline_spark.plans.relational76 import _QDIM, _qdim_spark
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans.scalerank import (
     counts_to_cum,
 )
 
-_QDIM = """
-  SELECT vec_id, CAST(u AS BIGINT) AS dim,
-         CAST(round(CAST(v AS DOUBLE) * 1000000) AS BIGINT) AS q
-  FROM (
-    SELECT vec_id,
-           unnest(embedding) AS v,
-           unnest(range(0, len(embedding))) AS u
-    FROM embeddings
-  )
-"""
-
 _DEC = "decimal(38,0)"
-
-
-def _qdim_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
-    return emb.select(
-        "vec_id",
-        F.posexplode("embedding").alias("dim", "v"),
-    ).select(
-        "vec_id",
-        F.col("dim").cast("long").alias("dim"),
-        F.round(F.col("v").cast("double") * 1_000_000).cast("long").alias("q"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -197,7 +175,7 @@ def embedding_participation_ratio(spark: SparkSession, sf_dir: str) -> DataFrame
     d² = 4096-cell frame; everything downstream is dimension-bounded.
     """
     # A/B sf0.1: 1.12 s with, 4.20 s without
-    qd = _qdim_spark(spark, sf_dir).localCheckpoint(eager=False)
+    qd = _qdim_spark(spark, sf_dir).drop("label").localCheckpoint(eager=False)
     nn = qd.agg(
         F.countDistinct("vec_id").cast("long").alias("n"),
         F.countDistinct("dim").cast("long").alias("d"),

@@ -78,9 +78,7 @@ def embedding_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/similarity.py:cosine_dup_pairs_blocked): ids hash into
     blocks, every block pair runs one numpy GEMM inside a cogrouped
     applyInPandas — nothing collects to the driver, so the operator has
-    no corpus-size ceiling (the broadcast kernel
-    cosine_dup_pairs_gemm remains as an explicit small-corpus fast
-    path, and the 6dp expression-fold path as cosine_dup_pairs).
+    no corpus-size ceiling.
 
     Scale notes: shuffle volume (n_blocks+1)·n rows, per-task memory
     two block slices — size n_blocks to the task budget

@@ -180,7 +180,7 @@ def click_purchase_interval_outer(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 # ---------------------------------------------------------------------------
-# Stateful Welford outlier scoring (batch contract for streaming/stateful.py)
+# Per-user running outlier scoring (z against all prior events)
 # ---------------------------------------------------------------------------
 
 # Cross-engine float parity: both sides derive z from the SAME integer
@@ -220,19 +220,16 @@ FROM z
 
 @register("stateful_outlier_scores", oracle=_WELFORD_ORACLE, tags=("streaming", "window"))
 def stateful_outlier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch contract for the custom stateful streaming operator
-    (streaming/stateful.py:stateful_outliers): each event's z-score
-    against the sample statistics of all PRIOR same-user events, ordered
-    by (ts, event_id), flagged at |z| > 3 — the applyInPandasWithState
-    Welford path computes the identical quantity incrementally across
-    micro-batches (pytest pins batch==stream equivalence on rounded z).
+    """Each event's z-score against the sample statistics of all PRIOR
+    same-user events, ordered by (ts, event_id), flagged at |z| > 3 —
+    the quantity a stateful streaming operator would keep incrementally
+    (Welford running n/mean/M2 per user across micro-batches).
 
     Numerics: z derives from integer sufficient statistics — value in
     cents, cumulative (n, Σc, Σc²) over the prior-rows frame — with the
     same double expression tree as the oracle, so parity is bit-exact
     rather than tolerance-based (the repo's exact-stat correlation
-    pattern; Welford and the two-pass formula agree analytically, and
-    the stream test covers the float gap between them).
+    pattern).
 
     Scale notes: ONE shuffle on user_id; the three cumulative aggregates
     share a single window frame so Spark evaluates them in one Window

@@ -21,8 +21,7 @@ behavior:
   and sized by a static conf read when the JVM first generates code; it
   holds 100 by default. Only a JVM whose first session ``get_spark``
   built gets the larger cache: the driver contract's vanilla session,
-  ``tools/verify_contract.py`` and the Delta test session keep Spark's
-  default.
+  and ``tools/verify_contract.py`` keep Spark's default.
 """
 
 from __future__ import annotations

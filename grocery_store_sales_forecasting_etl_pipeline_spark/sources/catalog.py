@@ -31,7 +31,3 @@ def bootstrap(spark: SparkSession) -> None:
     spark.sql(_ERROR_LOG_DDL.format(table=ERROR_LOG_TABLE))
 
 
-def drop_all(spark: SparkSession) -> None:
-    """Tear down the medallion databases (test isolation)."""
-    for db in DATABASES:
-        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")

@@ -1,10 +1,9 @@
-"""Table maintenance: upsert (MERGE analog) and compaction (OPTIMIZE
-analog) on plain parquet tables.
+"""Table maintenance: keyed upserts (the MERGE analog) on plain parquet
+tables, and the SCD2 history merge.
 
 The reference docx declares intent the notebooks never implement
-(docx §"Data Write": "upsert to Silver", "optimize and vacuum
-periodically" — SURVEY.md §4): the code actually full-overwrites. This
-module supplies the real operations, Delta-free:
+(docx §"Data Write": "upsert to Silver" — SURVEY.md §4): the code
+actually full-overwrites. This module supplies the real operations:
 
 - ``merge_upsert``: keyed MERGE = target ∖ updates (left-anti) ∪ updates.
   Correct but rewrites the table — use for dims/small tables.
@@ -14,15 +13,10 @@ module supplies the real operations, Delta-free:
   partitions, and the write is a dynamic partition overwrite. A daily
   1-partition update to a 3-year table costs 1/1000th of the full
   rewrite.
-- ``compact_table``: rewrite a table into ``target_files`` files per
-  partition — the small-files fix after many appends.
+- ``scd2_merge``: fold a full dimension snapshot into a type-2 history.
 
-All three overwrite through ``rewrite_staged``: the new rows go to a
+Both upserts overwrite through ``rewrite_staged``: the new rows go to a
 stage table, which is then ``insertInto``'d over the table.
-
-Vacuum has no parquet analog (an overwrite deletes the files it
-replaces, leaving nothing stale to clean up); with Delta installed,
-``OPTIMIZE``/``VACUUM`` slot in here unchanged.
 """
 
 from __future__ import annotations
@@ -82,67 +76,14 @@ def merge_upsert(
     """Keyed upsert: rows in ``updates`` replace same-key rows in
     ``table``; new keys insert. Returns the new row count.
 
-    When the table is Delta and the session has the Delta extension
-    (``sinks.delta_enabled``), this dispatches to a native ``MERGE
-    INTO`` — transactional, no staged-table barrier, and only touched
-    files rewrite (the docx §"Data Write" upsert intent, first-class).
-    The portable parquet path below stays the default everywhere else:
-    one left-anti shuffle on the keys + union + a full ``rewrite_staged``.
+    One left-anti shuffle on the keys + union + a full ``rewrite_staged``.
     """
     target = spark.table(table)
     missing = set(target.columns) ^ set(updates.columns)
     if missing:
         raise ValueError(f"upsert schema mismatch on columns: {sorted(missing)}")
-    if _is_delta_table(spark, table):
-        return _merge_upsert_delta(spark, table, updates, keys)
     kept = target.join(updates.select(*keys), on=list(keys), how="left_anti")
     return rewrite_staged(spark, table, kept.unionByName(updates))
-
-
-def _is_delta_table(spark: SparkSession, table: str) -> bool:
-    """True when ``table`` is a Delta table in a Delta-capable session
-    (both conditions required: a delta provider without the extension
-    fails at commit time, and a capable session may still hold parquet
-    tables)."""
-    from grocery_store_sales_forecasting_etl_pipeline_spark.sources.sinks import delta_enabled
-
-    if not delta_enabled(spark):
-        return False
-    try:
-        detail = spark.sql(f"DESCRIBE DETAIL {table}").collect()[0]
-        return (detail.format or "").lower() == "delta"
-    except Exception:  # noqa: BLE001 — non-Delta catalogs raise here
-        return False
-
-
-def _merge_upsert_delta(
-    spark: SparkSession, table: str, updates: DataFrame, keys: Sequence[str]
-) -> int:
-    """Native ``MERGE INTO`` (requires delta-spark + extension; callers
-    go through ``merge_upsert`` which verifies both). Matched keys
-    replace whole rows, new keys insert, with plain ``=`` key equality
-    so NULL keys never match — the same as the parquet path's left-anti
-    join (a null-safe ``<=>`` here would replace NULL-key target rows
-    the parquet path keeps). One semantic divergence remains by design:
-    updates carrying DUPLICATE keys raise Delta's
-    multiple-source-rows-match error here, while the parquet path
-    silently inserts both — the error is the better behavior, and the
-    portable path's laxity is documented at the call site. Scale:
-    Delta's file-level pruning rewrites only files containing matched
-    keys — no staged barrier, no full-table rewrite, and the
-    transaction log makes the swap atomic."""
-    from delta.tables import DeltaTable  # gated: container may not ship delta
-
-    cond = " AND ".join(f"t.{k} = s.{k}" for k in keys)
-    (
-        DeltaTable.forName(spark, table)
-        .alias("t")
-        .merge(updates.alias("s"), cond)
-        .whenMatchedUpdateAll()
-        .whenNotMatchedInsertAll()
-        .execute()
-    )
-    return spark.table(table).count()
 
 
 def partition_upsert(
@@ -151,7 +92,6 @@ def partition_upsert(
     updates: DataFrame,
     keys: Sequence[str],
     partition_cols: Sequence[str],
-    check_key_movement: bool = False,
 ) -> int:
     """Partition-scoped upsert: merge ``updates`` into only the
     partitions they touch, leaving every other partition unread and
@@ -166,10 +106,9 @@ def partition_upsert(
     (the norm for date-partitioned facts, where the partition column is
     part of the key). If an update row re-homes an existing key to a
     DIFFERENT partition, the stale copy in the old partition survives —
-    only affected partitions are scanned. Pass
-    ``check_key_movement=True`` to detect that case and raise; it costs
-    a scan of the unaffected partitions, which is exactly what this
-    operator otherwise avoids, so it is opt-in.
+    only affected partitions are scanned. ``pipeline.bronze`` routes a
+    table here only when its date partition is part of its key
+    (``SOURCE_KEYS``), so no key can move.
     """
     # the affected-partition set is small by construction (a daily batch
     # touches a few partitions): collected, it filters the target by
@@ -183,32 +122,9 @@ def partition_upsert(
             operator.and_, (F.col(c) == v for c, v in zip(partition_cols, row))
         )
     target = spark.table(table)
-    if check_key_movement:
-        # a NULL partition value is outside the batch
-        moved = target.filter(~F.coalesce(in_batch, F.lit(False))).join(
-            updates.select(*keys).distinct(), on=list(keys), how="left_semi"
-        )
-        if moved.limit(1).count() > 0:
-            raise ValueError(
-                "partition_upsert: update keys exist in partitions outside the "
-                "update batch (cross-partition key movement); use merge_upsert "
-                "or delete the old rows first"
-            )
     kept = target.filter(in_batch).join(updates.select(*keys), on=list(keys), how="left_anti")
     merged = kept.unionByName(updates.select(*target.columns))
     return rewrite_staged(spark, table, merged, dynamic=True)
-
-
-def compact_table(
-    spark: SparkSession,
-    table: str,
-    target_files: int = 1,
-    partition_cols: Sequence[str] = (),
-) -> None:
-    """OPTIMIZE analog: rewrite the table with ``target_files`` files
-    (per partition when partitioned) to fix small-file proliferation
-    from appends. Uses repartition so the write is parallel."""
-    rewrite_staged(spark, table, spark.table(table).repartition(target_files, *partition_cols))
 
 
 def scd2_merge(
@@ -218,7 +134,6 @@ def scd2_merge(
     version: int,
     *,
     validate: bool = False,
-    close_missing: bool = True,
 ) -> DataFrame:
     """Type-2 slowly-changing-dimension merge: fold a new full snapshot
     of a dimension into an SCD2 history table (attribute columns +
@@ -324,42 +239,10 @@ def scd2_merge(
     out = (
         F.when(in_cur & in_new & ~changed, F.array(cur_open))
         .when(in_cur & in_new & changed, F.array(cur_closed, new_open))
-        # full-snapshot semantics close a key the snapshot no longer
-        # carries; CDC-changes semantics (close_missing=False, see
-        # scd2_apply_changes) leave untouched keys open
-        .when(in_cur & ~in_new, F.array(cur_closed if close_missing else cur_open))
+        .when(in_cur & ~in_new, F.array(cur_closed))
         .otherwise(F.array(new_open))
     )
     merged = j.select(
         *[F.col(k) for k in keys], F.explode(out).alias("__r")
     ).select(*keys, "__r.*")
     return closed_rows.select(*merged.columns).unionByName(merged)
-
-
-def scd2_apply_changes(
-    current: DataFrame,
-    changes: DataFrame,
-    keys: Sequence[str],
-    version: int,
-    *,
-    validate: bool = False,
-) -> DataFrame:
-    """CDC variant of ``scd2_merge``: ``changes`` is a PARTIAL set of
-    upserted rows (a micro-batch, a CDC feed), not a full snapshot —
-    keys absent from ``changes`` keep their open row instead of being
-    closed as deletions. Changed keys close-and-reopen, new keys open,
-    attribute-identical rows are no-ops; applying the same change set
-    twice at the same version is therefore idempotent, which is what
-    makes this safe under Structured Streaming's at-least-once
-    foreachBatch replay (see ``streaming.events.stream_scd2_to_table``).
-    Same single-join + conditional-array-explode plan, same
-    preconditions (unique keys in ``changes``; ``validate=True`` to
-    assert)."""
-    return scd2_merge(
-        current,
-        changes,
-        keys,
-        version,
-        validate=validate,
-        close_missing=False,
-    )

@@ -1,10 +1,11 @@
-"""Streaming operators over the events stream.
+"""Event-time operators over the events table: windowed counts,
+session windows, stream-static enrichment and interval joins.
 
-Source: parquet file stream of (event_id, ts, user_id, event_type, value,
-props). The same transformations run identically on a static frame —
-Structured Streaming's unified-API property — so each operator takes any
-DataFrame (batch or streaming) and the tests validate stream output
-against the batch run of the same plan.
+Each operator takes any DataFrame, batch or streaming (Structured
+Streaming's unified API); the stateful ones declare a watermark only
+when their input is a stream. ``plans/streamops.py`` registers their batch forms, and
+``tests/test_streaming.py`` checks that a stream drained through each one
+matches the batch run of the same plan.
 
 Scale notes: every streaming agg here declares a watermark so state is
 bounded (late rows beyond the watermark are dropped, emitted windows are
@@ -15,100 +16,7 @@ finalized and evicted). Stateful shuffles key by (window/session, group)
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
-
-# explicit source schema (streaming reads never infer) for the
-# nanos-as-long data generation; ts is rebuilt to a timestamp. Newer
-# generations carry native TIMESTAMP(MICROS) — raw_events_schema()
-# probes one footer (driver-side metadata op) and picks the right one.
-EVENTS_RAW_SCHEMA = StructType(
-    [
-        StructField("event_id", LongType()),
-        StructField("ts", LongType()),
-        StructField("user_id", LongType()),
-        StructField("event_type", StringType()),
-        StructField("value", DoubleType()),
-        StructField("props", StringType()),
-    ]
-)
-
-
-def raw_events_schema(spark: SparkSession, path: str) -> StructType:
-    """Explicit schema for a parquet events directory, probed from the
-    footers so either ts generation (nanos-as-long / native micros)
-    reads correctly. One driver metadata job; no data scan.
-
-    An empty/not-yet-created source directory falls back to
-    EVENTS_RAW_SCHEMA — a stream must be startable before the first file
-    arrives. The nanosAsLong conf is left set only when the landed (or
-    fallback) schema actually carries ts as long — the micro-batch scans
-    need it then; otherwise the previous session value is restored so
-    the probe leaves no session-wide residue."""
-    from pyspark.errors import AnalysisException
-
-    conf = "spark.sql.legacy.parquet.nanosAsLong"
-    prev = spark.conf.get(conf, None)
-
-    def _restore() -> None:
-        if prev is None:
-            spark.conf.unset(conf)
-        else:
-            spark.conf.set(conf, prev)
-
-    spark.conf.set(conf, "true")
-    try:
-        try:
-            schema = spark.read.parquet(path).schema
-        except AnalysisException:
-            # empty dir / missing path: no footers to infer from. ONLY
-            # this — transient IO/corruption errors must surface here,
-            # not resurface later as a wrong-schema stream failure far
-            # from the root cause (restored + re-raised below).
-            schema = EVENTS_RAW_SCHEMA
-        if "ts" not in schema.fieldNames():
-            raise ValueError(
-                f"{path} parquet schema has no 'ts' field — not an events "
-                f"directory (found: {schema.fieldNames()})"
-            )
-    except BaseException:
-        _restore()
-        raise
-    if not isinstance(schema["ts"].dataType, LongType):
-        # native-micros generation: scans don't need the legacy conf
-        _restore()
-    return schema
-
-
-def normalize_ts(df: DataFrame) -> DataFrame:
-    """ts → TIMESTAMP (LTZ; watermarks reject NTZ — the caller pins the
-    session TZ to UTC so wall clocks stay deterministic), branching on
-    the landed dtype like plans/_tables._ts_as_ntz."""
-    if isinstance(df.schema["ts"].dataType, LongType):
-        return df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    return df.withColumn("ts", F.col("ts").cast("timestamp"))
-
-
-def stream_events(
-    spark: SparkSession, path: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """readStream over a parquet events directory (S1-analog for
-    streams). ``max_files_per_trigger`` bounds micro-batch size (and
-    makes availableNow run several batches, advancing the watermark
-    between them)."""
-    # pin UTC for the LTZ rebuild — same reasoning as plans/_tables.events
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    reader = spark.readStream.schema(raw_events_schema(spark, path))
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    raw = reader.parquet(path)
-    return normalize_ts(raw)
+from pyspark.sql import DataFrame
 
 
 def windowed_counts(
@@ -140,40 +48,6 @@ def windowed_counts(
             "n_events",
             "sum_value",
         )
-    )
-
-
-def dedup_within_watermark(
-    events: DataFrame, keys: tuple[str, ...] = ("event_id",), watermark: str = "1 hour"
-) -> DataFrame:
-    """Streaming exact dedup: state holds keys for `watermark` of event
-    time (the silver dedup D1 expressed as a stream; SURVEY.md §2.12).
-
-    Keys the state on (keys, ts): two deliveries of the same key are
-    duplicates only if they carry the SAME event time. For replayed
-    deliveries whose timestamps may differ inside a tolerance window,
-    use ``dedup_keys_within_watermark`` instead."""
-    return events.withWatermark("ts", watermark).dropDuplicates([*keys, "ts"])
-
-
-def dedup_keys_within_watermark(
-    events: DataFrame, keys: tuple[str, ...] = ("event_id",), watermark: str = "1 hour"
-) -> DataFrame:
-    """Streaming dedup on the BARE key via
-    ``dropDuplicatesWithinWatermark`` (Spark 3.5+): two rows with the
-    same key dedup even when their event times differ, as long as the
-    first-seen row's time is within the watermark delay — the correct
-    semantics for at-least-once sources that re-deliver with a fresh
-    ingestion timestamp. State per key is evicted once the watermark
-    passes its first-seen time (bounded, unlike a bare
-    ``dropDuplicates(keys)`` on a stream, whose state grows forever).
-    On a BATCH frame this falls back to plain ``dropDuplicates(keys)``
-    — the watermark qualifier has no batch meaning (unified-API rule;
-    same convention as ``sessionize``)."""
-    if not events.isStreaming:
-        return events.dropDuplicates(list(keys))
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        list(keys)
     )
 
 
@@ -209,135 +83,6 @@ def sessionize(
             "session_value",
         )
     )
-
-
-def run_to_memory(
-    spark: SparkSession, result: DataFrame, name: str, output_mode: str = "complete"
-) -> None:
-    """Drain all available input through the streaming plan into an
-    in-memory table (test/debug sink): trigger=availableNow, blocking."""
-    q = (
-        result.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def stream_upsert_to_table(
-    spark: SparkSession,
-    result: DataFrame,
-    table: str,
-    keys: tuple[str, ...],
-    partition_cols: tuple[str, ...] = (),
-    checkpoint_dir: str | None = None,
-) -> None:
-    """foreachBatch sink: keyed-upsert each micro-batch into ``table``
-    (merge_upsert, or partition_upsert when ``partition_cols`` given) —
-    the incremental-ingest pattern that turns Structured Streaming's
-    at-least-once batch delivery into exactly-once TABLE state: a
-    replayed micro-batch re-upserts the same keys and the table is
-    unchanged (idempotence), unlike an append sink which would
-    duplicate.
-
-    Runs with trigger=availableNow (drain-all, blocking) — a continuous
-    deployment passes a processingTime trigger instead. Scale notes: per
-    micro-batch cost is the upsert's (partition-scoped rewrite when
-    ``partition_cols`` bound it); the checkpoint tracks source progress
-    so restarts resume, and replays are safe by construction.
-    """
-    from grocery_store_sales_forecasting_etl_pipeline_spark.sources import maintenance
-
-    def do_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        if not spark.catalog.tableExists(table):
-            w = batch_df.write.mode("overwrite").format("parquet")
-            if partition_cols:
-                w = w.partitionBy(*partition_cols)
-            w.saveAsTable(table)
-        elif partition_cols:
-            maintenance.partition_upsert(
-                spark, table, batch_df, keys=list(keys), partition_cols=list(partition_cols)
-            )
-        else:
-            maintenance.merge_upsert(spark, table, batch_df, keys=list(keys))
-
-    writer = result.writeStream.foreachBatch(do_batch).trigger(availableNow=True)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.start()
-    q.awaitTermination()
-
-
-def stream_scd2_to_table(
-    spark: SparkSession,
-    changes: DataFrame,
-    table: str,
-    keys: tuple[str, ...],
-    checkpoint_dir: str | None = None,
-) -> None:
-    """foreachBatch CDC-history sink: fold each micro-batch of dimension
-    upserts into an SCD2 history table (``valid_from``/``valid_to``
-    stamped with the micro-batch id). The streaming sibling of
-    ``sources.maintenance.scd2_merge``: per batch it applies
-    ``scd2_apply_changes`` — changed keys close-and-reopen at the batch
-    version, new keys open, keys absent from the batch stay open (CDC
-    semantics, NOT full-snapshot deletion).
-
-    Exactly-once table state from at-least-once delivery: the failure
-    mode Structured Streaming actually exhibits is re-delivery of the
-    LAST batch (crash between table write and checkpoint commit), and
-    re-applying that batch at the same version is a no-op — every row
-    is attribute-identical against the already-folded open rows. A
-    FULL replay from a fresh checkpoint is deliberately NOT a no-op:
-    SCD2 folds are ordered (old change sets re-applied over newer
-    history re-version it), unlike ``stream_upsert_to_table``'s
-    last-writer-wins convergence.
-
-    Scale notes: per-batch cost is one equi-join of the OPEN slice
-    against the batch; partition the history table by ``valid_to IS
-    NULL`` at scale so closed history is never read. Drains with
-    trigger=availableNow (blocking); continuous deployments pass a
-    processingTime trigger instead.
-    """
-    from grocery_store_sales_forecasting_etl_pipeline_spark.sources import maintenance
-
-    def do_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        # exact duplicate rows (source replays) collapse deterministically;
-        # CONFLICTING same-key rows in one batch have no total order to
-        # pick from — validate=True below fails loudly instead of
-        # folding an arbitrary winner into history
-        batch_df = batch_df.dropDuplicates()
-        exists = spark.catalog.tableExists(table)
-        current = (
-            spark.table(table)
-            if exists
-            # first batch: apply against an empty history so the same
-            # merge (and its key-uniqueness validation) covers init
-            else batch_df.limit(0).select(
-                "*",
-                F.lit(None).cast("long").alias("valid_from"),
-                F.lit(None).cast("long").alias("valid_to"),
-            )
-        )
-        merged = maintenance.scd2_apply_changes(
-            current, batch_df, keys=list(keys), version=batch_id, validate=True
-        )
-        if exists:
-            maintenance.rewrite_staged(spark, table, merged)
-        else:
-            merged.write.mode("overwrite").format("parquet").saveAsTable(table)
-
-    writer = changes.writeStream.foreachBatch(do_batch).trigger(availableNow=True)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.start()
-    q.awaitTermination()
 
 
 def enrich_with_dim(stream_df: DataFrame, dim_df: DataFrame, on: str, how: str = "left") -> DataFrame:

@@ -24,8 +24,6 @@ _SLOW_MODULES = {
     "test_oracle_parity",
     "test_plans",
     "test_streaming",
-    "test_stateful_streaming",
-    "test_scd2_streaming",
     "test_maintenance",
     "test_incremental_pipeline",
     "test_pipeline",
@@ -47,7 +45,6 @@ _SLOW_TESTS = {
     "test_cluster_representatives_are_longest",
     "test_acf_matches_numpy_corrcoef",
     "test_inverted_index_short_docs_emit_no_null_gram",
-    "test_jsonl_roundtrip",
     "test_1nn_accuracy_replay",
     "test_energy_distance_replay",  # 13.8s pairwise-distance replay (r9 durations)
     "test_every_gated_site_records_a_decision",  # builds the whole registry

@@ -8,8 +8,8 @@ its ``A/B`` with two measured timings, or says it cuts ``lineage`` in an
 iterative loop. BASELINE.md ("Checkpoint audit") holds the A/Bs.
 
 The session broadcasts any side estimated under 64 MB on its own, so a
-``F.broadcast(`` / ``_gbcast(`` hint under ``plans/`` or ``operators/``
-needs the same kind of comment: its ``A/B`` with two timings, or the
+``F.broadcast(`` / ``_gbcast(`` hint anywhere in the package needs the
+same kind of comment: its ``A/B`` with two timings, or the
 ``tests/test_plans.py`` guard that fails without it. BASELINE.md
 ("Broadcast-hint audit") holds those A/Bs.
 """
@@ -82,12 +82,7 @@ def test_every_broadcast_hint_cites_its_reason():
 
     # sizing.py holds the gate's own F.broadcast; its callers cite theirs
     offenders, seen = _uncited(
-        sorted(
-            p
-            for d in ("plans", "operators")
-            for p in (PKG / d).rglob("*.py")
-            if p.name != "sizing.py"
-        ),
+        sorted(p for p in PKG.rglob("*.py") if p.name != "sizing.py"),
         _is_hint,
         cites,
     )

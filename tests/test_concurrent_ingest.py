@@ -20,6 +20,7 @@ from pyspark.util import inheritable_thread_target
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.pipeline import bronze, orchestrator
 from grocery_store_sales_forecasting_etl_pipeline_spark.sources import catalog, maintenance
+from tests._catalog import drop_all
 from tests.test_pipeline import _write_fixtures
 
 GROUP = "bronze-under-test"
@@ -54,10 +55,10 @@ def _append(path, line: str) -> None:
 def src(spark, tmp_path):
     _write_fixtures(tmp_path)  # two malformed transactions lines
     _append(tmp_path / "stores.csv", "notanint,Quito,state1,A,1")
-    catalog.drop_all(spark)
+    drop_all(spark)
     catalog.bootstrap(spark)
     yield tmp_path
-    catalog.drop_all(spark)
+    drop_all(spark)
 
 
 def _quarantined_by_source(spark) -> dict[str, int]:
@@ -138,7 +139,9 @@ def test_concurrent_partition_upserts_keep_untouched_partitions(spark):
             ).partitionBy("month").saveAsTable(t)
 
         def upsert(table: str, month: int, v: int) -> None:
-            updates = spark.createDataFrame([(0, v, month)], schema)
+            # a VALUES batch carries size statistics, so its anti-join
+            # plans as a broadcast (test_partition_upsert_job_count)
+            updates = spark.sql(f"SELECT * FROM VALUES (0, {v}, {month}) AS u(k, v, month)")
             maintenance.partition_upsert(
                 spark, table, updates, keys=("k", "month"), partition_cols=("month",)
             )

@@ -260,80 +260,6 @@ def test_banded_bucket_cap_recall_contract(spark):
     assert capped <= uncapped
 
 
-def test_collapse_expand_equals_direct_banded_search(spark, sf_oracle):
-    """collapse_exact_text → candidate search on DISTINCT texts →
-    expand_rep_pairs must reproduce the direct all-docs banded search
-    EXACTLY (pairs and payload): fingerprints are functions of the
-    text, so members inherit their rep's candidates and intra-group
-    pairs are hamming-0 by construction. Non-null texts only: NULL
-    text never fingerprints, so it has no direct-search pairs to
-    reproduce."""
-    docs = (
-        _docs(spark, sf_oracle)
-        .filter(F.col("text").isNotNull())
-        .select("doc_id", "text")
-        .limit(300)
-    )
-    dup1 = docs.limit(60).select((F.col("doc_id") + 1_000_000).alias("doc_id"), "text")
-    dup2 = docs.limit(20).select((F.col("doc_id") + 2_000_000).alias("doc_id"), "text")
-    corpus = docs.unionByName(dup1).unionByName(dup2).localCheckpoint()
-
-    sim = dd.simhash64(corpus, "doc_id", "text")
-    direct = {
-        (r.id_1, r.id_2): r.hamming
-        for r in dd.simhash_candidate_pairs(
-            sim, "doc_id", "simhash", n_bands=4, band_bits=16
-        ).collect()
-    }
-
-    reps, members = dd.collapse_exact_text(corpus, "doc_id", "text")
-    n_docs, n_reps = corpus.count(), reps.count()
-    assert n_docs - n_reps >= 80  # the planted duplicates collapsed
-    sim_r = dd.simhash64(reps, "doc_id", "text")
-    rep_pairs = dd.simhash_candidate_pairs(
-        sim_r, "doc_id", "simhash", n_bands=4, band_bits=16
-    )
-    expanded = {
-        (r.id_1, r.id_2): r.hamming
-        for r in dd.expand_rep_pairs(
-            rep_pairs, members, intra={"hamming": 0}
-        ).collect()
-    }
-    assert expanded == direct
-    # the planted duplicates are found as hamming-0 intra pairs
-    base_ids = {r.doc_id for r in docs.limit(20).collect()}
-    for i in sorted(base_ids)[:5]:
-        assert direct.get((i, i + 1_000_000)) == 0
-        assert direct.get((i, i + 2_000_000)) == 0
-
-
-def test_expand_rep_pairs_payloadless_and_missing_payload(spark):
-    """Payload-less expansion (the MinHash-candidate shape: bare id
-    pairs, intra={}) emits cross- and intra-group pairs with no payload
-    columns; an intra dict that misses a payload column raises before
-    any job runs."""
-    docs = spark.createDataFrame(
-        [(1, "a"), (2, "a"), (3, "b"), (4, "c")], ["doc_id", "text"]
-    )
-    reps, members = dd.collapse_exact_text(docs, "doc_id", "text")
-    # rep-level candidate pair between the "a" group (rep 1) and doc 3
-    pairs = spark.createDataFrame([(1, 3)], ["id_1", "id_2"])
-    out = {
-        (r.id_1, r.id_2)
-        for r in dd.expand_rep_pairs(pairs, members, intra={}).collect()
-    }
-    # cross pairs expand to both members of group "a"; intra adds (1,2)
-    assert out == {(1, 3), (2, 3), (1, 2)}
-    rep_only = {
-        (r.id_1, r.id_2)
-        for r in dd.expand_rep_pairs(pairs, members, intra=None).collect()
-    }
-    assert rep_only == {(1, 3), (2, 3)}
-    with_payload = spark.createDataFrame([(1, 3, 2)], ["id_1", "id_2", "hamming"])
-    with pytest.raises(ValueError, match="hamming"):
-        dd.expand_rep_pairs(with_payload, members, intra={})
-
-
 def test_lsh_candidate_pairs_bucket_cap(spark):
     """The max_bucket cap plumbs through the MinHash banded join the
     same way as the SimHash one: a signature crowd sharing one band

@@ -18,6 +18,7 @@ from grocery_store_sales_forecasting_etl_pipeline_spark.sources.csv_ingest impor
 from grocery_store_sales_forecasting_etl_pipeline_spark.pipeline.bronze import (
     TRANSACTIONS_SCHEMA,
 )
+from tests._catalog import drop_all
 
 
 def _day_csv(d, day: dt.date, stores, base: int) -> str:
@@ -31,10 +32,10 @@ def _day_csv(d, day: dt.date, stores, base: int) -> str:
 
 @pytest.fixture()
 def incr_env(spark, tmp_path):
-    catalog.drop_all(spark)
+    drop_all(spark)
     catalog.bootstrap(spark)
     yield tmp_path
-    catalog.drop_all(spark)
+    drop_all(spark)
 
 
 def _ingest_day(spark, csv_path: str) -> None:

@@ -1,6 +1,6 @@
-"""Upsert (MERGE analog) and compaction (OPTIMIZE analog) on plain
-parquet tables — the docx-declared intent the reference never implements
-(SURVEY.md §4 rows 'Upsert/merge to silver', 'Compaction')."""
+"""Keyed upserts (MERGE analog) on plain parquet tables and the SCD2
+history merge — the docx-declared intent the reference never implements
+(SURVEY.md §4 row 'Upsert/merge to silver')."""
 
 from __future__ import annotations
 
@@ -93,38 +93,6 @@ def test_partition_upsert_reads_only_affected_partition(spark, partitioned_table
     assert {r.id: r.v for r in jan.collect()} == {1: 10.0, 2: 99.0}
 
 
-def test_compact_reduces_files(spark, base_table):
-    import glob
-
-    # fragment the table with many small appends
-    for i in range(5):
-        spark.createDataFrame([(100 + i, "2024-09", 1.0)], "id long, month string, v double")\
-            .write.mode("append").format("parquet").saveAsTable(base_table)
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    files_before = len(glob.glob(f"{warehouse}/mxdb.db/t/*.parquet"))
-    n_before = spark.table(base_table).count()
-    mx.compact_table(spark, base_table, target_files=1)
-    files_after = len(glob.glob(f"{warehouse}/mxdb.db/t/*.parquet"))
-    assert spark.table(base_table).count() == n_before
-    assert files_after < files_before
-    assert files_after == 1
-    # values intact
-    assert spark.table(base_table).filter(F.col("id") == 1).first().v == 10.0
-
-
-def test_partition_upsert_detects_cross_partition_key_movement(spark, partitioned_table):
-    # id 1 moved from 2024-01 to a new partition: the guard must refuse
-    # (the stale copy in the old partition would survive)
-    moved = spark.createDataFrame(
-        [(1, 999.0, "2024-03")], "id long, v double, month string"
-    )
-    with pytest.raises(ValueError, match="cross-partition key movement"):
-        mx.partition_upsert(
-            spark, partitioned_table, moved, keys=["id"], partition_cols=["month"],
-            check_key_movement=True,
-        )
-
-
 def _tables(spark, db: str) -> set[str]:
     return {t.name for t in spark.catalog.listTables(db)}
 
@@ -134,8 +102,7 @@ def test_partition_upsert_stages_before_overwrite(spark, partitioned_table):
         [(1, 111.0, "2024-01")], "id long, v double, month string"
     )
     n = mx.partition_upsert(
-        spark, partitioned_table, updates, keys=["id"], partition_cols=["month"],
-        check_key_movement=True,
+        spark, partitioned_table, updates, keys=["id"], partition_cols=["month"]
     )
     assert n == 2  # merged rows of the affected 2024-01 partition
     # the stage table must not survive a successful run
@@ -144,7 +111,37 @@ def test_partition_upsert_stages_before_overwrite(spark, partitioned_table):
     assert got == {1: 111.0, 2: 20.0, 3: 30.0}
 
 
-@pytest.mark.parametrize("rewrite", ["merge", "partition", "compact"])
+def test_partition_upsert_file_batch_plans_a_broadcast_anti_join(
+    spark, partitioned_table, tmp_path, monkeypatch
+):
+    """A batch read from files reports its size, so the key anti-join
+    plans as a broadcast up front, unlike a statistics-less
+    createDataFrame batch whose sort-merge join AQE demotes only at run
+    time."""
+    import re
+
+    plans = []
+    rewrite = mx.rewrite_staged
+
+    def spy(spark_, table, df, dynamic=False):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return rewrite(spark_, table, df, dynamic)
+
+    monkeypatch.setattr(mx, "rewrite_staged", spy)
+    path = str(tmp_path / "batch")
+    spark.createDataFrame(
+        [(2, 99.0, "2024-01"), (5, 50.0, "2024-01")], "id long, v double, month string"
+    ).write.parquet(path)
+    n = mx.partition_upsert(
+        spark, partitioned_table, spark.read.parquet(path), keys=["id"], partition_cols=["month"]
+    )
+    assert n == 3
+    assert len(plans) == 1
+    assert re.search(r"BroadcastHashJoin \[id#\d+L\], \[id#\d+L\], LeftAnti", plans[0]), plans[0]
+    assert "SortMergeJoin" not in plans[0], plans[0]
+
+
+@pytest.mark.parametrize("rewrite", ["merge", "partition"])
 def test_rewrite_drops_its_stage_and_survives_a_failed_insert(
     spark, partitioned_table, monkeypatch, rewrite
 ):
@@ -162,7 +159,6 @@ def test_rewrite_drops_its_stage_and_survives_a_failed_insert(
     run = {
         "merge": lambda: mx.merge_upsert(spark, t, updates, keys=["id"]),
         "partition": lambda: mx.partition_upsert(spark, t, updates, ["id"], ["month"]),
-        "compact": lambda: mx.compact_table(spark, t, partition_cols=["month"]),
     }[rewrite]
     run()
     assert _tables(spark, "mxdb2") == {"t"}
@@ -180,67 +176,6 @@ def test_rewrite_drops_its_stage_and_survives_a_failed_insert(
     assert sorted(map(tuple, spark.table(t).collect())) == before
     assert _tables(spark, "mxdb2") == {"t"}
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
-
-
-def _delta_importable() -> bool:
-    import importlib.util
-
-    return importlib.util.find_spec("delta") is not None
-
-
-def test_merge_upsert_parquet_path_when_no_delta(spark, base_table, monkeypatch):
-    """In a session without the Delta extension the dispatch must select
-    the portable staged path even if delta-spark were importable — and
-    _is_delta_table must answer False without raising on a parquet
-    table."""
-    assert mx._is_delta_table(spark, base_table) is False
-    updates = spark.createDataFrame(
-        [(1, "2024-03", 99.0)], spark.table(base_table).schema
-    )
-    n = mx.merge_upsert(spark, base_table, updates, keys=["id"])
-    assert n == spark.table(base_table).count()
-    assert spark.table(base_table).filter("id = 1").collect()[0].v == 99.0
-
-
-@pytest.mark.skipif(
-    not _delta_importable(), reason="delta-spark not installed in this container"
-)
-def test_merge_upsert_delta_fast_path_matches_parquet(tmp_path_factory):
-    """With delta-spark present: a MERGE INTO through the fast path must
-    leave the same table state as the staged parquet path on the same
-    inputs. (Runs only where the container ships delta-spark; the
-    session here is built separately because Delta needs extension +
-    catalog confs at build time.)"""
-    from delta import configure_spark_with_delta_pip
-    from pyspark.sql import SparkSession
-
-    wh = str(tmp_path_factory.mktemp("delta_wh"))
-    builder = (
-        SparkSession.builder.master("local[4]")
-        .config("spark.sql.extensions", "io.delta.sql.DeltaSparkSessionExtension")
-        .config(
-            "spark.sql.catalog.spark_catalog",
-            "org.apache.spark.sql.delta.catalog.DeltaCatalog",
-        )
-        .config("spark.sql.warehouse.dir", wh)
-    )
-    s = configure_spark_with_delta_pip(builder).getOrCreate()
-    try:
-        rows = [(1, "a", 1.0), (2, "b", 2.0)]
-        upd = [(2, "b", 22.0), (3, "c", 3.0)]
-        schema = "id INT, name STRING, val DOUBLE"
-        s.createDataFrame(rows, schema).write.format("delta").saveAsTable("t_delta")
-        s.createDataFrame(rows, schema).write.format("parquet").saveAsTable("t_parq")
-        updates = s.createDataFrame(upd, schema)
-        assert mx._is_delta_table(s, "t_delta") is True
-        n_d = mx.merge_upsert(s, "t_delta", updates, keys=["id"])
-        n_p = mx.merge_upsert(s, "t_parq", updates, keys=["id"])
-        got_d = sorted(map(tuple, s.table("t_delta").collect()))
-        got_p = sorted(map(tuple, s.table("t_parq").collect()))
-        assert n_d == n_p == 3
-        assert got_d == got_p == [(1, "a", 1.0), (2, "b", 22.0), (3, "c", 3.0)]
-    finally:
-        s.stop()
 
 
 def test_merge_upsert_preserves_partitioning(spark, partitioned_table):

@@ -1,6 +1,6 @@
-"""Multimodal plumbing tests: binary ingestion, JVM metadata/mime sniff,
-Arrow-batched decode (fake + injected decoders), frame sampling, byte
-histogram features."""
+"""Multimodal plumbing tests: JVM metadata/mime sniff over binary-file
+blobs, Arrow-batched decode and resize (fake + injected codecs), frame
+sampling, byte histogram features."""
 
 from __future__ import annotations
 
@@ -15,6 +15,11 @@ JPG = b"\xff\xd8\xff\xe0" + b"\x01" * 100
 WAV = b"RIFF" + b"\x02" * 2048
 
 
+def read_binary_dir(spark, path):
+    """Blob ingestion: (path, modificationTime, length, content)."""
+    return spark.read.format("binaryFile").load(path)
+
+
 @pytest.fixture(scope="module")
 def blob_dir(tmp_path_factory):
     d = tmp_path_factory.mktemp("blobs")
@@ -25,7 +30,7 @@ def blob_dir(tmp_path_factory):
 
 
 def test_binary_ingest_and_metadata(spark, blob_dir):
-    df = mm.with_media_metadata(mm.read_binary_dir(spark, blob_dir))
+    df = mm.with_media_metadata(read_binary_dir(spark, blob_dir))
     rows = {r.path.split("/")[-1]: r for r in df.collect()}
     assert rows["a.png"].media_mime == "image/png"
     assert rows["b.jpg"].media_mime == "image/jpeg"
@@ -37,21 +42,24 @@ def test_binary_ingest_and_metadata(spark, blob_dir):
 
 
 def test_decode_fake_deterministic(spark, blob_dir):
-    df = mm.read_binary_dir(spark, blob_dir)
-    out1 = {r.path: (r.width, r.height, r.n_channels) for r in mm.decode_images(df).collect()}
-    out2 = {r.path: (r.width, r.height, r.n_channels) for r in mm.decode_images(df).collect()}
+    # no image library here: the default codec resolves to the fake pair
+    df = read_binary_dir(spark, blob_dir)
+    out1 = {r.path: (r.width, r.height, r.n_channels) for r in mm.resize_images(df).collect()}
+    out2 = {r.path: (r.width, r.height, r.n_channels) for r in mm.resize_images(df).collect()}
     assert out1 == out2
     assert all(w >= 64 and h >= 64 and c == 3 for w, h, c in out1.values())
 
 
 def test_decode_injected_decoder(spark, blob_dir):
-    df = mm.read_binary_dir(spark, blob_dir)
-    out = mm.decode_images(df, decoder=lambda b: (len(b), 1, 1)).collect()
+    df = read_binary_dir(spark, blob_dir)
+    out = mm.resize_images(
+        df, decoder=lambda b: (len(b), 1, 1), resizer=lambda b, w, h: b
+    ).collect()
     assert {r.width for r in out} == {len(PNG), len(JPG), len(WAV)}
 
 
 def test_frame_sampling_jvm_side(spark, blob_dir):
-    df = mm.read_binary_dir(spark, blob_dir).filter(F.col("path").endswith("c.wav"))
+    df = read_binary_dir(spark, blob_dir).filter(F.col("path").endswith("c.wav"))
     frames = mm.sample_frames(df, frame_bytes=256, every_n=2, max_frames=4).collect()
     # 2052-byte blob, stride 512: frames at offsets 0/512/1024/1536
     assert [r.frame_idx for r in frames] == [0, 1, 2, 3]
@@ -59,7 +67,7 @@ def test_frame_sampling_jvm_side(spark, blob_dir):
 
 
 def test_byte_histogram_features(spark, blob_dir):
-    df = mm.read_binary_dir(spark, blob_dir)
+    df = read_binary_dir(spark, blob_dir)
     out = mm.byte_histogram_features(df, n_bins=64).collect()
     for r in out:
         assert len(r.features) == 64
@@ -118,7 +126,7 @@ def test_resize_images_fake_path(spark, blob_dir):
     machine that has it would fail for environment reasons."""
     import hashlib
 
-    df = mm.read_binary_dir(spark, blob_dir)
+    df = read_binary_dir(spark, blob_dir)
     out = {
         r.path.split("/")[-1]: r
         for r in mm.resize_images(
@@ -148,7 +156,7 @@ def test_resize_images_fake_path(spark, blob_dir):
 
 
 def test_resize_images_injected_resizer(spark, blob_dir):
-    df = mm.read_binary_dir(spark, blob_dir)
+    df = read_binary_dir(spark, blob_dir)
     out = mm.resize_images(
         df,
         decoder=lambda b: (128, 32, 3),
@@ -199,7 +207,7 @@ def test_resize_images_rejects_half_injected_codec(spark, blob_dir):
     with the auto-resolved counterpart pairs incompatible codecs."""
     import pytest
 
-    df = mm.read_binary_dir(spark, blob_dir)
+    df = read_binary_dir(spark, blob_dir)
     with pytest.raises(ValueError, match="BOTH decoder= and resizer="):
         mm.resize_images(df, decoder=lambda b: (1, 1, 1))
     with pytest.raises(ValueError, match="BOTH decoder= and resizer="):
@@ -210,7 +218,7 @@ def test_drop_cols_prunes_return_batches(spark, blob_dir):
     """drop_cols excludes heavy columns from the Python->JVM return
     batches (Catalyst cannot prune through mapInPandas) while every
     kept column is value-identical to the unpruned build."""
-    df = mm.read_binary_dir(spark, blob_dir).select("path", "content")
+    df = read_binary_dir(spark, blob_dir).select("path", "content")
 
     full = mm.byte_histogram_features(df)
     pruned = mm.byte_histogram_features(df, drop_cols=("content",))

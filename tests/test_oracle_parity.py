@@ -29,19 +29,6 @@ def test_rows_only_queries_run(spark, sf_oracle, name):
     assert len(df.columns) > 0
 
 
-def test_array_typed_variant_parity(spark, sf_oracle):
-    """Array-typed collect_list/collect_set output — pytest-only because
-    the external harness cannot hash list cells (CORRECTNESS_r03); the
-    local comparator serializes them."""
-    from grocery_store_sales_forecasting_etl_pipeline_spark.plans.relational4 import (
-        ARRAY_AGG_TYPED_ORACLE,
-        array_agg_arrays_typed,
-    )
-
-    df = array_agg_arrays_typed(spark, sf_oracle)
-    compare(df, ARRAY_AGG_TYPED_ORACLE, sf_oracle, name="array_agg_arrays_typed")
-
-
 def test_every_spark_float_column_is_manifested(spark, sf_smoke):
     """Reverse-direction completeness of the boundary manifest: the
     manifest is DuckDB-derived (DESCRIBE over oracles), so a Spark-side

@@ -9,14 +9,15 @@ import pytest
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.pipeline import gold, orchestrator, silver
 from grocery_store_sales_forecasting_etl_pipeline_spark.sources import catalog
+from tests._catalog import drop_all
 from tests.test_pipeline import _write_fixtures
 
 
 @pytest.fixture()
 def clean_catalog(spark):
-    catalog.drop_all(spark)
+    drop_all(spark)
     yield
-    catalog.drop_all(spark)
+    drop_all(spark)
 
 
 def test_run_all_happy_path(spark, tmp_path, clean_catalog):

@@ -15,6 +15,7 @@ import pyspark.sql.functions as F
 from grocery_store_sales_forecasting_etl_pipeline_spark.operators import quality as Q
 from grocery_store_sales_forecasting_etl_pipeline_spark.pipeline import bronze, gold, silver
 from grocery_store_sales_forecasting_etl_pipeline_spark.sources import catalog
+from tests._catalog import drop_all
 
 STORES = list(range(1, 11))
 CITIES = {s: f"city{s % 4}" for s in STORES}  # functionally dependent on store
@@ -72,13 +73,13 @@ def _write_fixtures(d) -> None:
 def pipeline_run(spark, tmp_path_factory):
     src = tmp_path_factory.mktemp("grocery_csv")
     _write_fixtures(src)
-    catalog.drop_all(spark)
+    drop_all(spark)
     catalog.bootstrap(spark)
     counts = bronze.run(spark, str(src))
     silver.run(spark)
     gold.run(spark, with_forecast=True)
     yield {"bronze_counts": counts}
-    catalog.drop_all(spark)
+    drop_all(spark)
 
 
 def _null_counts(df, cols) -> dict[str, int]:

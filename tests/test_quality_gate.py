@@ -12,15 +12,16 @@ import pytest
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.pipeline import gold, orchestrator, silver
 from grocery_store_sales_forecasting_etl_pipeline_spark.sources import catalog
+from tests._catalog import drop_all
 from tests.test_pipeline import _write_fixtures
 
 
 @pytest.fixture()
 def src(spark, tmp_path):
     _write_fixtures(tmp_path)
-    catalog.drop_all(spark)
+    drop_all(spark)
     yield tmp_path
-    catalog.drop_all(spark)
+    drop_all(spark)
 
 
 def _job_ids(spark) -> set[int]:

@@ -10,11 +10,23 @@ import itertools
 import pyspark.sql.functions as F
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.functions.layout import (
-    morton_col,
-    morton_py,
+    _SPREAD_STEPS,
     morton_sql,
 )
 from grocery_store_sales_forecasting_etl_pipeline_spark.operators.graph import triangles
+
+
+def morton_py(x: int, y: int) -> int:
+    """Pure-Python Morton reference — same masks, same steps as
+    ``morton_sql``."""
+
+    def spread(v: int) -> int:
+        v &= 65535
+        for n, mask in _SPREAD_STEPS:
+            v = (v | (v << n)) & mask
+        return v
+
+    return spread(x) | (spread(y) << 1)
 
 
 def _tris(spark, edges):
@@ -76,7 +88,7 @@ def test_morton_spark_and_duckdb_match_python(spark):
     pts = [(0, 0), (1, 0), (0, 1), (3, 5), (123, 456), (65535, 65535),
            (40000, 17), (65536 + 7, 2)]
     df = spark.createDataFrame(pts, ["x", "y"]).select(
-        "x", "y", morton_col("x", "y").alias("z")
+        "x", "y", F.expr(morton_sql("x", "y", "spark")).alias("z")
     )
     got = {(r.x, r.y): r.z for r in df.collect()}
     con = duckdb.connect()

@@ -10,19 +10,28 @@ from grocery_store_sales_forecasting_etl_pipeline_spark.operators import similar
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans._tables import table as _t
 
 
+def _sign_buckets(emb, n_planes):
+    dim = len(emb.select("embedding").first()[0])
+    return emb.withColumn("bucket", sim.lsh_sign_bucket_col("embedding", n_planes, dim))
+
+
 def test_lsh_buckets_deterministic(spark, sf_smoke):
     emb = _t(spark, sf_smoke, "embeddings")
-    b1 = {r.vec_id: r.bucket for r in sim.lsh_sign_buckets(emb, n_planes=8).collect()}
-    b2 = {r.vec_id: r.bucket for r in sim.lsh_sign_buckets(emb, n_planes=8).collect()}
+    b1 = {r.vec_id: r.bucket for r in _sign_buckets(emb, 8).collect()}
+    b2 = {r.vec_id: r.bucket for r in _sign_buckets(emb, 8).collect()}
     assert b1 == b2
     assert all(0 <= v < 256 for v in b1.values())
 
 
 def test_lsh_candidates_subset_of_exact_pairs(spark, sf_smoke):
     emb = _t(spark, sf_smoke, "embeddings")
+    a = emb.select(F.col("vec_id").alias("id_1"), F.col("embedding").alias("v1"))
+    b = emb.select(F.col("vec_id").alias("id_2"), F.col("embedding").alias("v2"))
     exact = {
         (r.id_1, r.id_2)
-        for r in sim.cosine_dup_pairs(emb, threshold=0.4).collect()
+        for r in a.join(b, F.col("id_1") < F.col("id_2"))
+        .filter(F.round(sim.cosine("v1", "v2"), 6) >= 0.4)
+        .collect()
     }
     approx = {
         (r.id_1, r.id_2)
@@ -133,8 +142,7 @@ def test_lsh_candidates_stable_under_bucket_cap(spark, sf_smoke):
     # the registry query (ann_lsh_candidates) runs with the default cap;
     # its output must match the uncapped kernel on the same buckets
     emb = _t(spark, sf_smoke, "embeddings")
-    buckets = sim.lsh_sign_buckets(emb, n_planes=4)
-    blocked = emb.join(buckets, "vec_id")
+    blocked = _sign_buckets(emb, 4)
     capped = {
         (r.id_1, r.id_2)
         for r in sim.in_block_pairs_gemm(
@@ -150,15 +158,20 @@ def test_lsh_candidates_stable_under_bucket_cap(spark, sf_smoke):
     assert capped == uncapped
 
 
-def test_blocked_gemm_equals_broadcast_gemm(spark, sf_smoke):
-    # the distributed block-triangle path must reproduce the broadcast
-    # kernel exactly (same normalize/GEMM/round float shape), for any
+def test_blocked_gemm_equals_all_pairs_gemm(spark, sf_smoke):
+    # the distributed block-triangle path must reproduce one all-pairs
+    # GEMM exactly (same normalize/GEMM/round float shape), for any
     # block count — including blocks larger than the corpus hash range
+    import numpy as np
+
     emb = _t(spark, sf_smoke, "embeddings")
-    want = {
-        (r.id_1, r.id_2, r.cosine_sim)
-        for r in sim.cosine_dup_pairs_gemm(emb, threshold=0.4, round_to=4).collect()
-    }
+    rows = emb.select("vec_id", "embedding").collect()
+    ids = np.array([r[0] for r in rows], dtype=np.int64)
+    mat = np.array([r[1] for r in rows], dtype=np.float64)
+    mat /= np.linalg.norm(mat, axis=1, keepdims=True)
+    sims = np.round(mat @ mat.T, 4)
+    i, j = np.nonzero((sims >= 0.4) & (ids[:, None] < ids[None, :]))
+    want = set(zip(ids[i].tolist(), ids[j].tolist(), sims[i, j].tolist()))
     for nb in (1, 3, 8):
         got = {
             (r.id_1, r.id_2, r.cosine_sim)
